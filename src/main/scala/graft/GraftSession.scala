@@ -25,19 +25,14 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // parallelismFirst MEASURED this round (r16, honest negative):
-      // flipping to false (the Spark tuning guide's recommendation to
-      // respect the advisory size) was A/B'd back-to-back per query at
-      // sf0.1 — it cut q_pagerank ~30% (its loop is all tiny vertex
-      // exchanges) but cost +15% on reduce-CPU-bound shapes
-      // (q_window_session, q_substr_dup's census) whose small-byte/
-      // high-CPU reduce stages serialize when coalesced to one
-      // partition. Net ≈ wash on the suite; the default (true) keeps
-      // the CPU-parallel behavior. Env knob retained for future A/B —
-      // the right at-scale answer depends on whether reduce stages are
-      // byte-bound (false wins) or CPU-bound (true wins).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+      // parallelismFirst=false (the Spark tuning guide's advice to
+      // respect the advisory size) was A/B'd per query at sf0.1: it cut
+      // q_pagerank ~30% (its loop is all tiny vertex exchanges) but cost
+      // +15% on reduce-CPU-bound shapes (q_window_session, q_substr_dup's
+      // census) whose small-byte/high-CPU reduce stages serialize when
+      // coalesced to one partition. Net ≈ wash, so the CPU-parallel
+      // default stays.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
@@ -47,20 +42,20 @@ object GraftSession {
       // whole-stage codegen. (The 128-column MinHash aggregate that
       // first motivated this is now a single native MinHashAgg.)
       .config("spark.sql.codegen.maxFields", "256")
-      // Codegen class cache (r17): the default 100 entries thrash in
-      // any session that runs more than a handful of distinct queries —
+      // Codegen class cache: the default 100 entries thrash in any
+      // session that runs more than a handful of distinct queries —
       // measured on the bench suite, where q_pagerank's 5-round loop
       // re-COMPILES its per-round codegen units on every run once other
       // queries have cycled the cache (~5.9 s suite-context vs ~4.0 s
       // alone at sf0.1; the subset experiment in OPTIMIZATION_r17.md
-      // reproduces it with six queries). Compiled-class entries are
-      // driver-side and KB–MB each; 5000 is a few hundred MB at worst
-      // on a driver that routinely holds broadcasts of that size, and
-      // a long-lived 100 TB session with many recurring query shapes
-      // wants exactly this. Env knob for re-testing (static conf:
-      // takes effect at session creation).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+      // reproduces it with six queries). Two caveats:
+      //  - this is a STATIC conf: it takes effect only when the session
+      //    is created, and is silently ignored when getOrCreate reuses a
+      //    live session (contextAndArgs in a REPL or test harness);
+      //  - every cached entry pins its compiled classes in the driver's
+      //    metaspace (KB–MB each, a few hundred MB at worst at 5000)
+      //    until evicted.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       // events.parquet has shipped in two shapes across test-data
       // generations: TIMESTAMP(NANOS) (rejected by default — read as
       // Long and convert in Tables.events) and timezone-less

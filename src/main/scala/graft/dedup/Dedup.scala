@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.operators.Fixpoint
 
 /** Document deduplication for training-data pipelines.
   *
@@ -189,63 +190,39 @@ object Dedup {
     * [[minhashClusters]] resolves direct collisions only, this merges
     * CHAINS (A≈B≈C with A,C never sharing a bucket) — connected
     * components, computed the scalable way: iterate over the compact
-    * (id, bucket) edge list (persisted — it is reused every round),
-    * never over text. Each round is two keyed aggregations; rounds
-    * needed = graph diameter (dup chains are short in practice).
+    * (id, bucket) edge list, never over text. Each round is two keyed
+    * aggregations; rounds needed = graph diameter (dup chains are short
+    * in practice). Runs on the graph loops' kernel
+    * (graft.operators.Fixpoint): one pre-sorted edge cache per join key,
+    * a checkpoint per round, nothing left cached afterwards.
     */
   def minhashClustersTransitive(df: DataFrame, idCol: String, textCol: String,
                                 shingleK: Int = 3, numHashes: Int = 128, bands: Int = 16,
                                 maxIters: Int = 5): DataFrame = {
+    require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
     val sigs = signatures(df, idCol, textCol, shingleK, numHashes, bands, withShingleSets = false)
-    val edges = sigs.select(col("id"),
-        posexplode(col("bandhashes")).as(Seq("band", "bh")))
-      .select(col("id"), xxhash64(col("band"), col("bh")).as("bucket"))
-      .persist()
-    // The walk alternates join keys every round (id → bucket), so keep
-    // one pre-partitioned, pre-SORTED cache per key (r16, the Graph
-    // loop lesson): each round's sort-merge joins then neither
-    // re-shuffle nor re-sort the edge list — only the compact
-    // cluster/bucket-min tables move. Sized scale-adaptively by edge
-    // count (r17, Graph.loopPartitions): a bare repartition(col)
-    // inherited spark.sql.shuffle.partitions, re-introducing the fixed
-    // per-(task × round) shuffle-file overhead the Graph loops fixed.
-    val numParts = graft.operators.Graph.loopPartitions(edges.count())
-    val edgesById = edges.repartition(numParts, col("id"))
-      .sortWithinPartitions(col("id")).persist()
-    val edgesByBucket = edges.repartition(numParts, col("bucket"))
-      .sortWithinPartitions(col("bucket")).persist()
-    // the raw edge cache is only needed while the two per-key caches
-    // build — force them, then release it (3× → 2× cached edge memory
-    // for the loop's whole duration, guide §5)
-    edgesById.count(); edgesByBucket.count()
-    edges.unpersist()
-    try {
-      var clusters = edgesById.select(col("id")).distinct().withColumn("cluster", col("id"))
-      var prevPersisted: Option[DataFrame] = None
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIters) {
+    Fixpoint.withCaches { c =>
+      val edges = c.base(sigs.select(col("id"),
+          posexplode(col("bandhashes")).as(Seq("band", "bh")))
+        .select(col("id"), xxhash64(col("band"), col("bh")).as("bucket")))
+      // the walk alternates join keys every round (id → bucket)
+      val (edgesById, _) = c.sorted(edges, "id")
+      val (edgesByBucket, _) = c.sorted(edges, "bucket")
+      edges.unpersist()
+      val init = edgesById.select(col("id")).distinct().withColumn("cluster", col("id"))
+      val (clusters, _) = Fixpoint.iterate(init, maxIters,
+          (_, now) => now.getLong(0) == 0L) { (clusters, _) =>
         val bucketMin = edgesById.join(clusters, Seq("id"))
-          .groupBy(col("bucket")).agg(min(col("cluster")).as("bmin"))
-        val next = edgesByBucket.join(bucketMin, Seq("bucket"))
-          .groupBy(col("id")).agg(min(col("bmin")).as("cluster"))
-          .persist()
-        val changed = next.join(clusters.withColumnRenamed("cluster", "prev"), Seq("id"))
-          .filter(col("cluster") =!= col("prev")).limit(1).count()
-        // `changed` materialized `next`, so the previous round's cache
-        // (and only it — the final frame stays cached for the caller)
-        // can be dropped without recomputation.
-        prevPersisted.foreach(_.unpersist())
-        prevPersisted = Some(next)
-        clusters = next
-        converged = changed == 0L
-        iter += 1
+          .groupBy(col("bucket")).agg(min(col("cluster")).as("bmin"), max(col("cluster")).as("bmax"))
+        // a doc's new cluster is the min over its buckets, and its own
+        // cluster lies in each of them: the round changes nothing
+        // exactly when every doc's buckets are all one cluster (min == max)
+        Fixpoint.observe(edgesByBucket.join(bucketMin, Seq("bucket"))
+            .groupBy(col("id")).agg(min(col("bmin")).as("cluster"), max(col("bmax")).as("__bmax")),
+            count(when(col("cluster") =!= col("__bmax"), 1)))
+          .select(col("id"), col("cluster"))
       }
-      // Result keeps the last iteration cached; callers running many
-      // corpora through this in one session should unpersist it.
       clusters.withColumn("keep", col("id") === col("cluster"))
-    } finally {
-      edges.unpersist(); edgesById.unpersist(); edgesByBucket.unpersist()
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** General graph connectivity over edge lists — the public form of the
@@ -9,104 +9,40 @@ import org.apache.spark.sql.functions._
   * vertex–bucket bipartite graph; this operator takes an arbitrary
   * undirected edge list). scio pipelines hand-roll exactly this loop
   * from joins + reduceByKey (reference: scio-core
-  * PairSCollectionFunctions.scala building blocks).
+  * PairSCollectionFunctions.scala building blocks). Every loop here runs
+  * on the [[Fixpoint]] kernel: loop-invariant caches built once, one
+  * checkpoint per round, per-round scalars observed on the round's own
+  * tasks.
   */
 object Graph {
 
-  /** Scale-adaptive partition count for the iterative loops' cached
-    * edge tables (r16): partitions sized by EDGE COUNT (~2M edge rows
-    * ≈ tens of MB — the optimization guide §2.2 / §6 partition-size
-    * band) instead of inheriting `spark.sql.shuffle.partitions`. On a
-    * small graph the constant-partition shape paid a fixed
-    * shuffle-file cost per (map task × round) — thread-sampled at
-    * sf0.1 as the DOMINANT executor cost of the pageRank loop
-    * (`copyFileStreamNIO`/`unmap` in ShuffleWriteProcessor.write, 32
-    * tasks of ~120 KB each per round); on a huge graph the constant
-    * shape under-splits. Row count is the robust proxy here: edge rows
-    * are 2-3 longs wide everywhere in this file.
+  /** Both directions of every non-null edge, deduplicated, as
+    * (`__v`, `__n`); self-loops kept only if `selfLoops`.
     */
-  private val LoopRowsPerPartition = 2L * 1000 * 1000
-
-  /** Never split below this many rows per partition when applying the
-    * parallelism floor: the r16 pathology was 32 × ~120 KB shuffle
-    * files per round; 64k edge rows ≈ 1.5 MB per file keeps the
-    * per-file overhead amortized while still parallelizing.
-    */
-  private val MinLoopRowsPerPartition = 64L * 1024
-
-  // private[graft] (r17): Dedup.minhashClustersTransitive's per-key
-  // loop caches need the same scale-adaptive sizing (they previously
-  // inherited spark.sql.shuffle.partitions — the exact shuffle-file
-  // pathology this helper fixed in the Graph loops).
-  //
-  // r17 shape: size-based (~2M rows/partition) with a PARALLELISM
-  // floor. Pure size-based sizing gave ONE partition to any graph
-  // under 2M edges, which serialized every per-round join probe and
-  // cache build on a single core no matter how many were idle —
-  // profiled at sf0.1 as ~0.5 s/iteration single-task stages scanning
-  // the whole 600k-row cache. The floor uses up to defaultParallelism
-  // partitions (cluster-adaptive, not a local constant), never splits
-  // below [[MinLoopRowsPerPartition]], and washes out at scale where
-  // the size term dominates.
-  private[graft] def loopPartitions(rows: Long): Int = {
-    val bySize = (rows + LoopRowsPerPartition - 1) / LoopRowsPerPartition
-    val session = org.apache.spark.sql.SparkSession.active
-    // Floor at max(defaultParallelism, shuffle.partitions), not just
-    // cores: AQE's EnsureRequirements targets the session shuffle
-    // count when aligning a co-partitioned join, and it REWRITES a
-    // lower user-specified count rather than respecting it (verified
-    // empirically on 4.1: a repartition(1) feeding a SMJ against a
-    // conf=4 aggregate was rewritten to 4 and the CACHED side
-    // re-shuffled). Matching the floor to the session count keeps the
-    // loop caches and the per-round aggregates co-partitioned by
-    // construction wherever the 64k-row quantum allows.
-    val par = math.max(
-      session.sparkContext.defaultParallelism.toLong,
-      session.conf.get("spark.sql.shuffle.partitions", "200").toLong)
-    val byPar = math.min(par, rows / MinLoopRowsPerPartition)
-    math.max(1L, math.min(math.max(bySize, byPar), 1L << 20)).toInt
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String,
+                         selfLoops: Boolean): DataFrame = {
+    val e0 = edges.select(col(srcCol).as("__v"), col(dstCol).as("__n"))
+      .filter(col("__v").isNotNull && col("__n").isNotNull)
+    val e = if (selfLoops) e0 else e0.filter(col("__v") =!= col("__n"))
+    e.union(e.select(col("__n").as("__v"), col("__v").as("__n"))).distinct()
   }
 
-  /** Iterations per eager localCheckpoint inside the pageRank/PPR
-    * loops. DEFAULT 1 — checkpoint every round, the original shape —
-    * after an A/B this round (r17) showed batching is a measured LOSS:
-    * each un-checkpointed round's ranks plan is referenced TWICE by
-    * the next round (contribs + dangling), and while ReuseExchange
-    * dedupes the shuffle subtrees, the vertex-sized compute above them
-    * re-executes per reference — k=3 ran q_pagerank at 9–16 s vs
-    * 4.0–4.6 s for k=1 at sf0.1/local[32] (same session, interleaved
-    * reps). The driver round-trips the batching was meant to remove
-    * turned out to be secondary to the single-partition loop caches
-    * [[loopPartitions]] now fixes. Env knob retained for re-testing on
-    * cluster topologies where job-submission latency dominates.
+  /** The undirected adjacency as a loop cache on `__n`: each round then
+    * exchanges only the vertex-sized state table, never the edge list.
     */
-  private val CheckpointEvery =
-    sys.env.getOrElse("SPARK_GRAFT_CKPT_EVERY", "1").toInt
+  private def adjacency(c: Fixpoint.Caches, edges: DataFrame, srcCol: String, dstCol: String,
+                        selfLoops: Boolean): DataFrame = {
+    val raw = c.base(undirected(edges, srcCol, dstCol, selfLoops))
+    val (und, _) = c.sorted(raw, "__n")
+    raw.unpersist()
+    und
+  }
 
-  /** Block (bounded) for an [[Observation]] attached to an eager
-    * localCheckpoint. The iterative loops fold their per-round scalars
-    * — pageRank's dangling mass, connectedComponents' convergence
-    * count, kCore's surviving-row count — into the checkpoint's own
-    * materialization via `observe()` (r17): each was previously a
-    * SEPARATE action re-scanning the table the checkpoint had just
-    * materialized (a full extra pass per round at scale, plus one more
-    * driver round-trip + AQE plan at any scale — guide §1.2 step 1).
-    * The metric rides the same tasks, so the extra pass and the extra
-    * job disappear outright. Awaits the observation's future with a
-    * deadline instead of the unbounded `Observation.get` so a
-    * listener-bus regression fails loudly instead of hanging a
-    * 20-iteration loop mid-flight.
-    */
-  private def awaitObserved(obs: Observation): org.apache.spark.sql.Row =
-    try {
-      scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(60, "s"))
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        throw new IllegalStateException(
-          "observed loop metric did not arrive within 60s of an eager localCheckpoint — " +
-            "ExecutionListenerBus regression? (the metric rides the checkpoint's own action)")
-    }
+  /** Distinct non-null directed edges as (`__s`, `__d`). */
+  private def directed(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
+      .filter(col("__s").isNotNull && col("__d").isNotNull)
+      .distinct()
 
   /** Connected components by iterative min-label propagation: each
     * vertex's component is the minimum vertex id it can reach —
@@ -117,76 +53,34 @@ object Graph {
     * stabilized (components may still be split; the label is then the
     * min within maxIters hops, still deterministic).
     *
-    * Scale shape: each iteration is one keyed join + a partial-agg
-    * min, with the convergence count observed during the round's own
-    * checkpoint — no collect, no driver-side frontier, no separate
-    * convergence pass. Iterations needed =
-    * graph diameter; `maxIters` bounds cost on adversarial chains
-    * (the same contract as the dedup cluster walk). Each iteration
-    * `localCheckpoint`s its labels: persist alone is NOT enough here —
-    * it caches execution but the LOGICAL plan still nests, and by a
-    * few dozen iterations plan stringification alone OOMs the driver
-    * (found by GraphSpec's 25-iteration chain). Checkpointing
-    * truncates lineage so the plan stays one iteration deep no matter
-    * how many rounds run.
+    * Scale shape: each iteration is two keyed joins (adjacency ⋈ labels,
+    * then labels ⋈ neighbor minimum) + a partial-agg min, with the
+    * convergence count observed during the round's own checkpoint — no
+    * collect, no driver-side frontier, no separate convergence pass.
+    * Iterations needed = graph diameter; `maxIters` bounds cost on
+    * adversarial chains (the same contract as the dedup cluster walk).
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIters: Int = 10): DataFrame = {
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    // adjacency cached hash-partitioned by the loop's join key: each
-    // round then exchanges only the vertex-sized label table, never
-    // the edge list (the cached partitioning satisfies the join)
-    val dedup = edges.select(col(srcCol).as("__v"), col(dstCol).as("__n"))
-      .union(edges.select(col(dstCol).as("__v"), col(srcCol).as("__n")))
-      .filter(col("__v").isNotNull && col("__n").isNotNull)
-      .distinct()
-      .persist()
-    // scale-adaptive loop partitioning + pre-sorted loop cache (r16,
-    // see pageRank): partitions sized by edge count, sorted so each
-    // round's sort-merge neighbor join neither re-shuffles NOR
-    // re-sorts the edge list
-    val numParts = loopPartitions(dedup.count())
-    val und = dedup
-      .repartition(numParts, col("__n"))
-      .sortWithinPartitions(col("__n"))
-      .persist()
-    // dedup is only needed until und materializes; holding both pins
-    // 2× the edge list in cache for the whole loop (guide §5). The
-    // count forces und, then the scratch cache releases immediately
-    // (the finally-block unpersist stays for the failure path).
-    und.count()
-    dedup.unpersist()
-    try {
-      var labels = und.select(col("__v")).distinct()
-        .withColumn("component", col("__v"))
-        .localCheckpoint(true)
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIters) {
+    Fixpoint.withCaches { c =>
+      val und = adjacency(c, edges, srcCol, dstCol, selfLoops = true)
+      val init = und.select(col("__v")).distinct().withColumn("component", col("__v"))
+      val (labels, converged) = Fixpoint.iterate(init, maxIters,
+          (_, now) => now.getAs[Long](0) == 0L) { (labels, _) =>
         val nbrMin = und
           .join(labels.select(col("__v").as("__n"), col("component").as("__nc")), Seq("__n"))
           .groupBy(col("__v")).agg(min(col("__nc")).as("__nbr"))
-        // convergence check folded into the update pass (r17): a label
-        // changes iff a strictly smaller neighbor min arrived
-        // (`__nbr < component`; null __nbr → no neighbors → unchanged),
-        // observed WHILE the checkpoint materializes — the previous
-        // shape re-joined next against labels and counted in a second
-        // full-table job every round (guide §1.2: don't recompute what
-        // the pass already knows).
-        val obs = Observation()
-        val next = labels.join(nbrMin, Seq("__v"), "left")
-          .observe(obs,
+        // a label changes iff a strictly smaller neighbor min arrived
+        // (null __nbr → no neighbors → unchanged)
+        Fixpoint.observe(labels.join(nbrMin, Seq("__v"), "left"),
             sum(when(col("__nbr") < col("component"), 1L).otherwise(0L)).as("__changed"))
           .select(col("__v"),
             least(col("component"), coalesce(col("__nbr"), col("component"))).as("component"))
-          .localCheckpoint(true)
-        labels = next
-        converged = awaitObserved(obs).getAs[Long]("__changed") == 0L
-        iter += 1
       }
       labels.select(col("__v").as("vertex"), col("component"),
         lit(converged).as("converged"))
-    } finally { und.unpersist(); dedup.unpersist() }
+    }
   }
 
   /** k-core: the maximal subgraph in which every vertex has degree
@@ -197,49 +91,26 @@ object Graph {
     * independent) fixpoint. Returns (vertex, core_degree) for the
     * surviving vertices.
     *
-    * Scale shape mirrors [[connectedComponents]]: each round is one
-    * degree aggregation (map-side partial) + two semi joins, with
-    * `localCheckpoint` per round for the same lineage-OOM reason;
-    * rounds needed is bounded by the peeling depth (small in
-    * practice), `maxIters` bounds adversarial chains and a truncated
-    * run errs toward KEEPING vertices (supersets of the core), never
-    * dropping core members.
+    * Scale shape: each round is one degree aggregation (map-side
+    * partial) + two semi joins, the surviving-edge count observed
+    * during the round's checkpoint; rounds needed is bounded by the
+    * peeling depth (small in practice), `maxIters` bounds adversarial
+    * chains and a truncated run errs toward KEEPING vertices (supersets
+    * of the core), never dropping core members.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxIters: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
-    val und0 = edges
-      .select(col(srcCol).as("__v"), col(dstCol).as("__n"))
-      .filter(col("__v").isNotNull && col("__n").isNotNull && col("__v") =!= col("__n"))
-    val obs0 = Observation()
-    var und = und0.union(und0.select(col("__n").as("__v"), col("__v").as("__n")))
-      .distinct()
-      .observe(obs0, count(lit(1)).as("__n"))
-      .localCheckpoint(true)
-    // surviving-edge count observed DURING each checkpoint (r17): the
-    // previous shape ran TWO separate count jobs per round — und.count()
-    // re-counted the table the previous round had already counted, and
-    // next.count() re-scanned the checkpoint that had just materialized.
-    // Both ride the checkpoint's own tasks now; the count is carried
-    // across rounds (identical arithmetic, 2 fewer jobs per round).
-    var before = awaitObserved(obs0).getAs[Long]("__n")
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val deg = und.groupBy(col("__v")).agg(count(lit(1)).as("__d"))
-      val keep = deg.filter(col("__d") >= k).select(col("__v"))
-      val obs = Observation()
-      val next = und
+    val edgeCount = count(lit(1)).as("__n")
+    val init = Fixpoint.observe(undirected(edges, srcCol, dstCol, selfLoops = false), edgeCount)
+    val (und, _) = Fixpoint.iterate(init, maxIters,
+        (before, after) => before.getLong(0) == after.getLong(0)) { (und, _) =>
+      val keep = und.groupBy(col("__v")).agg(count(lit(1)).as("__d"))
+        .filter(col("__d") >= k).select(col("__v"))
+      Fixpoint.observe(und
         .join(keep, Seq("__v"), "left_semi")
-        .join(keep.select(col("__v").as("__n")), Seq("__n"), "left_semi")
-        .observe(obs, count(lit(1)).as("__n"))
-        .localCheckpoint(true)
-      val after = awaitObserved(obs).getAs[Long]("__n")
-      und = next
-      converged = before == after
-      before = after
-      iter += 1
+        .join(keep.select(col("__v").as("__n")), Seq("__n"), "left_semi"), edgeCount)
     }
     und.groupBy(col("__v").as("vertex")).agg(count(lit(1)).as("core_degree"))
       .filter(col("core_degree") >= k)
@@ -256,43 +127,23 @@ object Graph {
     *
     * Scale shape: per round one keyed join (labels → neighbors), a
     * (vertex, label) partial-agg count, and one argmax fold —
-    * lexicographic struct max, no window; per-round localCheckpoint
-    * (same lineage lesson as [[connectedComponents]]).
+    * lexicographic struct max, no window.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int = 4): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val und0 = edges.select(col(srcCol).as("__v"), col(dstCol).as("__n"))
-      .filter(col("__v").isNotNull && col("__n").isNotNull && col("__v") =!= col("__n"))
-    val dedup = und0.union(und0.select(col("__n").as("__v"), col("__v").as("__n")))
-      .distinct()
-      .persist()
-    // same scale-adaptive loop partitioning + sort-free loop cache as
-    // connectedComponents
-    val numParts = loopPartitions(dedup.count())
-    val und = dedup
-      .repartition(numParts, col("__n"))
-      .sortWithinPartitions(col("__n"))
-      .persist()
-    // release the scratch union-distinct cache as soon as the loop
-    // cache is materialized — see connectedComponents (guide §5)
-    und.count()
-    dedup.unpersist()
-    try {
-      var labels = und.select(col("__v")).distinct()
-        .withColumn("__l", col("__v"))
-        .localCheckpoint(true)
-      (1 to iters).foreach { _ =>
-        labels = und
+    Fixpoint.withCaches { c =>
+      val und = adjacency(c, edges, srcCol, dstCol, selfLoops = false)
+      val init = und.select(col("__v")).distinct().withColumn("__l", col("__v"))
+      Fixpoint.iterate(init, iters) { (labels, _) =>
+        und
           .join(labels.select(col("__v").as("__n"), col("__l")), Seq("__n"))
           .groupBy(col("__v"), col("__l")).agg(count(lit(1)).as("__c"))
           .groupBy(col("__v"))
           .agg(max(struct(col("__c").as("c"), (-col("__l")).as("negl"))).as("__m"))
           .select(col("__v"), (-col("__m.negl")).as("__l"))
-          .localCheckpoint(true)
-      }
-      labels.select(col("__v").as("vertex"), col("__l").as("community"))
-    } finally { und.unpersist(); dedup.unpersist(); () }
+      }._1.select(col("__v").as("vertex"), col("__l").as("community"))
+    }
   }
 
   /** PageRank over a DIRECTED edge list (Brin & Page 1998; the other
@@ -300,190 +151,25 @@ object Graph {
     * damping `d`: rank = (1−d)/N + d·(Σ_in rank/outdeg + dangling/N),
     * dangling mass redistributed uniformly so ranks sum to 1 every
     * iteration. Returns (vertex, rank) after `iters` rounds.
-    *
-    * Scale shape mirrors [[connectedComponents]]: per iteration one
-    * keyed join (ranks → out-edges, contributions partial-aggregate
-    * by destination), the dangling mass observed during the round's
-    * own checkpoint and re-entering as a literal; ranks
-    * `localCheckpoint` each round (same lineage-OOM lesson).
     * Vertices = edge endpoints; isolated vertices that appear in the
-    * frame still receive the teleport share.
+    * frame still receive the teleport share. Scale shape: see
+    * [[powerIteration]].
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 10, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-      .filter(col("__s").isNotNull && col("__d").isNotNull)
-      .distinct()
-      .persist()
-    // Vertex set AND out-degree in ONE exploded partial-aggregation
-    // (r16): each edge contributes its src with weight 1 (an out-edge)
-    // and its dst with weight 0, so the (vertex, sum) agg yields every
-    // endpoint with its out-edge count — 0 becomes the dangling NULL.
-    // Replaces the previous verts-union-distinct + outDeg-groupBy +
-    // left-join + repartition chain: one exchange instead of three
-    // plus a join, with identical row values (degree = count of
-    // distinct out-edges; dangling = never-a-source). The agg output
-    // is already hash-partitioned by __v; sortWithinPartitions makes
-    // the cached table SORT-FREE on the loop side: every round's rank
-    // rebuild is a sort-merge join against this table and would
-    // otherwise re-sort it per iteration (the SMB lesson applied to an
-    // in-memory loop invariant).
-    // one cache-local pass; also sizes the loop partitioning below
-    val edgeCount = e.count()
-    val numParts = loopPartitions(edgeCount)
-    val vertsDeg = e
-      .select(inline(array(
-        struct(col("__s").as("__v"), lit(1L).as("__o")),
-        struct(col("__d").as("__v"), lit(0L).as("__o")))))
-      .groupBy(col("__v")).agg(sum(col("__o")).as("__oc"))
-      .select(col("__v"), when(col("__oc") > 0, col("__oc")).as("__deg"))
-      .repartition(numParts, col("__v"))
-      .sortWithinPartitions(col("__v"))
-      .persist()
-    // out-degree rows are a filter of the cached vertex table — no
-    // separate aggregation pass
-    val outDeg = vertsDeg.filter(col("__deg").isNotNull)
-      .select(col("__v").as("__s"), col("__deg"))
-    // out-degree is loop-invariant: fold it into the edge list ONCE and
-    // pre-partition the result by source at the scale-adaptive count.
-    // The cached partitioning is reused by every iteration's join, so
-    // the per-round exchange is the VERTEX-sized ranks table only —
-    // the edge table never re-shuffles inside the loop (same rank/deg
-    // division as before, arithmetic unchanged). Sorted within
-    // partitions for the same reason as vertsDeg: the per-round
-    // contribs join is a sort-merge join on __s whenever ranks is too
-    // big to broadcast, and an unsorted cache would re-sort ALL edge
-    // rows every iteration.
-    val eDeg = e.join(outDeg, Seq("__s")).repartition(numParts, col("__s"))
-      .sortWithinPartitions(col("__s"))
-      .persist()
-    try {
-      val n = vertsDeg.count().toDouble
-      // vertsDeg and eDeg are both materialized now (n forced vertsDeg;
-      // the count below forces eDeg) — the raw edge cache can release
-      // instead of tripling the loop's cached edge footprint (§5)
-      eDeg.count()
-      e.unpersist()
-      // Dangling mass (rank sum of no-out-edge vertices) observed
-      // DURING each round's checkpoint (r17): the previous shape
-      // re-scanned the just-checkpointed ranks with a separate
-      // agg-into-broadcast subtree every round — a full extra pass
-      // over the vertex table per iteration at scale, and one more
-      // broadcast job + AQE plan per iteration at any scale. The sum
-      // is a frame-level scalar of the frame being materialized
-      // anyway, so it rides the checkpoint's tasks and enters the
-      // next round as a LITERAL (same `__dm / n` arithmetic; the
-      // crossJoin(broadcast(…)) disappears from the loop plan).
-      val dmMetric = coalesce(sum(when(col("__deg").isNull, col("rank"))), lit(0.0)).as("__dm")
-      val obs0 = Observation()
-      var ranks = vertsDeg.withColumn("rank", lit(1.0 / n))
-        .observe(obs0, dmMetric).localCheckpoint(true)
-      // None between batched checkpoints (SPARK_GRAFT_CKPT_EVERY > 1):
-      // an un-checkpointed round has no materialization to observe, so
-      // those rounds keep the explicit agg+broadcast subtree.
-      var danglingMass: Option[Double] = Some(awaitObserved(obs0).getAs[Double]("__dm"))
-      (1 to iters).foreach { i =>
-        val contribs = eDeg
-          .join(ranks.select(col("__v").as("__s"), col("rank")), Seq("__s"))
-          .select(col("__d").as("__v"), (col("rank") / col("__deg")).as("__c"))
-          .groupBy(col("__v")).agg(sum(col("__c")).as("__in"))
-        val joined = vertsDeg.join(contribs, Seq("__v"), "left")
-        val withDm = danglingMass match {
-          case Some(dm) => joined.withColumn("__dm", lit(dm))
-          case None => joined.crossJoin(broadcast(ranks.filter(col("__deg").isNull)
-            .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dm"))))
-        }
-        val next = withDm
-          .select(col("__v"), col("__deg"),
-            (lit((1.0 - damping) / n) +
-              lit(damping) * (coalesce(col("__in"), lit(0.0)) + col("__dm") / n))
-              .as("rank"))
-        // checkpoint every CheckpointEvery rounds (and ALWAYS on the
-        // last: the scratch caches unpersist in finally, so the
-        // returned frame must not reference them lazily) — same
-        // arithmetic per round, k× fewer driver round-trips
-        if (i % CheckpointEvery == 0 || i == iters) {
-          val obs = Observation()
-          val observed = next.observe(obs, dmMetric)
-          ranks = observed.localCheckpoint(true)
-          danglingMass = Some(awaitObserved(obs).getAs[Double]("__dm"))
-          // plan-evidence hook (dev only): dump the round-1 loop-body
-          // plan AFTER execution so AQE's final stages are visible —
-          // how plans/r*/q_pagerank_iteration_*.txt are produced
-          if (i == 1 && sys.env.contains("SPARK_GRAFT_GRAPH_EXPLAIN"))
-            System.err.println("[graph] pageRank round-1 executed plan:\n" +
-              observed.queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode))
-        } else { ranks = next; danglingMass = None }
-      }
-      ranks.select(col("__v").as("vertex"), col("rank"))
-    } finally {
-      // ranks is eagerly checkpointed each round, so every scratch
-      // frame can release — on failure paths too, or repeated failed
-      // runs would pin blocks for the session's lifetime (outDeg is a
-      // filter VIEW of the cached vertsDeg now, nothing to release)
-      e.unpersist(); eDeg.unpersist()
-      vertsDeg.unpersist(); ()
+    powerIteration(edges, srcCol, dstCol, iters) { (_, n) =>
+      (lit(1.0 / n),
+        lit((1.0 - damping) / n) +
+          lit(damping) * (coalesce(col("__in"), lit(0.0)) + col("__dm") / n))
     }
-  }
-
-  /** Single-source shortest paths (hop counts) from a set of landmark
-    * vertices, bounded at `maxHops` — the GraphFrames-style BFS
-    * distance table behind reachability/centrality features. Pure
-    * integer min-relaxation: dist_{i+1}(v) = min(dist_i(v),
-    * 1 + min over in-neighbors dist_i(u)) on the undirected graph, so
-    * results are bit-exact everywhere. Returns (vertex, landmark,
-    * distance) for every vertex within `maxHops` of a landmark.
-    *
-    * Scale shape: each round one keyed join + (vertex, landmark)
-    * partial-agg min + localCheckpoint; the frontier table is bounded
-    * by vertices × landmarks (keep the landmark set small, as the
-    * feature use cases do).
-    */
-  def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
-                    landmarks: Seq[Long], maxHops: Int = 6): DataFrame = {
-    require(landmarks.nonEmpty, "shortestPaths needs at least one landmark")
-    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val und0 = edges.select(col(srcCol).as("__v"), col(dstCol).as("__n"))
-      .filter(col("__v").isNotNull && col("__n").isNotNull && col("__v") =!= col("__n"))
-    val dedup = und0.union(und0.select(col("__n").as("__v"), col("__v").as("__n")))
-      .distinct()
-      .persist()
-    // scale-adaptive loop partitioning + sort-free loop cache, see
-    // connectedComponents/pageRank
-    val numParts = loopPartitions(dedup.count())
-    val und = dedup
-      .repartition(numParts, col("__n"))
-      .sortWithinPartitions(col("__n"))
-      .persist()
-    // release the scratch union-distinct cache as soon as the loop
-    // cache is materialized — see connectedComponents (guide §5)
-    und.count()
-    dedup.unpersist()
-    try {
-      var dist = und.select(col("__v")).distinct()
-        .filter(col("__v").isin(landmarks: _*))
-        .select(col("__v"), col("__v").as("__lm"), lit(0L).as("__d"))
-        .localCheckpoint(true)
-      (1 to maxHops).foreach { _ =>
-        val relaxed = und
-          .join(dist.select(col("__v").as("__n"), col("__lm"), col("__d")), Seq("__n"))
-          .select(col("__v"), col("__lm"), (col("__d") + 1L).as("__d"))
-        dist = dist.unionByName(relaxed)
-          .groupBy(col("__v"), col("__lm")).agg(min(col("__d")).as("__d"))
-          .localCheckpoint(true)
-      }
-      dist.select(col("__v").as("vertex"), col("__lm").as("landmark"),
-        col("__d").as("distance"))
-    } finally { und.unpersist(); dedup.unpersist(); () }
   }
 
   /** PERSONALIZED PageRank: teleport (and dangling mass) return to a
     * uniform distribution over `seeds` instead of all vertices — the
     * related-entities / recommendation variant (ranks measure
-    * proximity to the seed set). Same power-iteration shape as
+    * proximity to the seed set). Same power iteration as
     * [[pageRank]]; ranks still sum to 1 every round.
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
@@ -492,31 +178,7 @@ object Graph {
     require(seeds.nonEmpty, "personalizedPageRank needs at least one seed")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-      .filter(col("__s").isNotNull && col("__d").isNotNull)
-      .distinct()
-      .persist()
-    // same fused vertex+degree aggregation and pre-sorted loop caches
-    // as [[pageRank]] (one exchange builds the vertex table with its
-    // out-degree; the loop's sort-merge joins never re-sort the
-    // invariant sides)
-    val edgeCount = e.count()
-    val numParts = loopPartitions(edgeCount)
-    val vertsDeg = e
-      .select(inline(array(
-        struct(col("__s").as("__v"), lit(1L).as("__o")),
-        struct(col("__d").as("__v"), lit(0L).as("__o")))))
-      .groupBy(col("__v")).agg(sum(col("__o")).as("__oc"))
-      .select(col("__v"), when(col("__oc") > 0, col("__oc")).as("__deg"))
-      .repartition(numParts, col("__v"))
-      .sortWithinPartitions(col("__v"))
-      .persist()
-    val outDeg = vertsDeg.filter(col("__deg").isNotNull)
-      .select(col("__v").as("__s"), col("__deg"))
-    val eDeg = e.join(outDeg, Seq("__s")).repartition(numParts, col("__s"))
-      .sortWithinPartitions(col("__s"))
-      .persist()
-    try {
+    powerIteration(edges, srcCol, dstCol, iters) { (vertsDeg, _) =>
       // Fail loudly on seeds absent from the vertex set: an absent seed
       // receives no mass, so every round would sum to < 1 and proximity
       // scores silently skew (bounded driver read: ≤ seeds.size rows).
@@ -530,44 +192,83 @@ object Graph {
           " — drop stale ids or fix the seed list")
       val seedMass = when(col("__v").isin(seeds: _*), lit(1.0 / seeds.size))
         .otherwise(lit(0.0))
-      // both loop caches forced (the seed check above forced vertsDeg);
-      // release the raw edge cache before the loop (§5, see pageRank)
-      eDeg.count()
+      (seedMass,
+        (lit(1.0 - damping) + lit(damping) * col("__dm")) * seedMass +
+          lit(damping) * coalesce(col("__in"), lit(0.0)))
+    }
+  }
+
+  /** The power iteration [[pageRank]] and [[personalizedPageRank]]
+    * share. `ranks(vertsDeg, n)` gives the initial rank and the
+    * per-round rank over `__in` (Σ_in rank/outdeg) and `__dm` (the
+    * previous round's dangling mass).
+    *
+    * Scale shape: the vertex table carries its out-degree from ONE
+    * exploded partial aggregation (each edge contributes its src with
+    * weight 1 and its dst with weight 0; 0 becomes the dangling NULL),
+    * and out-degree is folded into the edge list once, so each round
+    * exchanges only the vertex-sized ranks table. The dangling mass
+    * (rank sum of no-out-edge vertices) is observed during each round's
+    * checkpoint and enters the next round as a literal.
+    */
+  private def powerIteration(edges: DataFrame, srcCol: String, dstCol: String, iters: Int)
+                            (ranks: (DataFrame, Double) => (Column, Column)): DataFrame =
+    Fixpoint.withCaches { c =>
+      val e = c.base(directed(edges, srcCol, dstCol))
+      val (vertsDeg, n) = c.sorted(e
+        .select(inline(array(
+          struct(col("__s").as("__v"), lit(1L).as("__o")),
+          struct(col("__d").as("__v"), lit(0L).as("__o")))))
+        .groupBy(col("__v")).agg(sum(col("__o")).as("__oc"))
+        .select(col("__v"), when(col("__oc") > 0, col("__oc")).as("__deg")), "__v")
+      val outDeg = vertsDeg.filter(col("__deg").isNotNull)
+        .select(col("__v").as("__s"), col("__deg"))
+      val (eDeg, _) = c.sorted(e.join(outDeg, Seq("__s")), "__s")
       e.unpersist()
-      // dangling mass observed during each round's checkpoint — same
-      // fold as [[pageRank]] (the separate agg+broadcast pass per
-      // round disappears; un-checkpointed batched rounds keep it)
+      val (init, rank) = ranks(vertsDeg, n.toDouble)
       val dmMetric = coalesce(sum(when(col("__deg").isNull, col("rank"))), lit(0.0)).as("__dm")
-      val obs0 = Observation()
-      var ranks = vertsDeg.withColumn("rank", seedMass)
-        .observe(obs0, dmMetric).localCheckpoint(true)
-      var danglingMass: Option[Double] = Some(awaitObserved(obs0).getAs[Double]("__dm"))
-      (1 to iters).foreach { i =>
+      Fixpoint.iterate(Fixpoint.observe(vertsDeg.withColumn("rank", init), dmMetric),
+          iters) { (ranks, dm) =>
         val contribs = eDeg
           .join(ranks.select(col("__v").as("__s"), col("rank")), Seq("__s"))
           .select(col("__d").as("__v"), (col("rank") / col("__deg")).as("__c"))
           .groupBy(col("__v")).agg(sum(col("__c")).as("__in"))
-        val joined = vertsDeg.join(contribs, Seq("__v"), "left")
-        val withDm = danglingMass match {
-          case Some(dm) => joined.withColumn("__dm", lit(dm))
-          case None => joined.crossJoin(broadcast(ranks.filter(col("__deg").isNull)
-            .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dm"))))
-        }
-        val next = withDm
-          .select(col("__v"), col("__deg"),
-            ((lit(1.0 - damping) + lit(damping) * col("__dm")) * seedMass +
-              lit(damping) * coalesce(col("__in"), lit(0.0))).as("rank"))
-        // batched checkpoints, see pageRank (always on the last round)
-        if (i % CheckpointEvery == 0 || i == iters) {
-          val obs = Observation()
-          ranks = next.observe(obs, dmMetric).localCheckpoint(true)
-          danglingMass = Some(awaitObserved(obs).getAs[Double]("__dm"))
-        } else { ranks = next; danglingMass = None }
-      }
-      ranks.select(col("__v").as("vertex"), col("rank"))
-    } finally {
-      e.unpersist(); eDeg.unpersist()
-      vertsDeg.unpersist(); ()
+        Fixpoint.observe(vertsDeg.join(contribs, Seq("__v"), "left")
+          .withColumn("__dm", lit(dm.getDouble(0)))
+          .select(col("__v"), col("__deg"), rank.as("rank")), dmMetric)
+      }._1.select(col("__v").as("vertex"), col("rank"))
+    }
+
+  /** Single-source shortest paths (hop counts) from a set of landmark
+    * vertices, bounded at `maxHops` — the GraphFrames-style BFS
+    * distance table behind reachability/centrality features. Pure
+    * integer min-relaxation: dist_{i+1}(v) = min(dist_i(v),
+    * 1 + min over in-neighbors dist_i(u)) on the undirected graph, so
+    * results are bit-exact everywhere. Returns (vertex, landmark,
+    * distance) for every vertex within `maxHops` of a landmark.
+    *
+    * Scale shape: each round one keyed join + (vertex, landmark)
+    * partial-agg min; the frontier table is bounded by vertices ×
+    * landmarks (keep the landmark set small, as the feature use cases
+    * do).
+    */
+  def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
+                    landmarks: Seq[Long], maxHops: Int = 6): DataFrame = {
+    require(landmarks.nonEmpty, "shortestPaths needs at least one landmark")
+    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
+    Fixpoint.withCaches { c =>
+      val und = adjacency(c, edges, srcCol, dstCol, selfLoops = false)
+      val init = und.select(col("__v")).distinct()
+        .filter(col("__v").isin(landmarks: _*))
+        .select(col("__v"), col("__v").as("__lm"), lit(0L).as("__d"))
+      Fixpoint.iterate(init, maxHops) { (dist, _) =>
+        val relaxed = und
+          .join(dist.select(col("__v").as("__n"), col("__lm"), col("__d")), Seq("__n"))
+          .select(col("__v"), col("__lm"), (col("__d") + 1L).as("__d"))
+        dist.unionByName(relaxed)
+          .groupBy(col("__v"), col("__lm")).agg(min(col("__d")).as("__d"))
+      }._1.select(col("__v").as("vertex"), col("__lm").as("landmark"),
+        col("__d").as("distance"))
     }
   }
 
@@ -581,59 +282,38 @@ object Graph {
     *
     * Scale shape mirrors [[pageRank]]: per half-round one keyed join
     * + destination partial-agg, a 1-row normalizer broadcast, and a
-    * localCheckpoint.
+    * checkpoint. The edge list is cached once per join key, so neither
+    * half-round re-shuffles or re-sorts edges.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-      .filter(col("__s").isNotNull && col("__d").isNotNull)
-      .distinct()
-      .persist()
-    // scale-adaptive loop partitioning + pre-sorted loop caches, the
-    // same two r16 rules as pageRank: each half-round's joins reuse
-    // the cached partitioning AND ordering, so per round only the
-    // vertex-sized hub/authority tables exchange (and sort)
-    val edgeCount = e.count()
-    val numParts = loopPartitions(edgeCount)
-    val verts = e.select(col("__s").as("__v"))
-      .union(e.select(col("__d").as("__v"))).distinct()
-      .repartition(numParts, col("__v"))
-      .sortWithinPartitions(col("__v")).persist()
-    // HITS alternates the edge join key every half-round; cache the
-    // edge list once per key so neither half-round re-shuffles OR
-    // re-sorts edges
-    val eBySrc = e.repartition(numParts, col("__s"))
-      .sortWithinPartitions(col("__s")).persist()
-    val eByDst = e.repartition(numParts, col("__d"))
-      .sortWithinPartitions(col("__d")).persist()
-    try {
-      val n = verts.count().toDouble
-      // all three loop caches forced → the raw edge cache releases
-      // before the loop instead of quadrupling cached edge memory (§5)
-      eBySrc.count(); eByDst.count()
+    Fixpoint.withCaches { c =>
+      val e = c.base(directed(edges, srcCol, dstCol))
+      val (verts, n) = c.sorted(
+        e.select(col("__s").as("__v")).union(e.select(col("__d").as("__v"))).distinct(), "__v")
+      val (eBySrc, _) = c.sorted(e, "__s")
+      val (eByDst, _) = c.sorted(e, "__d")
       e.unpersist()
-      var hubs = verts.withColumn("h", lit(1.0 / n)).localCheckpoint(true)
-      var auths = hubs.select(col("__v"), col("h").as("a"))
+      // one half-round: `score` flows along the edges from their `from`
+      // endpoint to their `to` endpoint, then L1-normalizes as `out`
+      def half(byKey: DataFrame, scores: DataFrame, from: String, to: String,
+               score: String, out: String): DataFrame = {
+        val raw = byKey.join(scores.select(col("__v").as(from), col(score)), Seq(from))
+          .groupBy(col(to).as("__v")).agg(sum(col(score)).as("__raw"))
+        Fixpoint.checkpoint(verts.join(raw, Seq("__v"), "left")
+          .crossJoin(broadcast(raw.agg(sum(col("__raw")).as("__norm"))))
+          .select(col("__v"), (coalesce(col("__raw"), lit(0.0)) / col("__norm")).as(out)))
+      }
+      var hubs = Fixpoint.checkpoint(verts.withColumn("h", lit(1.0 / n)))
+      var auths = hubs
       (1 to iters).foreach { _ =>
-        val aRaw = eBySrc.join(hubs.select(col("__v").as("__s"), col("h")), Seq("__s"))
-          .groupBy(col("__d").as("__v")).agg(sum(col("h")).as("__ar"))
-        val aNorm = aRaw.agg(sum(col("__ar")).as("__an"))
-        auths = verts.join(aRaw, Seq("__v"), "left")
-          .crossJoin(broadcast(aNorm))
-          .select(col("__v"), (coalesce(col("__ar"), lit(0.0)) / col("__an")).as("a"))
-          .localCheckpoint(true)
-        val hRaw = eByDst.join(auths.select(col("__v").as("__d"), col("a")), Seq("__d"))
-          .groupBy(col("__s").as("__v")).agg(sum(col("a")).as("__hr"))
-        val hNorm = hRaw.agg(sum(col("__hr")).as("__hn"))
-        hubs = verts.join(hRaw, Seq("__v"), "left")
-          .crossJoin(broadcast(hNorm))
-          .select(col("__v"), (coalesce(col("__hr"), lit(0.0)) / col("__hn")).as("h"))
-          .localCheckpoint(true)
+        auths = half(eBySrc, hubs, "__s", "__d", "h", "a")
+        hubs = half(eByDst, auths, "__d", "__s", "a", "h")
       }
       hubs.join(auths, Seq("__v"))
         .select(col("__v").as("vertex"), col("h").as("hub"), col("a").as("authority"))
-    } finally { e.unpersist(); verts.unpersist(); eBySrc.unpersist(); eByDst.unpersist(); () }
+    }
   }
 
   /** Per-vertex triangle counts over an undirected edge list (self

@@ -63,6 +63,10 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster")).toMap
     assert(out(10L) == 10L && out(11L) == 10L && out(12L) == 10L, s"got $out")
     assert(out(13L) == 13L)
+    // no rounds would leave every doc its own cluster: rejected, as
+    // every graph loop rejects it
+    intercept[IllegalArgumentException](
+      Dedup.minhashClustersTransitive(chain, "doc_id", "text", maxIters = 0))
   }
 
   test("minhashPairs: exact dup pair has jaccard 1.0; candidates verified") {

@@ -1,6 +1,10 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -24,6 +28,39 @@ class GraphSpec extends SparkSpec {
     // canonical label = min vertex in component
     val byRoot = vs.groupBy(find)
     byRoot.values.flatMap(g => { val m = g.min; g.map(_ -> m) }).toMap
+  }
+
+  /** Executed plans of the checkpoint actions `body` runs. Listener
+    * delivery is async, so this polls until `atLeast` have arrived (or
+    * a 10 s deadline passes) instead of stopping once the count holds
+    * still, which a lagging listener bus would cut short.
+    */
+  private def checkpointPlans(atLeast: Int)(body: => Unit): Seq[SparkPlan] = {
+    val plans = scala.collection.mutable.Buffer[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f.toLowerCase.contains("checkpoint")) plans.synchronized { plans += qe.executedPlan; () }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 10000000000L
+      while (plans.synchronized(plans.size) < atLeast && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      plans.synchronized(plans.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Every node of an executed plan, through AQE stages and reuse. */
+  private def expand(p: SparkPlan): Seq[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => p.children
+    }
+    p +: kids.flatMap(expand)
   }
 
   test("components get canonical min-vertex labels") {
@@ -285,22 +322,9 @@ class GraphSpec extends SparkSpec {
     // broadcast disabled (so the per-round joins actually exercise
     // shuffle alignment): no per-round checkpoint plan may contain an
     // Exchange whose input (through narrow ops) is a cache scan.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val plans = scala.collection.mutable.Buffer[(String, SparkPlan)]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             d: Long): Unit =
-        plans.synchronized { plans += ((f, qe.executedPlan)); () }
-      override def onFailure(f: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
-    }
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.listenerManager.register(listener)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       // big enough that loopPartitions' 64k-row quantum lets the floor
@@ -313,23 +337,13 @@ class GraphSpec extends SparkSpec {
         spark.conf.get("spark.sql.shuffle.partitions").toInt)
       val edges = spark.range(0, nEdges)
         .selectExpr("id as src", s"((id * 7 + 1) % $nEdges) as dst")
-      Graph.pageRank(edges, "src", "dst", iters = 3)
-        .write.format("noop").mode("overwrite").save()
-      // listener delivery is async — wait until the capture stabilizes
-      var last = -1
-      var cur = plans.synchronized(plans.size)
-      val deadline = System.nanoTime() + 10000000000L
-      while (cur != last && System.nanoTime() < deadline) {
-        last = cur; Thread.sleep(200); cur = plans.synchronized(plans.size)
-      }
-      def expand(p: SparkPlan): Seq[SparkPlan] = {
-        val kids = p match {
-          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case q: QueryStageExec => Seq(q.plan)
-          case r: ReusedExchangeExec => Seq(r.child)
-          case _ => p.children
-        }
-        p +: kids.flatMap(expand)
+      // the ranks init + per-round updates are the checkpoint actions;
+      // setup counts/cache builds legitimately repartition cache scans.
+      // Polls for all four (init + 3 rounds) so the last round's plan is
+      // scanned too; three is the floor the assertion below needs.
+      val loop = checkpointPlans(atLeast = 4) {
+        Graph.pageRank(edges, "src", "dst", iters = 3)
+          .write.format("noop").mode("overwrite").save()
       }
       @annotation.tailrec
       def throughNarrow(p: SparkPlan): SparkPlan = p match {
@@ -343,22 +357,14 @@ class GraphSpec extends SparkSpec {
         throughNarrow(p.children.head)
         case other => other
       }
-      // the ranks init + per-round updates are the checkpoint actions;
-      // setup counts/cache builds legitimately repartition cache scans
-      val loop = plans.synchronized(
-        plans.filter(_._1.toLowerCase.contains("checkpoint")).map(_._2).toSeq)
-      assert(loop.size >= 3, s"expected >=3 checkpoint plans, captured " +
-        s"${plans.synchronized(plans.map(_._1).distinct.mkString(","))}")
+      assert(loop.size >= 3, s"expected >=3 checkpoint plans, got ${loop.size}")
       val offenders = loop.flatMap(expand).collect {
         case s: ShuffleExchangeLike
           if throughNarrow(s.child).isInstanceOf[InMemoryTableScanExec] => s
       }
       assert(offenders.isEmpty,
         s"loop re-shuffled a cached table:\n${offenders.mkString("\n")}")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      spark.listenerManager.unregister(listener)
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
   }
 
   test("pageRank folds the dangling-mass pass into each round's checkpoint") {
@@ -367,56 +373,72 @@ class GraphSpec extends SparkSpec {
     // carry the CollectMetrics node and must NOT contain the old
     // agg-into-broadcast cross join (BroadcastNestedLoopJoin), which
     // was a full extra pass over the vertex table per iteration.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    val plans = scala.collection.mutable.Buffer[(String, SparkPlan)]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             d: Long): Unit =
-        plans.synchronized { plans += ((f, qe.executedPlan)); () }
-      override def onFailure(f: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      // vertex 2 is a dangling sink, so the dangling mass is nonzero
-      val edges = Seq((1L, 2L), (3L, 2L), (3L, 1L)).toDF("src", "dst")
+    // vertex 2 is a dangling sink, so the dangling mass is nonzero
+    val edges = Seq((1L, 2L), (3L, 2L), (3L, 1L)).toDF("src", "dst")
+    val loop = checkpointPlans(atLeast = 4) { // init + 3 rounds
       val got = Graph.pageRank(edges, "src", "dst", iters = 3)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val want = refPageRank(Seq((1L, 2L), (3L, 2L), (3L, 1L)), 3)
       got.foreach { case (v, p) => assert(math.abs(p - want(v)) < 1e-12, s"vertex $v") }
-      var last = -1
-      var cur = plans.synchronized(plans.size)
-      val deadline = System.nanoTime() + 10000000000L
-      while (cur != last && System.nanoTime() < deadline) {
-        last = cur; Thread.sleep(200); cur = plans.synchronized(plans.size)
+    }
+    assert(loop.size >= 4, // init + 3 rounds
+      s"expected >=4 checkpoint plans, got ${loop.size}")
+    val nodes = loop.flatMap(expand)
+    assert(nodes.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.CollectMetricsExec]),
+      "checkpoint plans must observe the dangling metric inline")
+    val crossJoins = nodes.filter(p =>
+      p.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec] ||
+        p.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec])
+    assert(crossJoins.isEmpty,
+      s"per-round dangling cross join should be gone:\n${crossJoins.mkString("\n")}")
+  }
+
+  test("loops read their per-round scalars without waiting on the listener bus") {
+    // a QueryExecutionListener that blocks holds up every later event on
+    // the session's listener bus, Observation results included; the
+    // fixpoint and the dangling-mass loops must still finish exactly
+    val latch = new java.util.concurrent.CountDownLatch(1)
+    val blocker = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        latch.await(300, java.util.concurrent.TimeUnit.SECONDS); ()
       }
-      def expand(p: SparkPlan): Seq[SparkPlan] = {
-        val kids = p match {
-          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-          case q: QueryStageExec => Seq(q.plan)
-          case r: ReusedExchangeExec => Seq(r.child)
-          case _ => p.children
-        }
-        p +: kids.flatMap(expand)
-      }
-      val loop = plans.synchronized(
-        plans.filter(_._1.toLowerCase.contains("checkpoint")).map(_._2).toSeq)
-      assert(loop.size >= 4, // init + 3 rounds
-        s"expected >=4 checkpoint plans, got ${loop.size}")
-      val nodes = loop.flatMap(expand)
-      assert(nodes.exists(
-        _.isInstanceOf[org.apache.spark.sql.execution.CollectMetricsExec]),
-        "checkpoint plans must observe the dangling metric inline")
-      val crossJoins = nodes.filter(p =>
-        p.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec] ||
-          p.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec])
-      assert(crossJoins.isEmpty,
-        s"per-round dangling cross join should be gone:\n${crossJoins.mkString("\n")}")
-    } finally spark.listenerManager.unregister(listener)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(blocker)
+    try {
+      val chain = (1L until 12L).map(i => (i, i + 1)) ++ Seq((20L, 21L), (5L, 5L))
+      assert(cc(chain, maxIters = 15) == bruteCc(chain))
+      val edges = Seq((1L, 2L), (3L, 2L), (3L, 1L), (4L, 3L))
+      val got = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", iters = 8)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val want = refPageRank(edges, 8)
+      assert(got.keySet == want.keySet)
+      got.foreach { case (v, p) => assert(math.abs(p - want(v)) < 1e-9, s"vertex $v") }
+    } finally {
+      latch.countDown()
+      spark.listenerManager.unregister(blocker)
+    }
+  }
+
+  test("no loop leaves a cached frame behind, failure path included") {
+    import org.apache.spark.sql.graft.CacheEntries
+    val before = CacheEntries(spark)
+    val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    Graph.connectedComponents(e, "src", "dst").collect()
+    Graph.kCore(e, "src", "dst", k = 2).collect()
+    Graph.labelPropagation(e, "src", "dst").collect()
+    Graph.pageRank(e, "src", "dst").collect()
+    Graph.personalizedPageRank(e, "src", "dst", seeds = Seq(1L)).collect()
+    intercept[IllegalArgumentException](
+      Graph.personalizedPageRank(e, "src", "dst", seeds = Seq(99L)))
+    Graph.shortestPaths(e, "src", "dst", landmarks = Seq(1L)).collect()
+    Graph.hits(e, "src", "dst").collect()
+    val docs = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g h"), (3L, "x y z w v u"))
+      .toDF("doc_id", "text")
+    graft.dedup.Dedup.minhashClustersTransitive(docs, "doc_id", "text").collect()
+    val left = CacheEntries(spark) - before
+    assert(left == 0, s"$left cache entries left behind")
   }
 
   test("loopPartitions: ~2M rows/partition with a parallelism floor, monotonic, capped") {
@@ -430,22 +452,22 @@ class GraphSpec extends SparkSpec {
       val byPar = math.min(par, rows / 65536L)
       math.max(1L, math.min(math.max(bySize, byPar), 1L << 20)).toInt
     }
-    assert(Graph.loopPartitions(0L) == 1)
-    assert(Graph.loopPartitions(1L) == 1)
-    assert(Graph.loopPartitions(65535L) == 1) // under one floor quantum
+    assert(Fixpoint.loopPartitions(0L) == 1)
+    assert(Fixpoint.loopPartitions(1L) == 1)
+    assert(Fixpoint.loopPartitions(65535L) == 1) // under one floor quantum
     // sf0.1-class graph: parallelism floor active, bounded by 64k rows
-    assert(Graph.loopPartitions(600000L) == want(600000L))
-    assert(Graph.loopPartitions(600000L) <= par.max(1L))
-    assert(Graph.loopPartitions(2000001L) == want(2000001L))
-    assert(Graph.loopPartitions(60L * 1000 * 1000) == want(60L * 1000 * 1000)) // sf10
+    assert(Fixpoint.loopPartitions(600000L) == want(600000L))
+    assert(Fixpoint.loopPartitions(600000L) <= par.max(1L))
+    assert(Fixpoint.loopPartitions(2000001L) == want(2000001L))
+    assert(Fixpoint.loopPartitions(60L * 1000 * 1000) == want(60L * 1000 * 1000)) // sf10
     // at scale the size term dominates: the floor contributes nothing
     val atScale = 1000L * 1000 * 1000 * 10
-    assert(Graph.loopPartitions(atScale) == want(atScale))
+    assert(Fixpoint.loopPartitions(atScale) == want(atScale))
     assert(want(atScale) == 5000) // pure ceil(rows / 2M), independent of cores
-    val big = Graph.loopPartitions(Long.MaxValue / 4)
+    val big = Fixpoint.loopPartitions(Long.MaxValue / 4)
     assert(big == (1 << 20)) // clamp holds and the Int cast cannot overflow
     val xs = Seq(1L, 65535L, 1999999L, 2000000L, 5000000L, 100000000L)
-      .map(Graph.loopPartitions)
+      .map(Fixpoint.loopPartitions)
     assert(xs == xs.sorted)
   }
 }

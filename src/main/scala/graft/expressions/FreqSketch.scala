@@ -3,17 +3,8 @@ package graft.expressions
 import org.apache.datasketches.common.ArrayOfStringsSerDe
 import org.apache.datasketches.frequencies.{ErrorType, ItemsSketch, LongsSketch}
 import org.apache.datasketches.memory.Memory
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -37,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * primitive-map fast path — 'S' = ItemsSketch<String>) so a
   * persisted sketch is self-describing.
   */
-object FreqOps {
+object FreqOps extends SketchFamily[AnyRef]("freq") {
   final val TagLong: Byte = 'L'.toByte
   final val TagString: Byte = 'S'.toByte
 
@@ -70,13 +61,7 @@ object FreqOps {
   def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
     require(a(0) == b(0),
       s"cannot merge frequency sketches of different item types (${a(0).toChar} vs ${b(0).toChar})")
-    (deserialize(a), deserialize(b)) match {
-      case (x: LongsSketch, y: LongsSketch) => serialize(x.merge(y))
-      case (x: ItemsSketch[_], y: ItemsSketch[_]) =>
-        serialize(x.asInstanceOf[ItemsSketch[String]]
-          .merge(y.asInstanceOf[ItemsSketch[String]]))
-      case _ => throw new IllegalStateException("tag/payload mismatch")
-    }
+    serialize(merge(deserialize(a), deserialize(b), 0))
   }
 
   /** Items with estimate ≥ threshold as rows of
@@ -110,146 +95,42 @@ object FreqOps {
     case s: LongsSketch => s.getMaximumError
     case s: ItemsSketch[_] => s.asInstanceOf[ItemsSketch[String]].getMaximumError
   }
-}
 
-/** freq_sketch_agg(v, maxMapSize) → binary: a frequent-items sketch of
-  * the values of `v` per group. maxMapSize (power of 2) bounds memory
-  * at ~18 bytes/slot and sets the deterministic error bound
-  * ≤ 3.5·streamLength/maxMapSize; a map never filled past 75% never
-  * purges ⇒ exact. Nulls are skipped; empty input → empty sketch.
-  */
-case class FreqItemsAgg(
-    child: Expression,
-    maxMapSize: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[AnyRef] with UnaryLike[Expression] {
+  // graft_freq_sketch_agg(v, maxMapSize): a frequent-items sketch of
+  // the values of `v` per group. maxMapSize (power of 2) bounds memory
+  // at ~18 bytes/slot and sets the deterministic error bound
+  // ≤ 3.5·streamLength/maxMapSize; a map never filled past 75% never
+  // purges ⇒ exact. Nulls are skipped; empty input → empty sketch.
 
-  require(maxMapSize >= 8 && (maxMapSize & (maxMapSize - 1)) == 0,
-    s"maxMapSize must be a power of 2 >= 8, got $maxMapSize")
+  def checkParam(maxMapSize: Int): Unit =
+    require(maxMapSize >= 8 && (maxMapSize & (maxMapSize - 1)) == 0,
+      s"maxMapSize must be a power of 2 >= 8, got $maxMapSize")
 
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_freq_sketch_agg"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires long/string input, got ${other.simpleString} " +
-        "(cast narrower integrals to long)")
+  def inputError(types: Seq[DataType]): Option[String] = types match {
+    case Seq(LongType | StringType) => None
+    case _ => Some("long/string input (cast narrower integrals to long)")
   }
 
-  override def createAggregationBuffer(): AnyRef = child.dataType match {
+  def create(types: Seq[DataType], maxMapSize: Int): AnyRef = types.head match {
     case LongType => new LongsSketch(maxMapSize)
     case StringType => new ItemsSketch[String](maxMapSize)
   }
 
-  override def update(buffer: AnyRef, input: InternalRow): AnyRef = {
-    val v = child.eval(input)
-    if (v != null) buffer match {
+  def update(buf: AnyRef, v: Any, same: Any): AnyRef = {
+    buf match {
       case s: LongsSketch => s.update(v.asInstanceOf[Long])
       case s: ItemsSketch[_] =>
         s.asInstanceOf[ItemsSketch[String]].update(v.asInstanceOf[UTF8String].toString)
     }
-    buffer
+    buf
   }
 
-  override def merge(buffer: AnyRef, other: AnyRef): AnyRef = (buffer, other) match {
-    case (x: LongsSketch, y: LongsSketch) => x.merge(y)
-    case (x: ItemsSketch[_], y: ItemsSketch[_]) =>
-      x.asInstanceOf[ItemsSketch[String]].merge(y.asInstanceOf[ItemsSketch[String]])
+  def merge(x: AnyRef, y: AnyRef, maxMapSize: Int): AnyRef = (x, y) match {
+    case (a: LongsSketch, b: LongsSketch) => a.merge(b)
+    case (a: ItemsSketch[_], b: ItemsSketch[_]) =>
+      a.asInstanceOf[ItemsSketch[String]].merge(b.asInstanceOf[ItemsSketch[String]])
     case _ => throw new IllegalStateException("mismatched frequency-sketch buffers")
   }
 
-  override def eval(buffer: AnyRef): Any = FreqOps.serialize(buffer)
-
-  override def serialize(buffer: AnyRef): Array[Byte] = FreqOps.serialize(buffer)
-
-  override def deserialize(bytes: Array[Byte]): AnyRef = FreqOps.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): FreqItemsAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): FreqItemsAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): FreqItemsAgg =
-    copy(child = newChild)
-}
-
-object FreqItemsAgg {
-  import ColumnBridge.{column, expression => e}
-  def freqAggF(v: Column, maxMapSize: Int): Column =
-    column(FreqItemsAgg(e(v), maxMapSize).toAggregateExpression())
-}
-
-/** freq_top_items(sketch, threshold, noFalsePositives) →
-  * array<struct<item string, est, lb, ub>>: the sketch's items with
-  * estimate ≥ threshold (items render as strings so one output type
-  * covers both key kinds; cast back as needed). null sketch → null.
-  */
-case class FreqTopItems(child: Expression, threshold: Long, noFalsePositives: Boolean)
-  extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("item", StringType, nullable = false),
-    StructField("est", LongType, nullable = false),
-    StructField("lb", LongType, nullable = false),
-    StructField("ub", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "graft_freq_top_items"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary frequency sketch, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    FreqOps.topItems(v.asInstanceOf[Array[Byte]], threshold, noFalsePositives)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.FreqOps.topItems($c, ${threshold}L, $noFalsePositives)")
-
-  override protected def withNewChildInternal(newChild: Expression): FreqTopItems =
-    copy(child = newChild)
-}
-
-object FreqTopItems {
-  import ColumnBridge.{column, expression => e}
-  def freqTopItemsF(sketch: Column, threshold: Long,
-                    noFalsePositives: Boolean = true): Column =
-    column(FreqTopItems(e(sketch), threshold, noFalsePositives))
-}
-
-/** freq_merge(a, b) → binary: merge two frequency sketches of the same
-  * item type. Callers route null sides before this (coalesce) — both
-  * inputs must be non-null.
-  */
-case class FreqMerge(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override def prettyName: String = "graft_freq_merge"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, BinaryType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, binary), got (${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    FreqOps.merge(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.expressions.FreqOps.merge($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): FreqMerge =
-    copy(left = newLeft, right = newRight)
-}
-
-object FreqMerge {
-  import ColumnBridge.{column, expression => e}
-  def freqMergeF(a: Column, b: Column): Column = column(FreqMerge(e(a), e(b)))
+  def deserialize(bytes: Array[Byte], maxMapSize: Int): AnyRef = deserialize(bytes)
 }

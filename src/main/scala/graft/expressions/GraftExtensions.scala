@@ -2,16 +2,15 @@ package graft.expressions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, KllSketchMergeDouble, Literal}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.types.UTF8String
 
 /** SparkSessionExtensions hook registering graft's native expressions
-  * as SQL functions (`graft_cosine`, `graft_dot`,
-  * `graft_hyperplane_cell`, `graft_minhash_agg`, `graft_simhash_agg`,
-  * `graft_normalize`, and the theta-sketch algebra
-  * `graft_theta_sketch_agg` / `graft_theta_estimate` /
-  * `graft_theta_union` / `graft_theta_intersect` /
-  * `graft_theta_anotb`), so `spark.sql` users get the fused kernels
-  * too:
+  * as SQL functions, so `spark.sql` users get the fused kernels too.
+  * Every registered `graft_*` name is one row of `functions` below
+  * (name, usage, accepted arities, builder); the usage is what an
+  * arity mismatch raises.
   *
   *   SparkSession.builder().withExtensions(new GraftExtensions)
   *   // or spark.sql.extensions=graft.expressions.GraftExtensions
@@ -20,20 +19,22 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
+  private def literal(e: Expression, what: String): Any = {
+    require(e.foldable, s"$what must be a literal")
+    e.eval()
+  }
+
   /** Foldable integral arguments evaluated at plan time (SQL literal
     * parameters like numHashes/seed/cellBits). Int conversion is
     * exact — a bigint literal out of int range errors instead of
     * silently truncating to wrong hyperplanes/hash counts.
     */
-  private def longArg(e: Expression, what: String): Long = {
-    require(e.foldable, s"$what must be a literal")
-    e.eval() match {
-      case i: Int => i.toLong
-      case l: Long => l
-      case s: Short => s.toLong
-      case b: Byte => b.toLong
-      case other => throw new IllegalArgumentException(s"$what must be integral, got $other")
-    }
+  private def longArg(e: Expression, what: String): Long = literal(e, what) match {
+    case i: Int => i.toLong
+    case l: Long => l
+    case s: Short => s.toLong
+    case b: Byte => b.toLong
+    case other => throw new IllegalArgumentException(s"$what must be integral, got $other")
   }
 
   private def intArg(e: Expression, what: String): Int = {
@@ -42,226 +43,98 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     l.toInt
   }
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  private def typedArg[T](e: Expression, what: String, kind: String)(
+      pf: PartialFunction[Any, T]): T = {
+    val v = literal(e, what)
+    pf.applyOrElse(v, (o: Any) =>
+      throw new IllegalArgumentException(s"$what must be $kind literal, got $o"))
+  }
+
+  private case class Fn(name: String, usage: String, arities: Set[Int],
+                        build: Seq[Expression] => Expression)
+
+  /** A sketch read or merge whose arguments pass straight to [[SketchCall]]. */
+  private def kernel(name: String, usage: String): Fn =
+    Fn(name, usage, Set(SketchCall.kernels(name).inputs.size), SketchCall(name, _))
+
+  private def sketchAgg(family: SketchFamily[_ <: AnyRef], param: Expression, what: String,
+                        in: Expression*): Expression =
+    SketchAgg(family, intArg(param, what), in).toAggregateExpression()
+
+  private val functions: Seq[Fn] = Seq(
+    Fn("graft_cosine", "graft_cosine(a, b) takes two array<float> arguments", Set(2),
+      c => CosineSimilarity(c(0), c(1))),
+    Fn("graft_dot", "graft_dot(a, b) takes two array<float> arguments", Set(2),
+      c => DotProduct(c(0), c(1))),
+    Fn("graft_hyperplane_cell",
+      "graft_hyperplane_cell(vec, dim, nBits, seed) takes (array<float>, int, int, bigint)", Set(4),
+      c => HyperplaneCell(c(0), graft.functions.VectorFunctions.hyperplanes(
+        intArg(c(1), "dim"), intArg(c(2), "nBits"), longArg(c(3), "seed")).map(_.toSeq).toSeq)),
+    Fn("graft_normalize",
+      "graft_normalize(str, form) takes (string, literal form NFC/NFD/NFKC/NFKD)", Set(2),
+      c => UnicodeNormalize(c(0),
+        typedArg(c(1), "graft_normalize form", "a string") { case s: UTF8String => s.toString })),
+    Fn("graft_minhash_agg", "graft_minhash_agg(h, numHashes) takes (bigint, int literal)", Set(2),
+      c => MinHashAgg(c(0), intArg(c(1), "numHashes")).toAggregateExpression()),
+    Fn("graft_simhash_agg", "graft_simhash_agg(h) takes one bigint argument", Set(1),
+      c => SimHashAgg(c(0)).toAggregateExpression()),
+    Fn("graft_excise_tokens",
+      "graft_excise_tokens(units, positions, k) takes (array<string>, array<bigint>, int)", Set(3),
+      c => ExciseTokens(c(0), c(1), intArg(c(2), "k"))),
+
+    Fn("graft_theta_sketch_agg",
+      "graft_theta_sketch_agg(v, lgK) takes (long/string/binary, int literal)", Set(2),
+      c => sketchAgg(ThetaOps, c(1), "lgK", c(0))),
+    kernel("graft_theta_estimate", "graft_theta_estimate(sketch) takes one binary argument"),
+    kernel("graft_theta_union", "graft_theta_union(a, b) takes two binary arguments"),
+    kernel("graft_theta_intersect", "graft_theta_intersect(a, b) takes two binary arguments"),
+    kernel("graft_theta_anotb", "graft_theta_anotb(a, b) takes two binary arguments"),
+
+    Fn("graft_freq_sketch_agg",
+      "graft_freq_sketch_agg(v, maxMapSize) takes (long/string, int literal)", Set(2),
+      c => sketchAgg(FreqOps, c(1), "maxMapSize", c(0))),
+    Fn("graft_freq_top_items", "graft_freq_top_items(sketch, threshold[, noFalsePositives]) " +
+      "takes (binary, bigint literal[, boolean literal])", Set(2, 3),
+      c => SketchCall("graft_freq_top_items", Seq(c(0), Literal(longArg(c(1), "threshold")),
+        Literal(c.lift(2).forall(typedArg(_, "noFalsePositives", "a boolean") {
+          case b: java.lang.Boolean => b.booleanValue() }))))),
+    kernel("graft_freq_merge", "graft_freq_merge(a, b) takes two binary arguments"),
+
+    Fn("graft_tuple_sketch_agg",
+      "graft_tuple_sketch_agg(key, value, lgK) takes (long/string, double, int literal)", Set(3),
+      c => sketchAgg(TupleOps, c(2), "lgK", c(0), c(1))),
+    kernel("graft_tuple_estimates", "graft_tuple_estimates(sketch) takes one binary argument"),
+    Fn("graft_tuple_merge", "graft_tuple_merge(a, b, lgK) takes (binary, binary, int literal)",
+      Set(3), c => {
+        val lgK = intArg(c(2), "lgK")
+        TupleOps.checkParam(lgK)
+        SketchCall("graft_tuple_merge", Seq(c(0), c(1), Literal(lgK)))
+      }),
+
+    Fn("graft_varopt_sketch_agg",
+      "graft_varopt_sketch_agg(item, weight, k) takes (string, double, int literal)", Set(3),
+      c => sketchAgg(VarOptOps, c(2), "k", c(0), c(1))),
+    kernel("graft_varopt_samples", "graft_varopt_samples(sketch) takes one binary argument"),
+    kernel("graft_varopt_merge", "graft_varopt_merge(a, b) takes two binary arguments"),
+
+    Fn("graft_kll_sketch_agg", "graft_kll_sketch_agg(v, k) takes (double/long, int literal)",
+      Set(2), c => SketchColumns.kllAgg(c(0), c(0).dataType, intArg(c(1), "k"))),
+    Fn("graft_kll_quantiles",
+      "graft_kll_quantiles(sketch, array(probs…)) takes (binary, literal array<double>)", Set(2),
+      c => SketchColumns.kllQuantiles(c(0),
+        typedArg(c(1), "quantile probs", "an array<double>") {
+          case a: ArrayData => a.toDoubleArray().toSeq })),
+    kernel("graft_kll_rank", "graft_kll_rank(sketch, value) takes (binary, double)"),
+    Fn("graft_kll_merge", "graft_kll_merge(a, b) takes two binary arguments", Set(2),
+      c => KllSketchMergeDouble(c(0), c(1))))
+
+  override def apply(ext: SparkSessionExtensions): Unit = functions.foreach { f =>
     ext.injectFunction((
-      new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
+      new FunctionIdentifier(f.name),
+      new ExpressionInfo(classOf[GraftExtensions].getName, f.name),
       (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_cosine(a, b) takes two array<float> arguments")
-        CosineSimilarity(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_dot(a, b) takes two array<float> arguments")
-        DotProduct(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_hyperplane_cell"),
-      new ExpressionInfo(classOf[HyperplaneCell].getName, "graft_hyperplane_cell"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "graft_hyperplane_cell(vec, dim, nBits, seed) takes (array<float>, int, int, bigint)")
-        val dim = intArg(children(1), "dim")
-        val nBits = intArg(children(2), "nBits")
-        val seed = longArg(children(3), "seed")
-        HyperplaneCell(children(0),
-          graft.functions.VectorFunctions.hyperplanes(dim, nBits, seed).map(_.toSeq).toSeq)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_normalize"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, "graft_normalize"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_normalize(str, form) takes (string, literal form NFC/NFD/NFKC/NFKD)")
-        val form = children(1) match {
-          case e if e.foldable => e.eval() match {
-            case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-            case other => throw new IllegalArgumentException(
-              s"graft_normalize form must be a string literal, got $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "graft_normalize form must be a literal")
-        }
-        UnicodeNormalize(children(0), form)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash_agg"),
-      new ExpressionInfo(classOf[MinHashAgg].getName, "graft_minhash_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_minhash_agg(h, numHashes) takes (bigint, int literal)")
-        MinHashAgg(children(0), intArg(children(1), "numHashes")).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash_agg"),
-      new ExpressionInfo(classOf[SimHashAgg].getName, "graft_simhash_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_simhash_agg(h) takes one bigint argument")
-        SimHashAgg(children(0)).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_theta_sketch_agg"),
-      new ExpressionInfo(classOf[ThetaSketchAgg].getName, "graft_theta_sketch_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_theta_sketch_agg(v, lgK) takes (long/string/binary, int literal)")
-        ThetaSketchAgg(children(0), intArg(children(1), "lgK")).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_theta_estimate"),
-      new ExpressionInfo(classOf[ThetaEstimate].getName, "graft_theta_estimate"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "graft_theta_estimate(sketch) takes one binary argument")
-        ThetaEstimate(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_theta_union"),
-      new ExpressionInfo(classOf[ThetaCombine].getName, "graft_theta_union"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_theta_union(a, b) takes two binary arguments")
-        ThetaCombine(children(0), children(1), ThetaOps.OpUnion)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_theta_intersect"),
-      new ExpressionInfo(classOf[ThetaCombine].getName, "graft_theta_intersect"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_theta_intersect(a, b) takes two binary arguments")
-        ThetaCombine(children(0), children(1), ThetaOps.OpIntersect)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_freq_sketch_agg"),
-      new ExpressionInfo(classOf[FreqItemsAgg].getName, "graft_freq_sketch_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_freq_sketch_agg(v, maxMapSize) takes (long/string, int literal)")
-        FreqItemsAgg(children(0), intArg(children(1), "maxMapSize")).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_freq_top_items"),
-      new ExpressionInfo(classOf[FreqTopItems].getName, "graft_freq_top_items"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2 || children.size == 3,
-          "graft_freq_top_items(sketch, threshold[, noFalsePositives]) takes (binary, bigint literal[, boolean literal])")
-        val nfp = if (children.size < 3) true else {
-          require(children(2).foldable, "noFalsePositives must be a literal")
-          children(2).eval() match {
-            case b: java.lang.Boolean => b.booleanValue()
-            case other => throw new IllegalArgumentException(
-              s"noFalsePositives must be a boolean literal, got $other")
-          }
-        }
-        FreqTopItems(children(0), longArg(children(1), "threshold"), nfp)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_tuple_sketch_agg"),
-      new ExpressionInfo(classOf[TupleSketchAgg].getName, "graft_tuple_sketch_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_tuple_sketch_agg(key, value, lgK) takes (long/string, double, int literal)")
-        TupleSketchAgg(children(0), children(1), intArg(children(2), "lgK"))
-          .toAggregateExpression()
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_tuple_estimates"),
-      new ExpressionInfo(classOf[TupleEstimates].getName, "graft_tuple_estimates"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "graft_tuple_estimates(sketch) takes one binary argument")
-        TupleEstimates(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_tuple_merge"),
-      new ExpressionInfo(classOf[TupleMerge].getName, "graft_tuple_merge"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_tuple_merge(a, b, lgK) takes (binary, binary, int literal)")
-        TupleMerge(children(0), children(1), intArg(children(2), "lgK"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_varopt_sketch_agg"),
-      new ExpressionInfo(classOf[VarOptSketchAgg].getName, "graft_varopt_sketch_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_varopt_sketch_agg(item, weight, k) takes (string, double, int literal)")
-        VarOptSketchAgg(children(0), children(1), intArg(children(2), "k"))
-          .toAggregateExpression()
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_varopt_samples"),
-      new ExpressionInfo(classOf[VarOptSamples].getName, "graft_varopt_samples"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "graft_varopt_samples(sketch) takes one binary argument")
-        VarOptSamples(children(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_varopt_merge"),
-      new ExpressionInfo(classOf[VarOptMerge].getName, "graft_varopt_merge"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_varopt_merge(a, b) takes two binary arguments")
-        VarOptMerge(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_kll_sketch_agg"),
-      new ExpressionInfo(classOf[KllSketchAgg].getName, "graft_kll_sketch_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_kll_sketch_agg(v, k) takes (double/long, int literal)")
-        KllSketchAgg(children(0), intArg(children(1), "k")).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_kll_quantiles"),
-      new ExpressionInfo(classOf[KllQuantiles].getName, "graft_kll_quantiles"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_kll_quantiles(sketch, array(probs…)) takes (binary, literal array<double>)")
-        require(children(1).foldable, "quantile probs must be a literal array")
-        val probs = children(1).eval() match {
-          case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-            a.toDoubleArray().toSeq
-          case other => throw new IllegalArgumentException(
-            s"quantile probs must be an array<double> literal, got $other")
-        }
-        KllQuantiles(children(0), probs)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_kll_rank"),
-      new ExpressionInfo(classOf[KllRank].getName, "graft_kll_rank"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_kll_rank(sketch, value) takes (binary, double)")
-        KllRank(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_kll_merge"),
-      new ExpressionInfo(classOf[KllMerge].getName, "graft_kll_merge"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_kll_merge(a, b) takes two binary arguments")
-        KllMerge(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_freq_merge"),
-      new ExpressionInfo(classOf[FreqMerge].getName, "graft_freq_merge"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_freq_merge(a, b) takes two binary arguments")
-        FreqMerge(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_theta_anotb"),
-      new ExpressionInfo(classOf[ThetaCombine].getName, "graft_theta_anotb"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_theta_anotb(a, b) takes two binary arguments")
-        ThetaCombine(children(0), children(1), ThetaOps.OpANotB)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_excise_tokens"),
-      new ExpressionInfo(classOf[ExciseTokens].getName, "graft_excise_tokens"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_excise_tokens(units, positions, k) takes (array<string>, array<bigint>, int)")
-        ExciseTokens(children(0), children(1), intArg(children(2), "k"))
+        require(f.arities(children.size), f.usage)
+        f.build(children)
       }))
   }
 }

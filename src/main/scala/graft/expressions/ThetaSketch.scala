@@ -2,15 +2,6 @@ package graft.expressions
 
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketch, Sketches, Union}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -39,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * set-algebra layer is the part a 100 TB curation pipeline needs for
   * crawl-overlap planning (dedup budget, incremental-crawl novelty).
   */
-object ThetaOps {
+object ThetaOps extends SketchFamily[Union]("theta") {
   final val OpUnion = 0
   final val OpIntersect = 1
   final val OpANotB = 2
@@ -89,171 +80,40 @@ object ThetaOps {
     }
     out.toByteArray
   }
-}
 
-/** theta_sketch_agg(v, lgK) → binary: one compact theta sketch of the
-  * distinct values of `v` per group. Accepts long/string/binary input
-  * (cast narrower integrals to long); nulls are skipped (a null is not
-  * a distinct value, matching count(distinct)). Empty input → the
-  * empty sketch (estimate 0), never null — set algebra downstream
-  * treats absence and emptiness identically.
-  *
-  * Buffer is a heap theta Union; partial aggregation (map-side
-  * combine) works like any TypedImperativeAggregate — at 100 TB each
-  * task ships one ≤ 2^lgK·8-byte sketch, never its rows.
-  */
-case class ThetaSketchAgg(
-    child: Expression,
-    lgK: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] with UnaryLike[Expression] {
+  // graft_theta_sketch_agg(v, lgK): one compact theta sketch of the
+  // distinct values of `v` per group. Buffer is a heap theta Union; a
+  // null is not a distinct value (matching count(distinct)); empty
+  // input → the empty sketch (estimate 0), so set algebra downstream
+  // treats absence and emptiness identically.
 
-  require(lgK >= 4 && lgK <= 26, s"theta lgK must be in [4,26], got $lgK")
+  def checkParam(lgK: Int): Unit =
+    require(lgK >= 4 && lgK <= 26, s"theta lgK must be in [4,26], got $lgK")
 
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_theta_sketch_agg"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires long/string/binary input, got ${other.simpleString} " +
-        "(cast narrower integrals to long)")
+  def inputError(types: Seq[DataType]): Option[String] = types match {
+    case Seq(LongType | StringType | BinaryType) => None
+    case _ => Some("long/string/binary input (cast narrower integrals to long)")
   }
 
-  override def createAggregationBuffer(): Union =
+  def create(types: Seq[DataType], lgK: Int): Union =
     SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
 
-  override def update(buffer: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null) child.dataType match {
-      case LongType => buffer.update(v.asInstanceOf[Long])
-      case StringType => buffer.update(v.asInstanceOf[UTF8String].toString)
-      case BinaryType => buffer.update(v.asInstanceOf[Array[Byte]])
+  def update(buf: Union, v: Any, same: Any): Union = {
+    v match {
+      case l: Long => buf.update(l)
+      case s: UTF8String => buf.update(s.toString)
+      case b: Array[Byte] => buf.update(b)
     }
-    buffer
+    buf
   }
 
-  override def merge(buffer: Union, other: Union): Union = {
-    buffer.union(other.getResult)
-    buffer
-  }
+  def merge(x: Union, y: Union, lgK: Int): Union = { x.union(y.getResult); x }
 
-  override def eval(buffer: Union): Any = buffer.getResult.toByteArray
+  def serialize(buf: Union): Array[Byte] = buf.getResult.toByteArray
 
-  override def serialize(buffer: Union): Array[Byte] = buffer.getResult.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
+  def deserialize(bytes: Array[Byte], lgK: Int): Union = {
+    val u = create(Nil, lgK)
     u.union(Memory.wrap(bytes))
     u
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): ThetaSketchAgg =
-    copy(child = newChild)
-}
-
-object ThetaSketchAgg {
-  import ColumnBridge.{column, expression => e}
-  def thetaAggF(v: Column, lgK: Int): Column =
-    column(ThetaSketchAgg(e(v), lgK).toAggregateExpression())
-}
-
-/** theta_estimate(sketch) → double: distinct-count estimate from a
-  * compact theta sketch (exact while the sketch never left exact
-  * mode). null → null.
-  */
-case class ThetaEstimate(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "graft_theta_estimate"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary theta sketch, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    ThetaOps.estimate(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.ThetaOps.estimate($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ThetaEstimate =
-    copy(child = newChild)
-}
-
-object ThetaEstimate {
-  import ColumnBridge.{column, expression => e}
-  def thetaEstimateF(sketch: Column): Column = column(ThetaEstimate(e(sketch)))
-}
-
-/** theta_combine(a, b, op) → binary: set-combine two compact theta
-  * sketches (union / intersect / a-not-b). A NULL side means the
-  * empty set — the natural semantics under the full-outer group join
-  * this composes with (a group absent from one crawl contributes
-  * nothing). Output is never null.
-  */
-case class ThetaCombine(left: Expression, right: Expression, op: Int)
-  extends BinaryExpression {
-
-  require(op >= 0 && op <= 2, s"theta op must be 0=union/1=intersect/2=aNotB, got $op")
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = op match {
-    case ThetaOps.OpUnion => "graft_theta_union"
-    case ThetaOps.OpIntersect => "graft_theta_intersect"
-    case _ => "graft_theta_anotb"
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, BinaryType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, binary) theta sketches, got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input).asInstanceOf[Array[Byte]]
-    val b = right.eval(input).asInstanceOf[Array[Byte]]
-    ThetaOps.combine(a, b, op)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lGen = left.genCode(ctx)
-    val rGen = right.genCode(ctx)
-    val lVal = if (left.nullable) s"(${lGen.isNull} ? null : ${lGen.value})" else lGen.value
-    val rVal = if (right.nullable) s"(${rGen.isNull} ? null : ${rGen.value})" else rGen.value
-    val resultCode =
-      code"""
-        |${lGen.code}
-        |${rGen.code}
-        |byte[] ${ev.value} =
-        |  graft.expressions.ThetaOps.combine($lVal, $rVal, $op);
-      """.stripMargin
-    ev.copy(code = resultCode, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ThetaCombine =
-    copy(left = newLeft, right = newRight)
-}
-
-object ThetaCombine {
-  import ColumnBridge.{column, expression => e}
-  def thetaUnionF(a: Column, b: Column): Column =
-    column(ThetaCombine(e(a), e(b), ThetaOps.OpUnion))
-  def thetaIntersectF(a: Column, b: Column): Column =
-    column(ThetaCombine(e(a), e(b), ThetaOps.OpIntersect))
-  def thetaANotBF(a: Column, b: Column): Column =
-    column(ThetaCombine(e(a), e(b), ThetaOps.OpANotB))
 }

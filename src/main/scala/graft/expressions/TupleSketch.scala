@@ -3,14 +3,7 @@ package graft.expressions
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.tuple.{Sketch => TSketch, Sketches => TSketches, Union => TUnion}
 import org.apache.datasketches.tuple.adouble.{DoubleSketch, DoubleSummary, DoubleSummaryDeserializer, DoubleSummarySetOperations}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -29,11 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Merges across partitions and crawls like the rest of the family —
   * the per-key summaries combine under the same Sum mode.
   */
-object TupleOps {
+object TupleOps extends SketchFamily[AnyRef]("tuple") {
   private val deser = new DoubleSummaryDeserializer
   private val mode = DoubleSummary.Mode.Sum
-  private[expressions] def setOps = new DoubleSummarySetOperations(mode, mode)
-  private[expressions] def summaryMode = mode
+  private def setOps = new DoubleSummarySetOperations(mode, mode)
 
   def wrap(bytes: Array[Byte]): TSketch[DoubleSummary] =
     TSketches.heapifySketch(Memory.wrap(bytes), deser)
@@ -50,14 +42,14 @@ object TupleOps {
     case other => throw new IllegalStateException(s"not a tuple sketch: $other")
   }
 
-  def mergeAny(a: AnyRef, b: AnyRef, lgK: Int): TSketch[DoubleSummary] = {
+  def merge(x: AnyRef, y: AnyRef, lgK: Int): AnyRef = {
     val u = new TUnion[DoubleSummary](1 << lgK, setOps)
-    u.union(asSketch(a)); u.union(asSketch(b))
+    u.union(asSketch(x)); u.union(asSketch(y))
     u.getResult
   }
 
   def merge(a: Array[Byte], b: Array[Byte], lgK: Int): Array[Byte] =
-    mergeAny(wrap(a), wrap(b), lgK).compact().toByteArray
+    serialize(merge(wrap(a), wrap(b), lgK))
 
   /** (distinct_est, value_est): distinct-key estimate and the
     * Horvitz-Thompson estimate of the summed value over ALL distinct
@@ -70,144 +62,34 @@ object TupleOps {
     while (it.next()) total += it.getSummary.getValue
     new GenericInternalRow(Array[Any](s.getEstimate, total / s.getTheta))
   }
-}
 
-/** tuple_sketch_agg(key, value, lgK) → binary: a Sum-mode tuple sketch
-  * per group. Key long/string; value double (null key or value skips
-  * the row; NaN values are skipped — they would poison every sum they
-  * touch). Empty input → empty sketch.
-  */
-case class TupleSketchAgg(
-    left: Expression,
-    right: Expression,
-    lgK: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[AnyRef] with BinaryLike[Expression] {
+  // graft_tuple_sketch_agg(key, value, lgK): a Sum-mode tuple sketch
+  // per group. Key long/string; value double (a null key or value
+  // skips the row; NaN values are skipped — they would poison every
+  // sum they touch). Empty input → empty sketch.
 
-  require(lgK >= 4 && lgK <= 26, s"tuple lgK must be in [4,26], got $lgK")
+  def checkParam(lgK: Int): Unit =
+    require(lgK >= 4 && lgK <= 26, s"tuple lgK must be in [4,26], got $lgK")
 
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_tuple_sketch_agg"
+  def inputError(types: Seq[DataType]): Option[String] = types match {
+    case Seq(LongType | StringType, DoubleType) => None
+    case _ => Some("(long/string key, double value)")
+  }
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType | StringType, DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (long/string key, double value), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
+  def create(types: Seq[DataType], lgK: Int): AnyRef = new DoubleSketch(lgK, mode)
 
-  override def createAggregationBuffer(): AnyRef =
-    new DoubleSketch(lgK, TupleOps.summaryMode)
-
-  override def update(buffer: AnyRef, input: InternalRow): AnyRef = {
-    val k = left.eval(input)
-    val v = right.eval(input)
-    if (k != null && v != null) {
-      val vd = v.asInstanceOf[Double]
-      if (!vd.isNaN) buffer match {
-        case s: DoubleSketch => left.dataType match {
-          case LongType => s.update(k.asInstanceOf[Long], Double.box(vd))
-          case StringType => s.update(k.asInstanceOf[UTF8String].toString, Double.box(vd))
-        }
-        case other => throw new IllegalStateException(
-          s"update after merge on a tuple-sketch buffer: $other")
+  def update(buf: AnyRef, k: Any, v: Any): AnyRef = {
+    val vd = v.asInstanceOf[Double]
+    if (!vd.isNaN) buf match {
+      case s: DoubleSketch => k match {
+        case l: Long => s.update(l, Double.box(vd))
+        case u: UTF8String => s.update(u.toString, Double.box(vd))
       }
+      case other => throw new IllegalStateException(
+        s"update after merge on a tuple-sketch buffer: $other")
     }
-    buffer
+    buf
   }
 
-  override def merge(buffer: AnyRef, other: AnyRef): AnyRef =
-    TupleOps.mergeAny(buffer, other, lgK)
-
-  override def eval(buffer: AnyRef): Any = TupleOps.serialize(buffer)
-
-  override def serialize(buffer: AnyRef): Array[Byte] = TupleOps.serialize(buffer)
-
-  override def deserialize(bytes: Array[Byte]): AnyRef = TupleOps.wrap(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TupleSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): TupleSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): TupleSketchAgg =
-    copy(left = newLeft, right = newRight)
-}
-
-object TupleSketchAgg {
-  import ColumnBridge.{column, expression => e}
-  def tupleAggF(key: Column, value: Column, lgK: Int): Column =
-    column(TupleSketchAgg(e(key), e(value), lgK).toAggregateExpression())
-}
-
-/** tuple_estimates(sketch) → struct<distinct_est double, value_est
-  * double>: distinct-key count and HT-estimated per-distinct-key value
-  * sum. null → null.
-  */
-case class TupleEstimates(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("distinct_est", DoubleType, nullable = false),
-    StructField("value_est", DoubleType, nullable = false)))
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "graft_tuple_estimates"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary tuple sketch, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    TupleOps.estimates(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.TupleOps.estimates($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TupleEstimates =
-    copy(child = newChild)
-}
-
-object TupleEstimates {
-  import ColumnBridge.{column, expression => e}
-  def tupleEstimatesF(sketch: Column): Column = column(TupleEstimates(e(sketch)))
-}
-
-/** tuple_merge(a, b, lgK) → binary (both non-null; coalesce absent
-  * sides first — an absent group is the empty sketch).
-  */
-case class TupleMerge(left: Expression, right: Expression, lgK: Int)
-  extends BinaryExpression {
-
-  require(lgK >= 4 && lgK <= 26, s"tuple lgK must be in [4,26], got $lgK")
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override def prettyName: String = "graft_tuple_merge"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, BinaryType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, binary), got (${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TupleOps.merge(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]], lgK)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.TupleOps.merge($a, $b, $lgK)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): TupleMerge =
-    copy(left = newLeft, right = newRight)
-}
-
-object TupleMerge {
-  import ColumnBridge.{column, expression => e}
-  def tupleMergeF(a: Column, b: Column, lgK: Int): Column =
-    column(TupleMerge(e(a), e(b), lgK))
+  def deserialize(bytes: Array[Byte], lgK: Int): AnyRef = wrap(bytes)
 }

@@ -3,15 +3,8 @@ package graft.expressions
 import org.apache.datasketches.common.ArrayOfStringsSerDe
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.sampling.{VarOptItemsSketch, VarOptItemsUnion}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -38,27 +31,27 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - items heavier than the sampling threshold are always kept with
   *    their true weight.
   */
-object VarOptOps {
+object VarOptOps extends SketchFamily[VarOptItemsSketch[String]]("varopt") {
   private val serde = new ArrayOfStringsSerDe
 
   def serialize(s: VarOptItemsSketch[String]): Array[Byte] = s.toByteArray(serde)
 
-  def deserialize(bytes: Array[Byte]): VarOptItemsSketch[String] =
+  def deserialize(bytes: Array[Byte], k: Int): VarOptItemsSketch[String] =
     VarOptItemsSketch.heapify(Memory.wrap(bytes), serde)
 
-  def mergeSketches(a: VarOptItemsSketch[String],
-                    b: VarOptItemsSketch[String]): VarOptItemsSketch[String] = {
+  def merge(a: VarOptItemsSketch[String], b: VarOptItemsSketch[String],
+            k: Int): VarOptItemsSketch[String] = {
     val u = VarOptItemsUnion.newInstance[String](math.min(a.getK, b.getK))
     u.update(a); u.update(b)
     u.getResult
   }
 
   def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    serialize(mergeSketches(deserialize(a), deserialize(b)))
+    serialize(merge(deserialize(a, 0), deserialize(b, 0), 0))
 
   /** The sample as rows of (item, weight) with HT-adjusted weights. */
   def samples(bytes: Array[Byte]): GenericArrayData = {
-    val s = deserialize(bytes)
+    val s = deserialize(bytes, 0)
     val out = new Array[AnyRef](s.getNumSamples)
     val it = s.getSketchSamples.iterator()
     var i = 0
@@ -71,140 +64,27 @@ object VarOptOps {
     new GenericArrayData(out)
   }
 
-  def totalN(bytes: Array[Byte]): Long = deserialize(bytes).getN
-}
+  // graft_varopt_sketch_agg(item, weight, k): a k-item VarOpt sample
+  // per group. Item is string (render keys to string upstream); weight
+  // double and strictly positive — null items/weights and weight ≤ 0
+  // rows are skipped (a zero-weight item can never be sampled;
+  // negative weights are meaningless for subset sums). Empty input →
+  // empty sketch.
 
-/** varopt_sketch_agg(item, weight, k) → binary: a k-item VarOpt sample
-  * per group. Item is string (render keys to string upstream); weight
-  * double and strictly positive — null items/weights and weight ≤ 0
-  * rows are skipped (a zero-weight item can never be sampled; negative
-  * weights are meaningless for subset sums). Empty input → empty
-  * sketch.
-  */
-case class VarOptSketchAgg(
-    left: Expression,
-    right: Expression,
-    k: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[VarOptItemsSketch[String]] with BinaryLike[Expression] {
+  def checkParam(k: Int): Unit =
+    require(k >= 1 && k <= (1 << 24), s"varopt k must be in [1, 2^24], got $k")
 
-  require(k >= 1 && k <= (1 << 24), s"varopt k must be in [1, 2^24], got $k")
+  def inputError(types: Seq[DataType]): Option[String] = types match {
+    case Seq(StringType, DoubleType) => None
+    case _ => Some("(string item, double weight)")
+  }
 
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_varopt_sketch_agg"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string item, double weight), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def createAggregationBuffer(): VarOptItemsSketch[String] =
+  def create(types: Seq[DataType], k: Int): VarOptItemsSketch[String] =
     VarOptItemsSketch.newInstance[String](k)
 
-  override def update(buffer: VarOptItemsSketch[String],
-                      input: InternalRow): VarOptItemsSketch[String] = {
-    val item = left.eval(input)
-    val w = right.eval(input)
-    if (item != null && w != null) {
-      val wd = w.asInstanceOf[Double]
-      if (wd > 0.0 && !wd.isNaN && !wd.isInfinite)
-        buffer.update(item.asInstanceOf[UTF8String].toString, wd)
-    }
-    buffer
+  def update(buf: VarOptItemsSketch[String], item: Any, w: Any): VarOptItemsSketch[String] = {
+    val wd = w.asInstanceOf[Double]
+    if (wd > 0.0 && !wd.isNaN && !wd.isInfinite) buf.update(item.toString, wd)
+    buf
   }
-
-  override def merge(buffer: VarOptItemsSketch[String],
-                     other: VarOptItemsSketch[String]): VarOptItemsSketch[String] =
-    VarOptOps.mergeSketches(buffer, other)
-
-  override def eval(buffer: VarOptItemsSketch[String]): Any = VarOptOps.serialize(buffer)
-
-  override def serialize(buffer: VarOptItemsSketch[String]): Array[Byte] =
-    VarOptOps.serialize(buffer)
-
-  override def deserialize(bytes: Array[Byte]): VarOptItemsSketch[String] =
-    VarOptOps.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): VarOptSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): VarOptSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): VarOptSketchAgg =
-    copy(left = newLeft, right = newRight)
-}
-
-object VarOptSketchAgg {
-  import ColumnBridge.{column, expression => e}
-  def varoptAggF(item: Column, weight: Column, k: Int): Column =
-    column(VarOptSketchAgg(e(item), e(weight), k).toAggregateExpression())
-}
-
-/** varopt_samples(sketch) → array<struct<item string, weight double>>:
-  * the retained sample with Horvitz-Thompson adjusted weights (sums to
-  * the total input weight). Empty sketch → empty array; null → null.
-  */
-case class VarOptSamples(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("item", StringType, nullable = false),
-    StructField("weight", DoubleType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "graft_varopt_samples"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a binary varopt sketch, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    VarOptOps.samples(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.VarOptOps.samples($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): VarOptSamples =
-    copy(child = newChild)
-}
-
-object VarOptSamples {
-  import ColumnBridge.{column, expression => e}
-  def varoptSamplesF(sketch: Column): Column = column(VarOptSamples(e(sketch)))
-}
-
-/** varopt_merge(a, b) → binary (both non-null; coalesce absent sides). */
-case class VarOptMerge(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override def prettyName: String = "graft_varopt_merge"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, BinaryType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, binary), got (${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VarOptOps.merge(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.VarOptOps.merge($a, $b)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): VarOptMerge =
-    copy(left = newLeft, right = newRight)
-}
-
-object VarOptMerge {
-  import ColumnBridge.{column, expression => e}
-  def varoptMergeF(a: Column, b: Column): Column = column(VarOptMerge(e(a), e(b)))
 }

@@ -1,9 +1,12 @@
 package graft.operators
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-import graft.expressions.{FreqItemsAgg, FreqMerge, FreqTopItems, KllMerge, KllQuantiles, KllRank, KllSketchAgg, ThetaCombine, ThetaEstimate, ThetaSketchAgg, TupleEstimates, TupleMerge, TupleSketchAgg, VarOptMerge, VarOptSamples, VarOptSketchAgg}
+import graft.expressions.SketchColumns._
 
 /** Mergeable distinct-count sketches as PERSISTED, incrementally
   * growable artifacts — the cross-crawl accounting layer of a 100 TB
@@ -27,25 +30,25 @@ import graft.expressions.{FreqItemsAgg, FreqMerge, FreqTopItems, KllMerge, KllQu
   *    stored ones per group — historical rows are NEVER re-read
   *    (register-max union is lossless and order-independent, so the
   *    extended artifact equals a from-scratch rebuild, spec-pinned);
-  *  - theta sketches ([[graft.expressions.ThetaSketchAgg]]) for the
+  *  - theta sketches ([[graft.expressions.ThetaOps]]) for the
   *    set-ALGEBRA questions HLL cannot answer without error
   *    amplification: crawl-overlap (intersection), novelty
   *    (difference) — `thetaSetEstimates` joins two sketch tables
   *    full-outer per group and emits union/intersection/difference
   *    estimates from sketch-sized inputs only;
-  *  - frequent-items sketches ([[graft.expressions.FreqItemsAgg]])
+  *  - frequent-items sketches ([[graft.expressions.FreqOps]])
   *    for ONE-pass heavy-hitter discovery with deterministic bounds
   *    (`frequentItems`);
-  *  - KLL quantile sketches ([[graft.expressions.KllSketchAgg]]) for
+  *  - KLL quantile sketches (Spark's built-in `kll_sketch_*_double`) for
   *    MERGEABLE percentiles — each crawl sketches itself, the stored
   *    distribution extends without re-scanning history (the
   *    incremental counterpart of `Stats.saveQuantileGrid`).
   *
-  *  - VarOpt weighted samples ([[graft.expressions.VarOptSketchAgg]])
+  *  - VarOpt weighted samples ([[graft.expressions.VarOptOps]])
   *    — a bounded MERGEABLE representative sample (k items, HT
   *    weights) that extends as crawls land, where scio's A-Res
   *    `sampleWeighted` draw cannot be combined after the fact;
-  *  - Sum-mode tuple sketches ([[graft.expressions.TupleSketchAgg]])
+  *  - Sum-mode tuple sketches ([[graft.expressions.TupleOps]])
   *    — aggregation over DISTINCT keys ("revenue per distinct
   *    customer") without deduplicating the stream first.
   *
@@ -70,35 +73,39 @@ object Sketches {
   // ---------------------------------------------------------------
   // build
 
+  /** `agg` per group as groupCols* + `sketch`; no groupCols → one row. */
+  private def perGroup(df: DataFrame, groupCols: Seq[String], agg: Column): DataFrame =
+    if (groupCols.isEmpty) df.agg(agg.as("sketch"))
+    else df.groupBy(groupCols.map(col): _*).agg(agg.as("sketch"))
+
+  private def hllAgg(v: Column, lgK: Int): Column = {
+    require(lgK >= 4 && lgK <= 21, s"hll lgConfigK must be in [4,21], got $lgK")
+    hll_sketch_agg(v, lgK)
+  }
+
+  /** KLL agg over `valueCol`, whose type decides the double/long contract. */
+  private def kllAggOf(df: DataFrame, valueCol: String, k: Int): Column =
+    kllAgg(col(valueCol), df.select(col(valueCol)).schema.head.dataType, k)
+
   /** Per-group HLL sketch table: groupCols* + `sketch` binary.
     * No groupCols → one global row (group key `_global` omitted).
     */
   def hllSketches(df: DataFrame, valueCol: String, groupCols: Seq[String],
-                  lgK: Int = 12): DataFrame = {
-    require(lgK >= 4 && lgK <= 21, s"hll lgConfigK must be in [4,21], got $lgK")
-    val agg = hll_sketch_agg(col(valueCol), lgK).as("sketch")
-    if (groupCols.isEmpty) df.agg(agg)
-    else df.groupBy(groupCols.map(col): _*).agg(agg)
-  }
+                  lgK: Int = 12): DataFrame =
+    perGroup(df, groupCols, hllAgg(col(valueCol), lgK))
 
   /** Per-group theta sketch table: groupCols* + `sketch` binary. */
   def thetaSketches(df: DataFrame, valueCol: String, groupCols: Seq[String],
-                    lgK: Int = 14): DataFrame = {
-    val agg = ThetaSketchAgg.thetaAggF(col(valueCol), lgK).as("sketch")
-    if (groupCols.isEmpty) df.agg(agg)
-    else df.groupBy(groupCols.map(col): _*).agg(agg)
-  }
+                    lgK: Int = 14): DataFrame =
+    perGroup(df, groupCols, thetaAgg(col(valueCol), lgK))
 
   /** Per-group frequent-items sketch table: groupCols* + `sketch`.
     * maxMapSize must be a power of 2; exact while distinct keys per
     * group stay under ~75% of it.
     */
   def freqSketches(df: DataFrame, valueCol: String, groupCols: Seq[String],
-                   maxMapSize: Int = 1 << 12): DataFrame = {
-    val agg = FreqItemsAgg.freqAggF(col(valueCol), maxMapSize).as("sketch")
-    if (groupCols.isEmpty) df.agg(agg)
-    else df.groupBy(groupCols.map(col): _*).agg(agg)
-  }
+                   maxMapSize: Int = 1 << 12): DataFrame =
+    perGroup(df, groupCols, freqAgg(col(valueCol), maxMapSize))
 
   /** ONE-pass heavy hitters: per group, the items whose frequency
     * estimate meets `threshold`, with the sketch's deterministic
@@ -115,27 +122,25 @@ object Sketches {
                     noFalsePositives: Boolean = true): DataFrame = {
     val sk = freqSketches(df, valueCol, groupCols, maxMapSize)
     sk.select(groupCols.map(col) :+
-        explode(FreqTopItems.freqTopItemsF(col("sketch"), threshold, noFalsePositives))
+        explode(freqTopItems(col("sketch"), threshold, noFalsePositives))
           .as("hit"): _*)
       .select(groupCols.map(col) ++ Seq(
         col("hit.item").as("item"), col("hit.est").as("est"),
         col("hit.lb").as("lb"), col("hit.ub").as("ub")): _*)
   }
 
+
   /** Per-group KLL quantile sketch table: groupCols* + `sketch`. */
   def kllSketches(df: DataFrame, valueCol: String, groupCols: Seq[String],
-                  k: Int = 200): DataFrame = {
-    val agg = KllSketchAgg.kllAggF(col(valueCol), k).as("sketch")
-    if (groupCols.isEmpty) df.agg(agg)
-    else df.groupBy(groupCols.map(col): _*).agg(agg)
-  }
+                  k: Int = 200): DataFrame =
+    perGroup(df, groupCols, kllAggOf(df, valueCol, k))
 
   /** Append per-prob quantile columns (`p50`, `p99`, …; prob 0.5 →
     * "p50", 0.995 → "p99_5") to a KLL sketch table — the read side of
     * a persisted quantile artifact.
     */
   def withQuantiles(sketchTable: DataFrame, probs: Seq[Double]): DataFrame = {
-    val qs = KllQuantiles.kllQuantilesF(col("sketch"), probs)
+    val qs = kllQuantiles(col("sketch"), probs)
     val named = probs.zipWithIndex.map { case (p, i) =>
       val label = "p" + (BigDecimal(p) * 100).bigDecimal.stripTrailingZeros
         .toPlainString.replace(".", "_")
@@ -157,7 +162,7 @@ object Sketches {
       if (groupCols.isEmpty) df.crossJoin(broadcast(sketchTable))
       else df.join(broadcast(sketchTable), groupCols, "left")
     joined.withColumn(outCol,
-        KllRank.kllRankF(col("sketch"), col(valueCol).cast("double")))
+        graft.expressions.SketchColumns.kllRank(col("sketch"), col(valueCol).cast("double")))
       .drop("sketch")
   }
 
@@ -166,12 +171,8 @@ object Sketches {
     * doubles (zero/negative/NaN rows are skipped).
     */
   def varoptSketches(df: DataFrame, itemCol: String, weightCol: String,
-                     groupCols: Seq[String], k: Int): DataFrame = {
-    val agg = VarOptSketchAgg.varoptAggF(
-      col(itemCol).cast("string"), col(weightCol).cast("double"), k).as("sketch")
-    if (groupCols.isEmpty) df.agg(agg)
-    else df.groupBy(groupCols.map(col): _*).agg(agg)
-  }
+                     groupCols: Seq[String], k: Int): DataFrame =
+    perGroup(df, groupCols, varoptAgg(col(itemCol), col(weightCol), k))
 
   /** Per-group bounded weighted sample: one row per retained item with
     * its Horvitz-Thompson adjusted weight (subset-sum estimates over
@@ -181,8 +182,7 @@ object Sketches {
   def weightedSample(df: DataFrame, itemCol: String, weightCol: String,
                      groupCols: Seq[String], k: Int): DataFrame = {
     val sk = varoptSketches(df, itemCol, weightCol, groupCols, k)
-    sk.select(groupCols.map(col) :+
-        explode(VarOptSamples.varoptSamplesF(col("sketch"))).as("s"): _*)
+    sk.select(groupCols.map(col) :+ explode(varoptSamples(col("sketch"))).as("s"): _*)
       .select(groupCols.map(col) ++ Seq(
         col("s.item").as("item"), col("s.weight").as("weight")): _*)
   }
@@ -191,12 +191,8 @@ object Sketches {
     * over (keyCol, valueCol) — aggregation over DISTINCT keys.
     */
   def tupleSketches(df: DataFrame, keyCol: String, valueCol: String,
-                    groupCols: Seq[String], lgK: Int = 14): DataFrame = {
-    val agg = TupleSketchAgg.tupleAggF(
-      col(keyCol), col(valueCol).cast("double"), lgK).as("sketch")
-    if (groupCols.isEmpty) df.agg(agg)
-    else df.groupBy(groupCols.map(col): _*).agg(agg)
-  }
+                    groupCols: Seq[String], lgK: Int = 14): DataFrame =
+    perGroup(df, groupCols, tupleAgg(col(keyCol), col(valueCol), lgK))
 
   /** Per-group (distinct_est, value_est) read off a tuple sketch
     * table: distinct keys and the per-distinct-key value sum — exact
@@ -204,91 +200,105 @@ object Sketches {
     */
   def distinctValueEstimates(sketchTable: DataFrame): DataFrame =
     sketchTable
-      .withColumn("_e", TupleEstimates.tupleEstimatesF(col("sketch")))
+      .withColumn("_e", tupleEstimates(col("sketch")))
       .withColumn("distinct_est", col("_e.distinct_est"))
       .withColumn("value_est", col("_e.value_est"))
       .drop("_e")
 
-  /** Append a `distinct_est` column to a sketch table (either kind). */
-  def withEstimate(sketchTable: DataFrame, kind: String): DataFrame = kind match {
-    case "hll" =>
-      sketchTable.withColumn("distinct_est", hll_sketch_estimate(col("sketch")))
-    case "theta" =>
-      sketchTable.withColumn("distinct_est", ThetaEstimate.thetaEstimateF(col("sketch")))
-    case other => throw new IllegalArgumentException(s"unknown sketch kind '$other'")
+  /** Append a `distinct_est` column to an hll or theta sketch table. */
+  def withEstimate(sketchTable: DataFrame, kind: String): DataFrame = {
+    val est = kindOf(kind).distinct.getOrElse(throw new IllegalArgumentException(
+      s"withEstimate reads hll or theta sketch tables, not '$kind'"))
+    sketchTable.withColumn("distinct_est", est(col("sketch")))
   }
 
   // ---------------------------------------------------------------
   // artifact
 
+  /** One index kind: its build column over (frame, valueCol,
+    * weightCol, size), the merge of two non-null sketches (given the
+    * sidecar's lgK), the sidecar `lgK` slot → the family's size
+    * parameter, whether it needs a weightCol, and its distinct-count
+    * read (hll/theta only).
+    */
+  private final case class Kind(build: (DataFrame, String, String, Int) => Column,
+                                merge: (Column, Column, Int) => Column,
+                                size: Int => Int = identity,
+                                weighted: Boolean = false,
+                                distinct: Option[Column => Column] = None)
+
+  private val kinds: Map[String, Kind] = Map(
+    "hll" -> Kind((_, v, _, n) => hllAgg(col(v), n), (a, b, _) => hll_union(a, b),
+      distinct = Some(hll_sketch_estimate(_: Column))),
+    "theta" -> Kind((_, v, _, n) => thetaAgg(col(v), n), (a, b, _) => thetaUnion(a, b),
+      distinct = Some(thetaEstimate)),
+    "freq" -> Kind((_, v, _, n) => freqAgg(col(v), n), (a, b, _) => freqMerge(a, b),
+      size = 1 << _),
+    "kll" -> Kind((df, v, _, n) => kllAggOf(df, v, n),
+      (a, b, _) => kll_sketch_merge_double(a, b)),
+    "varopt" -> Kind((_, v, w, n) => varoptAgg(col(v), col(w), n),
+      (a, b, _) => varoptMerge(a, b), weighted = true),
+    "tuple" -> Kind((_, v, w, n) => tupleAgg(col(v), col(w), n), tupleMerge, weighted = true))
+
+  private def kindOf(kind: String): Kind = kinds.getOrElse(kind,
+    throw new IllegalArgumentException(s"unknown sketch kind '$kind'"))
+
+  private def buildTable(df: DataFrame, p: SketchIndexParams): DataFrame = {
+    val k = kindOf(p.kind)
+    require(!k.weighted || p.weightCol.nonEmpty,
+      s"${p.kind} index needs weightCol (the sampling weight or summed value)")
+    perGroup(df, p.groupCols, k.build(df, p.valueCol, p.weightCol, k.size(p.lgK)))
+  }
+
   /** Build and persist a sketch index: parquet sketch table + param
-    * sidecar. `kind` ∈ {hll, theta}.
+    * sidecar. `kind` ∈ {hll, theta, freq, kll, varopt, tuple}; `lgK`
+    * is the kind's size parameter (see the object doc) and varopt and
+    * tuple need `weightCol`.
     */
   def saveIndex(df: DataFrame, valueCol: String, groupCols: Seq[String],
                 path: String, kind: String = "hll", lgK: Int = 12,
                 weightCol: String = ""): Unit = {
-    val table = kind match {
-      case "hll" => hllSketches(df, valueCol, groupCols, lgK)
-      case "theta" => thetaSketches(df, valueCol, groupCols, lgK)
-      case "freq" => freqSketches(df, valueCol, groupCols, 1 << lgK)
-      case "kll" => kllSketches(df, valueCol, groupCols, lgK)
-      case "varopt" =>
-        require(weightCol.nonEmpty, "varopt index needs weightCol")
-        varoptSketches(df, valueCol, weightCol, groupCols, lgK)
-      case "tuple" =>
-        require(weightCol.nonEmpty, "tuple index needs weightCol (the summed value)")
-        tupleSketches(df, valueCol, weightCol, groupCols, lgK)
-      case other => throw new IllegalArgumentException(s"unknown sketch kind '$other'")
-    }
-    table.write.mode("overwrite").parquet(s"$path/sketches")
-    writeMeta(df.sparkSession, path,
-      SketchIndexParams(kind, lgK, valueCol, groupCols, weightCol))
+    val p = SketchIndexParams(kind, lgK, valueCol, groupCols, weightCol)
+    buildTable(df, p).write.mode("overwrite").parquet(s"$path/sketches")
+    writeMeta(df.sparkSession, path, p)
+  }
+
+  private val json = new ObjectMapper()
+
+  private def metaFile(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val meta = new Path(s"$path/$Meta")
+    (FileSystem.get(meta.toUri, spark.sparkContext.hadoopConfiguration), meta)
   }
 
   private def writeMeta(spark: SparkSession, path: String,
                         p: SketchIndexParams): Unit = {
-    val meta = new org.apache.hadoop.fs.Path(s"$path/$Meta")
-    val fs = org.apache.hadoop.fs.FileSystem.get(meta.toUri,
-      spark.sparkContext.hadoopConfiguration)
+    val node = json.createObjectNode().put("kind", p.kind).put("lgK", p.lgK)
+      .put("valueCol", p.valueCol).put("weightCol", p.weightCol)
+    val groups = node.putArray("groupCols")
+    p.groupCols.foreach(g => groups.add(g))
+    val (fs, meta) = metaFile(spark, path)
     val out = fs.create(meta, true)
-    val groups = p.groupCols.map(g => s""""$g"""").mkString(",")
-    out.write(
-      (s"""{"kind":"${p.kind}","lgK":${p.lgK},"valueCol":"${p.valueCol}",""" +
-        s""""weightCol":"${p.weightCol}","groupCols":[$groups]}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    try out.write(json.writeValueAsBytes(node)) finally out.close()
   }
 
   /** Read back an index's parameter sidecar (loud failure when absent —
     * the directory is not a sketch artifact).
     */
   def loadIndexParams(spark: SparkSession, path: String): SketchIndexParams = {
-    val meta = new org.apache.hadoop.fs.Path(s"$path/$Meta")
-    val fs = org.apache.hadoop.fs.FileSystem.get(meta.toUri,
-      spark.sparkContext.hadoopConfiguration)
+    val (fs, meta) = metaFile(spark, path)
     require(fs.exists(meta), s"$path is not a graft sketch index (no $Meta sidecar)")
     val in = fs.open(meta)
-    val raw = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    def str(name: String): String = {
-      val m = s""""$name"\\s*:\\s*"([^"]*)"""".r.findFirstMatchIn(raw)
-      require(m.isDefined, s"malformed $Meta sidecar at $path: $raw")
-      m.get.group(1)
+    val n = try json.readTree(in) finally in.close()
+    def field(name: String, ok: com.fasterxml.jackson.databind.JsonNode => Boolean) = {
+      val v = n.path(name)
+      require(ok(v), s"malformed $Meta sidecar at $path: $n")
+      v
     }
-    val lgK = {
-      val m = """"lgK"\s*:\s*(\d+)""".r.findFirstMatchIn(raw)
-      require(m.isDefined, s"malformed $Meta sidecar at $path: $raw")
-      m.get.group(1).toInt
-    }
-    val groups = {
-      val m = """"groupCols"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(raw)
-      require(m.isDefined, s"malformed $Meta sidecar at $path: $raw")
-      """"([^"]*)"""".r.findAllMatchIn(m.get.group(1)).map(_.group(1)).toSeq
-    }
-    // weightCol is absent in pre-varopt sidecars → ""
-    val weight = """"weightCol"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(raw)
-      .map(_.group(1)).getOrElse("")
-    SketchIndexParams(str("kind"), lgK, str("valueCol"), groups, weight)
+    val groups = field("groupCols", g => g.isArray && g.elements().asScala.forall(_.isTextual))
+    SketchIndexParams(field("kind", _.isTextual).asText, field("lgK", _.isInt).asInt,
+      field("valueCol", _.isTextual).asText, groups.elements().asScala.map(_.asText).toSeq,
+      // weightCol is absent in pre-varopt sidecars → ""
+      n.path("weightCol").asText(""))
   }
 
   /** The stored sketch table. */
@@ -299,41 +309,17 @@ object Sketches {
 
   /** Merge two sketch tables of the SAME params per group (full outer
     * on the group keys; a group absent from one side contributes the
-    * empty set).
+    * empty set, so the present side's sketch passes through).
     */
-  private def unionTables(kind: String, lgK: Int, groupCols: Seq[String],
+  private def unionTables(kind: Kind, lgK: Int, groupCols: Seq[String],
                           a: DataFrame, b: DataFrame): DataFrame = {
     val aa = a.withColumnRenamed("sketch", "sk_a")
     val bb = b.withColumnRenamed("sketch", "sk_b")
     val joined =
       if (groupCols.isEmpty) aa.crossJoin(bb) // both single-row global sketches
       else aa.join(bb, groupCols, "full_outer")
-    val merged = kind match {
-      case "hll" =>
-        // hll_union is null-intolerant; coalesce an absent side to the
-        // present one (register-max with one side = that side)
-        when(col("sk_a").isNull, col("sk_b"))
-          .when(col("sk_b").isNull, col("sk_a"))
-          .otherwise(hll_union(col("sk_a"), col("sk_b")))
-      case "theta" => ThetaCombine.thetaUnionF(col("sk_a"), col("sk_b"))
-      case "freq" =>
-        when(col("sk_a").isNull, col("sk_b"))
-          .when(col("sk_b").isNull, col("sk_a"))
-          .otherwise(FreqMerge.freqMergeF(col("sk_a"), col("sk_b")))
-      case "kll" =>
-        when(col("sk_a").isNull, col("sk_b"))
-          .when(col("sk_b").isNull, col("sk_a"))
-          .otherwise(KllMerge.kllMergeF(col("sk_a"), col("sk_b")))
-      case "varopt" =>
-        when(col("sk_a").isNull, col("sk_b"))
-          .when(col("sk_b").isNull, col("sk_a"))
-          .otherwise(VarOptMerge.varoptMergeF(col("sk_a"), col("sk_b")))
-      case "tuple" =>
-        when(col("sk_a").isNull, col("sk_b"))
-          .when(col("sk_b").isNull, col("sk_a"))
-          .otherwise(TupleMerge.tupleMergeF(col("sk_a"), col("sk_b"), lgK))
-      case other => throw new IllegalArgumentException(s"unknown sketch kind '$other'")
-    }
+    val (x, y) = (col("sk_a"), col("sk_b"))
+    val merged = when(x.isNull, y).when(y.isNull, x).otherwise(kind.merge(x, y, lgK))
     joined.select(groupCols.map(col) :+ merged.as("sketch"): _*)
   }
 
@@ -347,20 +333,12 @@ object Sketches {
     */
   def extendIndex(newDf: DataFrame, indexPath: String, outPath: String): Unit = {
     val spark = newDf.sparkSession
-    require(new org.apache.hadoop.fs.Path(outPath).toUri.normalize !=
-      new org.apache.hadoop.fs.Path(indexPath).toUri.normalize,
+    require(new Path(outPath).toUri.normalize != new Path(indexPath).toUri.normalize,
       s"extendIndex cannot rewrite an index in place; write to a new path ($indexPath)")
     val p = loadIndexParams(spark, indexPath)
+    val fresh = buildTable(newDf, p)
     val old = spark.read.parquet(s"$indexPath/sketches")
-    val fresh = p.kind match {
-      case "hll" => hllSketches(newDf, p.valueCol, p.groupCols, p.lgK)
-      case "theta" => thetaSketches(newDf, p.valueCol, p.groupCols, p.lgK)
-      case "freq" => freqSketches(newDf, p.valueCol, p.groupCols, 1 << p.lgK)
-      case "kll" => kllSketches(newDf, p.valueCol, p.groupCols, p.lgK)
-      case "tuple" => tupleSketches(newDf, p.valueCol, p.weightCol, p.groupCols, p.lgK)
-      case _ => varoptSketches(newDf, p.valueCol, p.weightCol, p.groupCols, p.lgK)
-    }
-    unionTables(p.kind, p.lgK, p.groupCols, old, fresh)
+    unionTables(kindOf(p.kind), p.lgK, p.groupCols, old, fresh)
       .write.mode("overwrite").parquet(s"$outPath/sketches")
     writeMeta(spark, outPath, p)
   }
@@ -386,15 +364,15 @@ object Sketches {
     // a side's sketch column is null for groups it never saw — that is
     // the empty set (estimate 0), matching the combine null contract
     val est = (c: Column) =>
-      coalesce(ThetaEstimate.thetaEstimateF(c), lit(0.0))
-    val inter = ThetaCombine.thetaIntersectF(col("sk_a"), col("sk_b"))
+      coalesce(thetaEstimate(c), lit(0.0))
+    val inter = thetaIntersect(col("sk_a"), col("sk_b"))
     joined.select(groupCols.map(col) ++ Seq(
       est(col("sk_a")).as("est_a"),
       est(col("sk_b")).as("est_b"),
-      est(ThetaCombine.thetaUnionF(col("sk_a"), col("sk_b"))).as("est_union"),
+      est(thetaUnion(col("sk_a"), col("sk_b"))).as("est_union"),
       est(inter).as("est_intersection"),
-      est(ThetaCombine.thetaANotBF(col("sk_a"), col("sk_b"))).as("est_a_only"),
-      est(ThetaCombine.thetaANotBF(col("sk_b"), col("sk_a"))).as("est_b_only")): _*)
+      est(thetaANotB(col("sk_a"), col("sk_b"))).as("est_a_only"),
+      est(thetaANotB(col("sk_b"), col("sk_a"))).as("est_b_only")): _*)
   }
 
   /** One-row corpus-overlap summary between two frames: distinct

@@ -474,7 +474,7 @@ object StatsWindowQueries extends QueryPack {
     },
 
     // theta-sketch crawl-overlap algebra (DataSketches theta via the
-    // native ThetaSketchAgg): distinct ordering customers per priority
+    // native ThetaOps): distinct ordering customers per priority
     // in the two calendar halves — union / intersection / difference
     // per group from SKETCHES only (join traffic = groups × sketch
     // bytes, never rows). lgK=18 keeps every sketch in EXACT mode at
@@ -577,7 +577,7 @@ object StatsWindowQueries extends QueryPack {
     },
 
     // ONE-pass frequent-items heavy hitters (DataSketches Misra-Gries
-    // family via the native FreqItemsAgg): same answer as the CMS+
+    // family via graft's FreqOps): same answer as the CMS+
     // exact two-pass q_cms_heavy, but the heavy keys are DISCOVERED in
     // the counting pass itself — no second scan, the shape required
     // when the source won't be read twice. The 2^16 map never purges

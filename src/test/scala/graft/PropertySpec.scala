@@ -13,7 +13,8 @@ import graft.util.Local
   * the pieces whose correctness the distributed operators inherit
   * (split thresholds, scalable-Bloom growth, local top-k,
   * time-series windowing). Runs hundreds of generated cases per
-  * property without touching a Spark job.
+  * property without touching a Spark job — except the KLL merge
+  * property, whose merge is Spark's built-in and runs as one job.
   */
 class PropertySpec extends AnyFunSuite {
 
@@ -162,20 +163,33 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("kll merge order does not change exact-mode quantiles") {
-    import graft.expressions.KllOps
+    // graft's KLL merge is Spark's built-in kll_sketch_merge_double, so
+    // this property runs as ONE job: every generated pair is a row,
+    // both merge orders are read in one projection, one collect
+    import graft.expressions.SketchColumns.kllQuantiles
+    import org.apache.spark.sql.functions.{col, kll_sketch_merge_double => kllMerge}
+    val spark = TestSpark.spark
+    import spark.implicits._
     def sk(vs: Seq[Long]): Array[Byte] = {
       val s = org.apache.datasketches.kll.KllDoublesSketch.newHeapInstance(8192)
       vs.foreach(v => s.update(v.toDouble))
       s.toByteArray
     }
-    holds(forAll(longSets) { case (a, b) =>
-      (a ++ b).isEmpty || {
-        val q1 = KllOps.quantiles(KllOps.merge(sk(a), sk(b)), Array(0.0, 0.5, 1.0))
-        val q2 = KllOps.quantiles(KllOps.merge(sk(b), sk(a)), Array(0.0, 0.5, 1.0))
-        val all = (a ++ b).map(_.toDouble).sorted
-        q1.toDoubleArray().toSeq == q2.toDoubleArray().toSeq &&
-          q1.toDoubleArray()(0) == all.head && q1.toDoubleArray()(2) == all.last
-      }
-    }, n = 60)
+    val seed = org.scalacheck.rng.Seed.random()
+    val pairs = Gen.listOfN(60, longSets).pureApply(Gen.Parameters.default, seed)
+      .filter { case (a, b) => (a ++ b).nonEmpty }
+    val probs = Seq(0.0, 0.5, 1.0)
+    val got = pairs.zipWithIndex.map { case ((a, b), i) => (i, sk(a), sk(b)) }
+      .toDF("i", "a", "b")
+      .select(col("i"),
+        kllQuantiles(kllMerge(col("a"), col("b")), probs).as("q1"),
+        kllQuantiles(kllMerge(col("b"), col("a")), probs).as("q2"))
+      .orderBy("i").as[(Int, Seq[Double], Seq[Double])].collect()
+    assert(got.length == pairs.length)
+    pairs.zip(got).foreach { case ((a, b), (_, q1, q2)) =>
+      val all = (a ++ b).map(_.toDouble).sorted
+      assert(q1 == q2 && q1.head == all.head && q1(2) == all.last,
+        s"seed=$seed a=$a b=$b q1=$q1 q2=$q2")
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.expressions.{ThetaCombine, ThetaEstimate, ThetaOps, ThetaSketchAgg}
+import graft.expressions.{SketchColumns, ThetaOps}
 
 /** Theta-sketch set algebra + the persisted mergeable sketch index.
   *
@@ -21,7 +21,17 @@ class SketchesSpec extends SparkSpec {
   private lazy val customer = spark.read.parquet(s"$sf/customer.parquet")
 
   private def estimateOf(df: org.apache.spark.sql.DataFrame): Double =
-    df.select(ThetaEstimate.thetaEstimateF(col("sketch")).as("e")).as[Double].head()
+    df.select(SketchColumns.thetaEstimate(col("sketch")).as("e")).as[Double].head()
+
+  /** A KLL sketch's bytes as DataSketches reads them. */
+  private def kll(bytes: Array[Byte]) =
+    org.apache.datasketches.kll.KllDoublesSketch.heapify(
+      org.apache.datasketches.memory.Memory.wrap(bytes))
+
+  private def kllRetainsAll(bytes: Array[Byte]): Boolean = {
+    val s = kll(bytes)
+    s.getN == s.getNumRetained
+  }
 
   test("theta exact mode: global estimate equals countDistinct exactly") {
     val exact = orders.select(countDistinct(col("o_custkey"))).as[Long].head()
@@ -102,10 +112,10 @@ class SketchesSpec extends SparkSpec {
       .select(col("sketch")).as[Array[Byte]].head()
     val one = Seq((Option(s), Option.empty[Array[Byte]])).toDF("a", "b")
     val (u, i, d1, d2) = one.select(
-        ThetaEstimate.thetaEstimateF(ThetaCombine.thetaUnionF(col("a"), col("b"))).as("u"),
-        ThetaEstimate.thetaEstimateF(ThetaCombine.thetaIntersectF(col("a"), col("b"))).as("i"),
-        ThetaEstimate.thetaEstimateF(ThetaCombine.thetaANotBF(col("a"), col("b"))).as("d1"),
-        ThetaEstimate.thetaEstimateF(ThetaCombine.thetaANotBF(col("b"), col("a"))).as("d2"))
+        SketchColumns.thetaEstimate(SketchColumns.thetaUnion(col("a"), col("b"))).as("u"),
+        SketchColumns.thetaEstimate(SketchColumns.thetaIntersect(col("a"), col("b"))).as("i"),
+        SketchColumns.thetaEstimate(SketchColumns.thetaANotB(col("a"), col("b"))).as("d1"),
+        SketchColumns.thetaEstimate(SketchColumns.thetaANotB(col("b"), col("a"))).as("d2"))
       .as[(Double, Double, Double, Double)].head()
     assert((u, i, d1, d2) == ((100.0, 0.0, 100.0, 0.0)))
   }
@@ -278,8 +288,8 @@ class SketchesSpec extends SparkSpec {
       .filter(col("n") >= 10).as[(String, Long, Long)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     val got = Sketches.loadIndex(spark, s"$base/idx1")
-      .select(col("event_type"), explode(graft.expressions.FreqTopItems
-        .freqTopItemsF(col("sketch"), 10L)).as("hit"))
+      .select(col("event_type"), explode(SketchColumns
+        .freqTopItems(col("sketch"), 10L)).as("hit"))
       .select(col("event_type"), col("hit.item").cast("long"), col("hit.est"))
       .as[(String, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(got == exact, "extended freq index must equal the exact census")
@@ -322,15 +332,15 @@ class SketchesSpec extends SparkSpec {
       s"$base/idx0", s"$base/idx1")
     val merged = Sketches.loadIndex(spark, s"$base/idx1")
     val sk = merged.select(col("sketch")).as[Array[Byte]].head()
-    assert(graft.expressions.KllOps.retainedExact(sk), "merged sketch must remain exact")
+    assert(kllRetainsAll(sk), "merged sketch must remain exact")
     // inclusive rank of the true median must be ~0.5 exactly (n even/odd aside)
     val median = Sketches.withQuantiles(merged, Seq(0.5)).select(col("p50")).as[Double].head()
     val n = o.count().toDouble
     val atOrBelow = o.filter(col("o_totalprice") <= median).count().toDouble
     val rank = Sketches.kllRank(o.limit(1).select(lit(1).as("x")), "x", merged, Seq.empty)
     // rank column exists and is in [0,1]; exact value checked against census below
-    val got = merged.select(graft.expressions.KllRank
-      .kllRankF(col("sketch"), lit(median)).as("r")).as[Double].head()
+    val got = merged.select(SketchColumns
+      .kllRank(col("sketch"), lit(median)).as("r")).as[Double].head()
     assert(got == atOrBelow / n, s"inclusive rank $got != census ${atOrBelow / n}")
     assert(rank.columns.contains("pct_rank"))
   }
@@ -340,11 +350,11 @@ class SketchesSpec extends SparkSpec {
     val df = spark.range(1, n + 1).selectExpr("CAST(id AS DOUBLE) AS v")
     val sk = Sketches.kllSketches(df, "v", Seq.empty, k = 200)
       .select(col("sketch")).as[Array[Byte]].head()
-    assert(!graft.expressions.KllOps.retainedExact(sk), "200k values at k=200 must compact")
-    val eps = graft.expressions.KllOps.rankError(sk)
+    assert(!kllRetainsAll(sk), "200k values at k=200 must compact")
+    val eps = kll(sk).getNormalizedRankError(false)
     for (p <- Seq(0.1, 0.5, 0.9)) {
-      val q = graft.expressions.KllOps
-        .quantiles(sk, Array(p)).toDoubleArray()(0)
+      val q = Seq(sk).toDF("sketch")
+        .select(SketchColumns.kllQuantiles(col("sketch"), Seq(p))(0)).as[Double].head()
       val trueRank = q / n // v's inclusive rank is v/n by construction
       assert(math.abs(trueRank - p) <= 2 * eps,
         s"p=$p got value $q (rank $trueRank), eps=$eps")
@@ -362,6 +372,10 @@ class SketchesSpec extends SparkSpec {
         Sketches.kllSketches(empty, "v", Seq.empty, k = 64), Seq(0.5))
       .select(col("p50").isNull).as[Boolean].head()
     assert(row, "empty sketch must yield null quantiles, not a sentinel")
+    val rank = Sketches.kllRank(Seq(1.0).toDF("x"), "x",
+        Sketches.kllSketches(empty, "v", Seq.empty, k = 64), Seq.empty)
+      .select(col("pct_rank").isNull).as[Boolean].head()
+    assert(rank, "empty sketch must yield a null rank, not an error")
   }
 
   test("kll SQL registration: agg + quantiles + rank reachable from spark.sql") {
@@ -426,8 +440,8 @@ class SketchesSpec extends SparkSpec {
     Sketches.extendIndex(o.filter(col("o_orderkey") % 2 === 1),
       s"$base/idx0", s"$base/idx1")
     val got = Sketches.loadIndex(spark, s"$base/idx1")
-      .select(col("o_orderpriority"), explode(graft.expressions.VarOptSamples
-        .varoptSamplesF(col("sketch"))).as("s"))
+      .select(col("o_orderpriority"), explode(SketchColumns
+        .varoptSamples(col("sketch"))).as("s"))
       .select(col("o_orderpriority"), col("s.item").cast("long"), col("s.weight"))
       .as[(String, Long, Double)].collect().sorted.toSeq
     val expect = o.select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
@@ -544,9 +558,9 @@ class SketchesSpec extends SparkSpec {
     input.addData(values: _*)
     val agg = input.toDF().toDF("v")
       .agg(
-        graft.expressions.ThetaSketchAgg.thetaAggF(col("v"), 12).as("theta"),
-        graft.expressions.FreqItemsAgg.freqAggF(col("v"), 1 << 10).as("freq"),
-        graft.expressions.KllSketchAgg.kllAggF(col("v").cast("double"), 1024).as("kll"))
+        SketchColumns.thetaAgg(col("v"), 12).as("theta"),
+        SketchColumns.freqAgg(col("v"), 1 << 10).as("freq"),
+        SketchColumns.kllAgg(col("v"), org.apache.spark.sql.types.LongType, 1024).as("kll"))
     val q = agg.writeStream.format("memory").queryName("sk_stream")
       .outputMode("complete").start()
     try { q.processAllAvailable() } finally q.stop()
@@ -556,8 +570,8 @@ class SketchesSpec extends SparkSpec {
     assert(ThetaOps.estimate(row._1) == 500.0)
     val heavy = graft.expressions.FreqOps.topItems(row._2, 2L, noFalsePositives = true)
     assert(heavy.numElements() == 100, "exactly keys 1..100 occur twice")
-    assert(graft.expressions.KllOps
-      .quantiles(row._3, Array(1.0)).toDoubleArray()(0) == 500.0)
+    assert(kll(row._3).getQuantile(1.0,
+      org.apache.datasketches.quantilescommon.QuantileSearchCriteria.INCLUSIVE) == 500.0)
   }
 
   test("index guards: in-place extend, missing sidecar, bad kind are loud") {
@@ -575,5 +589,58 @@ class SketchesSpec extends SparkSpec {
       Sketches.saveIndex(customer, "c_custkey", Seq.empty, s"$base/bad", "tdigest", 12)
     }
     assert(badKind.getMessage.contains("unknown sketch kind"))
+    // a sidecar naming a kind graft does not know must not extend as
+    // some other kind (drop the local FS checksum of the edited file)
+    val sidecar = java.nio.file.Paths.get(s"$base/idx/_GRAFT_SKETCH")
+    java.nio.file.Files.writeString(sidecar,
+      java.nio.file.Files.readString(sidecar).replace("\"hll\"", "\"tdigest\""))
+    java.nio.file.Files.deleteIfExists(sidecar.resolveSibling("._GRAFT_SKETCH.crc"))
+    val badSidecar = intercept[IllegalArgumentException] {
+      Sketches.extendIndex(customer, s"$base/idx", s"$base/idx2")
+    }
+    assert(badSidecar.getMessage.contains("unknown sketch kind"))
+  }
+
+  test("sidecar round-trips any column name; a sidecar without weightCol loads") {
+    val base = tmpDir()
+    val name = "v\"q"
+    val df = Seq((1L, "g1"), (2L, "g1"), (3L, "g2")).toDF(name, "g")
+    Sketches.saveIndex(df, name, Seq("g"), s"$base/idx0", kind = "theta", lgK = 10)
+    assert(Sketches.loadIndexParams(spark, s"$base/idx0") ==
+      Sketches.SketchIndexParams("theta", 10, name, Seq("g")))
+    Sketches.extendIndex(Seq((4L, "g2")).toDF(name, "g"), s"$base/idx0", s"$base/idx1")
+    val got = Sketches.withEstimate(Sketches.loadIndex(spark, s"$base/idx1"), "theta")
+      .select(col("g"), col("distinct_est")).as[(String, Double)].collect().toMap
+    assert(got == Map("g1" -> 2.0, "g2" -> 2.0))
+    // sidecars written before varopt carry no weightCol key
+    val old = java.nio.file.Paths.get(s"$base/old")
+    java.nio.file.Files.createDirectories(old)
+    java.nio.file.Files.writeString(old.resolve("_GRAFT_SKETCH"),
+      """{"kind":"hll","lgK":12,"valueCol":"c_custkey","groupCols":["c_mktsegment"]}""")
+    assert(Sketches.loadIndexParams(spark, old.toString) ==
+      Sketches.SketchIndexParams("hll", 12, "c_custkey", Seq("c_mktsegment"), ""))
+  }
+
+  test("kll index in the DataSketches byte format loads, reads and extends") {
+    // sketch bytes straight from KllDoublesSketch.toByteArray and a
+    // sidecar in the string-built format indexes were first written in
+    val base = tmpDir()
+    val s = org.apache.datasketches.kll.KllDoublesSketch.newHeapInstance(1024)
+    (1 to 100).foreach(v => s.update(v.toDouble))
+    Seq(("g", s.toByteArray)).toDF("g", "sketch").write.parquet(s"$base/idx0/sketches")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base/idx0/_GRAFT_SKETCH"),
+      """{"kind":"kll","lgK":1024,"valueCol":"v","weightCol":"","groupCols":["g"]}""")
+    val idx = Sketches.loadIndex(spark, s"$base/idx0")
+    val (p50, p100) = Sketches.withQuantiles(idx, Seq(0.5, 1.0))
+      .select(col("p50"), col("p100")).as[(Double, Double)].head()
+    assert((p50, p100) == ((50.0, 100.0)))
+    val rank = Sketches.kllRank(Seq(("g", 25.0)).toDF("g", "v"), "v", idx, Seq("g"))
+      .select(col("pct_rank")).as[Double].head()
+    assert(rank == 0.25)
+    Sketches.extendIndex(spark.range(101, 201).selectExpr("'g' AS g", "CAST(id AS DOUBLE) AS v"),
+      s"$base/idx0", s"$base/idx1")
+    val ext = Sketches.withQuantiles(Sketches.loadIndex(spark, s"$base/idx1"), Seq(0.5, 1.0))
+      .select(col("p50"), col("p100")).as[(Double, Double)].head()
+    assert(ext == ((100.0, 200.0)))
   }
 }

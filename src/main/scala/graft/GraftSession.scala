@@ -66,6 +66,44 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config(LocalFileSystemKey, classOf[graft.util.LocalFs.Checksummed].getName)
+      .config(LocalFsKey, classOf[graft.util.LocalFs.Context].getName)
+
+  /** The `file` scheme's classes for Hadoop's FileSystem API (parquet
+    * writers, commit protocols, the file stream source) and FileContext
+    * API (Spark's default checkpoint file manager): see
+    * [[graft.util.LocalFs]].
+    *
+    * Why: with no native Hadoop library (`libhadoop.so`), Hadoop's
+    * local file system forks one `chmod` process for every file or
+    * directory it creates and one `readlink` for every link-status
+    * check, four of which come with each checkpoint file. Measured with
+    * JFR `jdk.ProcessStart` on 4 cores:
+    *  - one `interactive` benchmark run (seed 11, warm pass + 1 pass)
+    *    forked 6,039 processes without these keys (4,688 `readlink`,
+    *    1,343 `chmod`), and 8 with them, none from Hadoop's fs code
+    *    (Hadoop's one-time `setsid` probe, Spark's `getconf` and six
+    *    `rm -rf` at shutdown);
+    *  - one `batch` run (seed 11) forked 164 without them (159 `chmod`
+    *    from the parquet writers and the commit protocol), and 6 with
+    *    them, none from Hadoop's fs code;
+    *  - the benchmark's stream shape (stream dedup into an hourly
+    *    window count, 6 files, one per trigger) forks 78, 199 and 360
+    *    per micro-batch at 1, 4 and 8 shuffle partitions without them
+    *    (one state store per partition per stateful operator), and 0
+    *    with them.
+    *
+    * Session reuse (checked): neither key takes effect on a session
+    * that `getOrCreate` reuses. It copies them into the session's SQL
+    * conf under their `spark.hadoop.` names, and Hadoop reads only the
+    * bare names, which come from the SparkContext's Hadoop
+    * configuration, built once when the context starts. On a new
+    * session the FileContext key always holds; the FileSystem key does
+    * not when the JVM cached a `file` FileSystem before the session
+    * started (Hadoop caches one per scheme and user, whatever the
+    * conf). */
+  val LocalFileSystemKey = "spark.hadoop.fs.file.impl"
+  val LocalFsKey = "spark.hadoop.fs.AbstractFileSystem.file.impl"
 
   /** scio's `ContextAndArgs(cmdlineArgs)` program entry (reference
     * ScioContext.scala `ContextAndArgs`): split the command line into

@@ -1,6 +1,6 @@
 package graft.hash
 
-import java.io.{BufferedInputStream, BufferedOutputStream}
+import java.io.BufferedInputStream
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -57,14 +57,11 @@ object GraftBloom {
   }
 
   /** Persist to any Hadoop-visible path (one small file, written from
-    * the driver — the filter IS a driver value after the build).
+    * the driver — the filter IS a driver value after the build), via
+    * temp + atomic rename: a failed write leaves the old file intact.
     */
-  def write(spark: SparkSession, bf: BloomFilter, path: String): Unit = {
-    val p = new Path(path)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val out = new BufferedOutputStream(fs.create(p, true))
-    try bf.writeTo(out) finally out.close()
-  }
+  def write(spark: SparkSession, bf: BloomFilter, path: String): Unit =
+    graft.util.Artifacts.write(spark, path)(bf.writeTo)
 
   /** Load a previously written filter. */
   def read(spark: SparkSession, path: String): BloomFilter = {

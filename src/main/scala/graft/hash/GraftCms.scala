@@ -49,14 +49,11 @@ object GraftCms {
   }
 
   /** Persist to any Hadoop-visible path (Spark CountMinSketch V1
-    * format — readable without graft).
+    * format — readable without graft), via temp + atomic rename: a
+    * failed write leaves the old file intact.
     */
-  def write(spark: SparkSession, cms: CountMinSketch, path: String): Unit = {
-    val p = new Path(path)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val out = new java.io.BufferedOutputStream(fs.create(p, true))
-    try cms.writeTo(out) finally out.close()
-  }
+  def write(spark: SparkSession, cms: CountMinSketch, path: String): Unit =
+    graft.util.Artifacts.write(spark, path)(cms.writeTo)
 
   def read(spark: SparkSession, path: String): CountMinSketch = {
     val p = new Path(path)

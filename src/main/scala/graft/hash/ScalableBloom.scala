@@ -93,13 +93,12 @@ final class ScalableBloom private (
     * `BloomFilter.readFrom(InputStream)` buffers past the filter's
     * own bytes, so back-to-back filters on one stream cannot be read
     * positionally — each slice is framed and parsed from its own
-    * buffer instead.
+    * buffer instead. Temp + atomic rename: a failed write leaves the
+    * old file intact.
     */
-  def write(spark: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val out = new DataOutputStream(new java.io.BufferedOutputStream(fs.create(p, true)))
-    try {
+  def write(spark: SparkSession, path: String): Unit =
+    graft.util.Artifacts.write(spark, path) { os =>
+      val out = new DataOutputStream(os)
       out.writeInt(ScalableBloom.Magic)
       out.writeLong(initialCapacity); out.writeDouble(fpp)
       out.writeInt(growthRate); out.writeDouble(tighteningRatio)
@@ -111,8 +110,7 @@ final class ScalableBloom private (
         out.writeInt(buf.size())
         buf.writeTo(out)
       }
-    } finally out.close()
-  }
+    }
 }
 
 object ScalableBloom {

@@ -192,30 +192,16 @@ object Bpe {
 
   /** Persist the ordered merge list (one `left<TAB>right` line per
     * merge, rank = line number; header carries the truncation flag).
-    * Atomic tmp-write + rename; rename failure throws.
+    * Temp + atomic rename (graft.util.Artifacts.write).
     */
   def save(spark: SparkSession, model: Model, path: String): Unit = {
     require(model.merges.forall { case (a, b) =>
       !a.contains("\t") && !a.contains("\n") && !b.contains("\t") && !b.contains("\n")
     }, "merge symbols must not contain tab/newline")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.getParent, s".${p.getName}.tmp-${java.util.UUID.randomUUID()}")
-    val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-      fs.create(tmp, true), java.nio.charset.StandardCharsets.UTF_8))
-    try {
-      out.println(s"GBPE1\t${model.merges.size}\t${model.truncated}")
-      model.merges.foreach { case (a, b) => out.println(s"$a\t$b") }
-    } finally out.close()
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p)) {
-      fs.delete(tmp, false)
-      // deterministic training: a concurrent writer's artifact is
-      // byte-identical, so losing the rename race is benign
-      if (!fs.exists(p))
-        throw new java.io.IOException(s"rename $tmp -> $p failed; model write aborted")
-    }
+    val text = new StringBuilder(s"GBPE1\t${model.merges.size}\t${model.truncated}\n")
+    model.merges.foreach { case (a, b) => text.append(s"$a\t$b\n") }
+    graft.util.Artifacts.write(spark, path)(
+      _.write(text.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
   }
 
   /** Load a model written by [[save]]; malformed files fail loudly. */

@@ -4,7 +4,6 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -357,21 +356,8 @@ object Annoy {
   /** Persist .ann bytes to any Hadoop-visible path (temp + rename —
     * readers never observe a torn artifact).
     */
-  def write(spark: SparkSession, index: Index, path: String): Unit = {
-    val p = new Path(path)
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp-${java.util.UUID.randomUUID()}")
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val outS = fs.create(tmp, true)
-    try outS.write(index.bytes) finally outS.close()
-    fs.delete(p, false)
-    // a false rename must be loud: returning normally here would report a
-    // "successful" write that produced no artifact (and the delete above
-    // may already have removed the previous one)
-    if (!fs.rename(tmp, p)) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(s"rename $tmp -> $p failed; index write aborted")
-    }
-  }
+  def write(spark: SparkSession, index: Index, path: String): Unit =
+    graft.util.Artifacts.write(spark, path)(_.write(index.bytes))
 
   def read(spark: SparkSession, path: String, dim: Int, metric: String = Angular): Index = {
     val p = new Path(path)
@@ -393,25 +379,9 @@ object Annoy {
     */
   def searchTopK(index: Index, probes: DataFrame, idCol: String, vecCol: String,
                  k: Int, searchK: Int = -1): DataFrame = {
-    val spark = probes.sparkSession
-    val bc = spark.sparkContext.broadcast(index)
     val scoreName = if (index.metric == Euclidean) "distance" else "cos_sim"
-    val schema = StructType(Seq(
-      StructField("probe_id", LongType, nullable = false),
-      StructField("rank", IntegerType, nullable = false),
-      StructField("item_id", IntegerType, nullable = false),
-      StructField(scoreName, DoubleType, nullable = false)))
-    implicit val enc = RowEncoder.encoderFor(schema)
-    probes.select(col(idCol).cast("long"), col(vecCol))
-      .mapPartitions { rows =>
-        val idx = bc.value
-        rows.flatMap { r =>
-          val pid = r.getLong(0)
-          val q = r.getSeq[Float](1).toArray
-          idx.query(q, k, searchK).zipWithIndex.map { case ((item, sim), rank) =>
-            Row(pid, rank + 1, item, sim)
-          }
-        }
-      }
+    KNN.searchLocalIndex(index, probes, idCol, vecCol,
+        StructField("item_id", IntegerType, nullable = false),
+        StructField(scoreName, DoubleType, nullable = false))(_.query(_, k, searchK))
   }
 }

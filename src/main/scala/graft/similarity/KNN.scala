@@ -1,10 +1,13 @@
 package graft.similarity
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.expressions.VectorExpressions.cosineF
-import graft.functions.VectorFunctions._
+import org.apache.spark.sql.types._
+import graft.expressions.PqExpressions.{pqAdcF, pqEncodeF, pqLutF}
+import graft.expressions.VectorExpressions.{cosineF, hyperplaneCellF, nearestCentroidF}
+import graft.functions.VectorFunctions.{hyperplanes, normalize}
 
 /** Approximate-nearest-neighbor search over embedding columns —
   * graft's counterpart to scio-extra's Annoy/Voyager side-input ANN
@@ -16,23 +19,97 @@ import graft.functions.VectorFunctions._
   */
 object KNN {
 
+  /** Keep each probe's best `n` rows of `df` by `score` (descending,
+    * ties by `tie` ascending), numbered 1..n in column `rank`. Spark 4
+    * plans the `row_number` bound as a WindowGroupLimit, so the top-n
+    * is cut before the window's sort.
+    */
+  private def bestPerProbe(df: DataFrame, score: String, n: Int, tie: String = "id"): DataFrame =
+    df.withColumn("rank", row_number().over(
+        Window.partitionBy(col("probe_id")).orderBy(col(score).desc, col(tie).asc)))
+      .filter(col("rank") <= n)
+
+  /** The one search kernel, in the filter-and-refine shape of the
+    * top-k similarity literature (candidate cells, a cheap score, one
+    * exact re-rank; e.g. REPOSE, ICDE 2021): the corpus side `c`
+    * (`id`, optional `cell`, `vec` or `codes`) meets the broadcast
+    * probe side `p` (`probe_id`, optional `cell`, `probe_vec` or `lut`)
+    * on `cell`, or in a cross join when there are no cells, self pairs
+    * dropped. With `adc = Some((codes k, refine))` each probe keeps its
+    * best `refine` candidates by ADC lookups, which join back to the
+    * raw vectors. Every search ends in one exact-cosine top-k rank.
+    */
+  private def search(corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
+                     k: Int, c: DataFrame, p: DataFrame,
+                     adc: Option[(Int, Int)] = None): DataFrame = {
+    val pairs = (if (c.columns.contains("cell")) c.join(broadcast(p), Seq("cell"))
+      else c.crossJoin(broadcast(p))).filter(col("id") =!= col("probe_id"))
+    val exact = adc match {
+      case None => pairs
+      case Some((kk, refine)) =>
+        require(k >= 1 && refine >= k, s"need refine >= k >= 1, got k=$k refine=$refine")
+        bestPerProbe(pairs.select(col("probe_id"), col("id"),
+            pqAdcF(col("codes"), col("lut"), kk).as("adc")), "adc", refine)
+          .select(col("probe_id"), col("id"))
+          .join(corpus.select(col(idCol).as("id"), col(vecCol).as("vec")), Seq("id"))
+          .join(broadcast(probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"))),
+            Seq("probe_id"))
+    }
+    bestPerProbe(exact.select(col("probe_id"), col("id"),
+      cosineF(col("vec"), col("probe_vec")).as("cos_sim")), "cos_sim", k)
+  }
+
+  /** Each probe row of `p` (which carries `probe_vec`) paired with the
+    * `nprobe` centroids nearest by cosine, as column `cell`; the
+    * output keeps the `keep` columns and `cell`.
+    */
+  private def nearestCells(p: DataFrame, keep: Seq[String], centroids: Seq[Seq[Double]],
+                           nprobe: Int): DataFrame = {
+    require(nprobe >= 1 && nprobe <= centroids.size,
+      s"nprobe must be in [1, ${centroids.size}], got $nprobe")
+    val spark = p.sparkSession
+    import spark.implicits._
+    val centsDf = centroids.zipWithIndex
+      .map { case (cent, i) => (i, cent.map(_.toFloat)) }.toDF("cell", "cvec")
+    bestPerProbe(p.crossJoin(broadcast(centsDf)).select(keep.map(col) :+ col("cell") :+
+        cosineF(col("probe_vec"), col("cvec")).as("csim"): _*), "csim", nprobe, tie = "cell")
+      .select((keep :+ "cell").map(col): _*)
+  }
+
+  /** Hyperplane cell of `v`: the sign bits of `cellBits` seeded
+    * projections, as the native fused-loop expression (the composed
+    * hyperplaneSignature blows up to nBits×dim expression nodes —
+    * Janino-compile-heavy and past the JVM's JIT method limit;
+    * asserted equal in VectorExpressionsSpec).
+    */
+  private def cellOf(v: Column, dim: Int, cellBits: Int, seed: Long): Column =
+    hyperplaneCellF(v, hyperplanes(dim, cellBits, seed).map(_.toSeq).toSeq)
+
+  /** `cell` and the `bits` cells one bit flip away from it. */
+  private def hammingBall(cell: Column, bits: Int): Column =
+    array(cell +: (0 until bits).map(b => cell.bitwiseXOR(lit(1L << b))): _*)
+
+  /** `df` without the rows whose `key` has more than `max` members
+    * (membership is a broadcast anti-join against the per-key count
+    * frame), and those hot keys.
+    */
+  private def withoutHot(df: DataFrame, key: String, max: Int): (DataFrame, DataFrame) = {
+    val hot = df.groupBy(col(key)).count().filter(col("count") > max).select(col(key))
+    (df.join(broadcast(hot), Seq(key), "left_anti"), hot)
+  }
+
+  /** `v` unit-normalized, as the float array the PQ kernels take. */
+  private def unit(v: Column): Column = normalize(v).cast("array<float>")
+
   /** Exact brute-force top-k cosine: broadcast the probes, one pass
     * over the corpus, per-probe bounded rank. The baseline every ANN
     * variant is measured against.
     */
   def bruteForceTopK(corpus: DataFrame, probes: DataFrame,
-                     idCol: String, vecCol: String, k: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"))
-    val scored = c.crossJoin(broadcast(p))
-      .filter(col("id") =!= col("probe_id"))
-      .select(col("probe_id"), col("id"),
-        cosineF(col("vec"), col("probe_vec")).as("cos_sim"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+                     idCol: String, vecCol: String, k: Int): DataFrame =
+    search(corpus, probes, idCol, vecCol, k,
+      corpus.select(col(idCol).as("id"), col(vecCol).as("vec")),
+      probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec")))
 
   /** IVF-flat-style ANN: a deterministic coarse quantizer (sign bits
     * of `cellBits` seeded hyperplane projections) assigns corpus and
@@ -50,27 +127,66 @@ object KNN {
     */
   def ivfTopK(corpus: DataFrame, probes: DataFrame,
               idCol: String, vecCol: String, k: Int,
-              dim: Int, cellBits: Int = 4, seed: Long = 42L): DataFrame = {
-    // Native fused-loop cell expression (same arithmetic as the
-    // composed hyperplaneSignature, which blows up to nBits×dim
-    // expression nodes — Janino-compile-heavy and past the JVM's JIT
-    // method limit; asserted equal in VectorExpressionsSpec).
-    val planes = hyperplanes(dim, cellBits, seed).map(_.toSeq).toSeq
-    val cell = (v: org.apache.spark.sql.Column) =>
-      graft.expressions.VectorExpressions.hyperplaneCellF(v, planes)
-    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"), cell(col(vecCol)).as("cell"))
-    val probeCells = (own: org.apache.spark.sql.Column) =>
-      array(own +: (0 until cellBits).map(b => own.bitwiseXOR(lit(1L << b))): _*)
-    val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"),
-        explode(probeCells(cell(col(vecCol)))).as("cell"))
-    val scored = c.join(broadcast(p), Seq("cell"))
-      .filter(col("id") =!= col("probe_id"))
-      .select(col("probe_id"), col("id"),
-        cosineF(col("vec"), col("probe_vec")).as("cos_sim"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+              dim: Int, cellBits: Int = 4, seed: Long = 42L): DataFrame =
+    search(corpus, probes, idCol, vecCol, k,
+      corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
+        cellOf(col(vecCol), dim, cellBits, seed).as("cell")),
+      probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"),
+        explode(hammingBall(cellOf(col(vecCol), dim, cellBits, seed), cellBits)).as("cell")))
+
+  /** The one Lloyd's trainer behind [[trainIvfCentroids]] (`m` = 1)
+    * and [[trainPqCodebooks]]: k-means on `m` equal subspaces of `vec`
+    * at once, fully deterministic given the seed — init is the first
+    * k vectors in (xxhash64(id), id) order sliced per subspace,
+    * iterations are fixed. Each iteration assigns the training rows
+    * with `assign(books)` (a pure projection) and recomputes the means
+    * in one posexplode + map-side-partial groupBy over
+    * (subspace, `codeOf(assignment, subspace)`, position): one bounded
+    * shuffle. The assignment is a parameter because the two trainers
+    * differ there: IVF assigns by max cosine, PQ by min squared L2.
+    * Returns books[subspace][code][dim-within-subspace].
+    */
+  private def lloyd(corpus: DataFrame, idCol: String, vec: Column, k: Int, dim: Int,
+                    iters: Int, trainFraction: Double, seed: Long, m: Int)
+                   (assign: Seq[Seq[Seq[Double]]] => Column,
+                    codeOf: (Column, Column) => Column): Seq[Seq[Seq[Double]]] = {
+    require(iters >= 1 && iters <= 100, s"iters must be in [1, 100], got $iters")
+    val subDim = dim / m
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    import graft.operators.SideInputs
+    // null elements would null the assignment (and NPE the typed
+    // collects) — exclude them like wrong-dim vectors
+    val base = corpus.select(col(idCol).as("id"), vec.as("vec"))
+      .filter(size(col("vec")) === dim && !exists(col("vec"), _.isNull))
+    val train = (if (trainFraction < 1.0)
+      base.sample(withReplacement = false, trainFraction, seed) else base).persist()
+    try {
+      val initRows: Seq[Seq[Float]] = SideInputs.asList(
+        train.orderBy(xxhash64(col("id")), col("id")).limit(k)
+          .select(col("vec")).as[Seq[Float]], maxRows = k).value
+      require(initRows.size == k, s"training set has only ${initRows.size} rows for k=$k")
+      var books: Seq[Seq[Seq[Double]]] = (0 until m).map(mi =>
+        initRows.map(_.slice(mi * subDim, (mi + 1) * subDim).map(_.toDouble)))
+      for (_ <- 1 to iters) {
+        val mi = (col("pos") / subDim).cast("int")
+        val means = train
+          .select(assign(books).as("codes"), posexplode(col("vec")).as(Seq("pos", "x")))
+          .groupBy(mi.as("mi"), codeOf(col("codes"), mi).as("code"),
+            (col("pos") % subDim).cast("int").as("sp"))
+          .agg(avg(col("x")).as("mean"))
+          .as[(Int, Int, Int, Double)]
+        val byCell = SideInputs.asList(means, maxRows = k * dim).value
+          .groupBy(r => (r._1, r._2))
+        // empty cells keep their previous codeword (standard Lloyd's)
+        books = books.zipWithIndex.map { case (book, mi) =>
+          book.zipWithIndex.map { case (old, c) =>
+            byCell.get((mi, c)).map(_.sortBy(_._3).map(_._4)).getOrElse(old)
+          }
+        }
+      }
+      books
+    } finally { train.unpersist(); () }
   }
 
   /** Train an IVF coarse quantizer: k-means centroids via Lloyd's
@@ -92,91 +208,59 @@ object KNN {
                         trainFraction: Double = 1.0, seed: Long = 42L): Seq[Seq[Double]] = {
     require(k >= 2 && k.toLong * dim <= 16L * 1000 * 1000,
       s"k×dim must fit a driver-side side input, got k=$k dim=$dim")
-    require(iters >= 1 && iters <= 100, s"iters must be in [1, 100], got $iters")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    import graft.operators.SideInputs
-    // null elements would null the NearestCentroid cid (and NPE the
-    // typed collects) — exclude them like wrong-dim vectors
-    val base = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .filter(size(col("vec")) === dim && !exists(col("vec"), _.isNull))
-    val train = (if (trainFraction < 1.0)
-      base.sample(withReplacement = false, trainFraction, seed) else base).persist()
-    try {
-      var cents: Seq[Seq[Double]] = SideInputs.asList(
-          train.orderBy(xxhash64(col("id")), col("id")).limit(k)
-            .select(col("vec")).as[Seq[Float]], maxRows = k)
-        .value.map(_.map(_.toDouble))
-      require(cents.size == k, s"training set has only ${cents.size} rows for k=$k")
-      for (_ <- 1 to iters) {
-        val cid = graft.expressions.VectorExpressions.nearestCentroidF(col("vec"), cents)
-        val means = train
-          .select(cid.as("cid"), posexplode(col("vec")).as(Seq("pos", "x")))
-          .groupBy(col("cid"), col("pos")).agg(avg(col("x")).as("m"))
-          .as[(Int, Int, Double)]
-        val byCid = SideInputs.asList(means, maxRows = k * dim).value.groupBy(_._1)
-        // empty cells keep their previous centroid (standard Lloyd's)
-        cents = cents.zipWithIndex.map { case (old, c) =>
-          byCid.get(c).map(_.sortBy(_._2).map(_._3)).getOrElse(old)
-        }
-      }
-      cents
-    } finally { train.unpersist(); () }
+    lloyd(corpus, idCol, col(vecCol), k, dim, iters, trainFraction, seed, m = 1)(
+      books => nearestCentroidF(col("vec"), books.head), (cid, _) => cid).head
   }
 
-  /** Persist a trained quantizer (the index-as-artifact contract,
-    * like scio's saved Annoy/Voyager index and graft's GraftBloom/
-    * GraftCms): train once over today's corpus, save, and every
-    * downstream job loads centroids instead of re-running Lloyd's.
-    * Format: magic, k, dim, row-major doubles.
-    *
-    * The write is temp + atomic rename: a reader racing a concurrent
-    * writer of the same artifact sees either the old complete file or
-    * the new complete file, never a torn one. When two writers race,
-    * the first rename wins and the loser discards its temp — the
-    * artifact is deterministic for a given corpus, so either copy is
-    * correct.
+  /** Artifact files (the index-as-artifact contract, like scio's saved
+    * Annoy/Voyager index and graft's GraftBloom/GraftCms): a 4-byte
+    * magic, the int shape, then row-major doubles, written through
+    * [[graft.util.Artifacts.write]] (temp + atomic rename).
     */
-  def saveCentroids(spark: org.apache.spark.sql.SparkSession,
-                    centroids: Seq[Seq[Double]], path: String): Unit = {
-    require(centroids.nonEmpty && centroids.forall(_.size == centroids.head.size),
-      "centroids must be non-empty and rectangular")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.getParent, s".${p.getName}.tmp-${java.util.UUID.randomUUID()}")
-    val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(fs.create(tmp, true)))
-    try {
-      out.writeInt(0x47495646) // "GIVF"
-      out.writeInt(centroids.size)
-      out.writeInt(centroids.head.size)
-      centroids.foreach(_.foreach(out.writeDouble))
-    } finally out.close()
-    // rename-overwrite: local/HDFS rename onto an existing file fails,
-    // so clear the target first; if another writer lands between the
-    // delete and the rename, keep its (identical) file.
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p)) {
-      fs.delete(tmp, false)
-      // training is deterministic, so a concurrent writer that landed
-      // between our delete and rename left an IDENTICAL artifact —
-      // benign; only a rename failure with NO artifact is an error
-      if (!fs.exists(p))
-        throw new java.io.IOException(s"rename $tmp -> $p failed; artifact write aborted")
+  private def writeArtifact(spark: SparkSession, path: String, magic: Int,
+                            shape: Seq[Int], values: Seq[Double]): Unit =
+    graft.util.Artifacts.write(spark, path) { os =>
+      val out = new java.io.DataOutputStream(os)
+      out.writeInt(magic)
+      shape.foreach(out.writeInt)
+      values.foreach(out.writeDouble)
     }
-  }
 
-  /** Load a quantizer written by [[saveCentroids]]. */
-  def loadCentroids(spark: org.apache.spark.sql.SparkSession, path: String): Seq[Seq[Double]] = {
+  private def readArtifact[T](spark: SparkSession, path: String, magic: Int, what: String,
+                              rank: Int)(body: (Seq[Int], java.io.DataInputStream) => T): T = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
     val in = new java.io.DataInputStream(new java.io.BufferedInputStream(fs.open(p)))
     try {
-      require(in.readInt() == 0x47495646, s"$path is not a graft IVF centroid file")
-      val (k, dim) = (in.readInt(), in.readInt())
-      Seq.fill(k)(Seq.fill(dim)(in.readDouble()))
+      require(in.readInt() == magic, s"$path is not a graft $what file")
+      body(Seq.fill(rank)(in.readInt()), in)
     } finally in.close()
   }
+
+  /** Persist a trained quantizer: train once over today's corpus,
+    * save, and every downstream job loads centroids instead of
+    * re-running Lloyd's. Format: magic "GIVF", k, dim, row-major
+    * doubles.
+    *
+    * The write is temp + atomic rename: a reader racing a concurrent
+    * writer of the same artifact sees either the old complete file or
+    * the new complete file, never a torn one. When two writers race,
+    * either complete copy is correct — the artifact is deterministic
+    * for a given corpus.
+    */
+  def saveCentroids(spark: SparkSession, centroids: Seq[Seq[Double]], path: String): Unit = {
+    require(centroids.nonEmpty && centroids.forall(_.size == centroids.head.size),
+      "centroids must be non-empty and rectangular")
+    writeArtifact(spark, path, 0x47495646, Seq(centroids.size, centroids.head.size),
+      centroids.flatten)
+  }
+
+  /** Load a quantizer written by [[saveCentroids]]. */
+  def loadCentroids(spark: SparkSession, path: String): Seq[Seq[Double]] =
+    readArtifact(spark, path, 0x47495646, "IVF centroid", rank = 2) { (shape, in) =>
+      val Seq(k, dim) = shape
+      Seq.fill(k)(Seq.fill(dim)(in.readDouble()))
+    }
 
   /** IVF-flat search with a TRAINED quantizer (vs [[ivfTopK]]'s
     * data-independent hyperplane cells): corpus rows are assigned to
@@ -189,31 +273,11 @@ object KNN {
   def ivfKMeansTopK(corpus: DataFrame, probes: DataFrame,
                     idCol: String, vecCol: String, k: Int,
                     centroids: Seq[Seq[Double]], nprobe: Int = 4): DataFrame = {
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}], got $nprobe")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cidOf = (v: org.apache.spark.sql.Column) =>
-      graft.expressions.VectorExpressions.nearestCentroidF(v, centroids)
-    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      cidOf(col(vecCol)).as("cell"))
-    val centsDf = centroids.zipWithIndex
-      .map { case (cent, i) => (i, cent.map(_.toFloat)) }.toDF("cell", "cvec")
-    val pw = Window.partitionBy(col("probe_id")).orderBy(col("csim").desc, col("cell"))
-    val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"))
-      .crossJoin(broadcast(centsDf))
-      .select(col("probe_id"), col("probe_vec"), col("cell"),
-        cosineF(col("probe_vec"), col("cvec")).as("csim"))
-      .withColumn("rn", row_number().over(pw)).filter(col("rn") <= nprobe)
-      .select(col("probe_id"), col("probe_vec"), col("cell"))
-    val scored = c.join(broadcast(p), Seq("cell"))
-      .filter(col("id") =!= col("probe_id"))
-      .select(col("probe_id"), col("id"),
-        cosineF(col("vec"), col("probe_vec")).as("cos_sim"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val p = nearestCells(probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec")),
+      Seq("probe_id", "probe_vec"), centroids, nprobe)
+    search(corpus, probes, idCol, vecCol, k,
+      corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
+        nearestCentroidF(col(vecCol), centroids).as("cell")), p)
   }
 
   /** Train product-quantization codebooks: per-subspace k-means, all
@@ -241,96 +305,35 @@ object KNN {
     require(k >= 2 && k <= 256, s"codes must fit one byte: k in [2, 256], got $k")
     require(k.toLong * dim <= 16L * 1000 * 1000,
       s"k×dim must fit a driver-side side input, got k=$k dim=$dim")
-    require(iters >= 1 && iters <= 100, s"iters must be in [1, 100], got $iters")
-    val subDim = dim / m
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    import graft.operators.SideInputs
-    val rawVec = col(vecCol)
-    val unit = if (normalizeFirst)
-      graft.functions.VectorFunctions.normalize(rawVec).cast("array<float>") else rawVec
-    val base = corpus.select(col(idCol).as("id"), unit.as("vec"))
-      .filter(size(col("vec")) === dim && !exists(col("vec"), _.isNull))
-    val train = (if (trainFraction < 1.0)
-      base.sample(withReplacement = false, trainFraction, seed) else base).persist()
-    try {
-      val initRows: Seq[Seq[Float]] = SideInputs.asList(
-        train.orderBy(xxhash64(col("id")), col("id")).limit(k)
-          .select(col("vec")).as[Seq[Float]], maxRows = k).value
-      require(initRows.size == k, s"training set has only ${initRows.size} rows for k=$k")
-      var books: Seq[Seq[Seq[Double]]] = (0 until m).map(mi =>
-        initRows.map(_.slice(mi * subDim, (mi + 1) * subDim).map(_.toDouble)))
-      for (_ <- 1 to iters) {
-        val codes = graft.expressions.PqExpressions.pqEncodeF(col("vec"), books)
-        // byte mi of the binary code, extracted with builtins (two hex
-        // chars per byte) — keeps the whole assign+explode projection
-        // codegen'd with no extra kernel.
-        val miCol = (col("pos") / subDim).cast("int")
-        val codeCol = conv(hex(col("codes")).substr(miCol * 2 + 1, lit(2)), 16, 10).cast("int")
-        val means = train
-          .select(codes.as("codes"), posexplode(col("vec")).as(Seq("pos", "x")))
-          .groupBy(miCol.as("mi"), codeCol.as("code"), (col("pos") % subDim).cast("int").as("sp"))
-          .agg(avg(col("x")).as("mean"))
-          .as[(Int, Int, Int, Double)]
-        val byCell = SideInputs.asList(means, maxRows = k * dim).value
-          .groupBy(r => (r._1, r._2))
-        // empty cells keep their previous codeword (standard Lloyd's)
-        books = books.zipWithIndex.map { case (book, mi) =>
-          book.zipWithIndex.map { case (old, c) =>
-            byCell.get((mi, c)).map(_.sortBy(_._3).map(_._4)).getOrElse(old)
-          }
-        }
-      }
-      books
-    } finally { train.unpersist(); () }
+    val vec = if (normalizeFirst) unit(col(vecCol)) else col(vecCol)
+    // byte mi of the binary code, extracted with builtins (two hex
+    // chars per byte) — keeps the whole assign+explode projection
+    // codegen'd with no extra kernel.
+    lloyd(corpus, idCol, vec, k, dim, iters, trainFraction, seed, m)(
+      books => pqEncodeF(col("vec"), books),
+      (codes, mi) => conv(hex(codes).substr(mi * 2 + 1, lit(2)), 16, 10).cast("int"))
   }
 
-  /** Persist trained PQ codebooks (magic, m, k, subDim, row-major
-    * doubles) — same temp + atomic-rename artifact contract as
-    * [[saveCentroids]].
+  /** Persist trained PQ codebooks (magic "GPQ1", m, k, subDim,
+    * row-major doubles) — same temp + atomic-rename artifact contract
+    * as [[saveCentroids]].
     */
-  def savePqCodebooks(spark: org.apache.spark.sql.SparkSession,
-                      codebooks: Seq[Seq[Seq[Double]]], path: String): Unit = {
+  def savePqCodebooks(spark: SparkSession, codebooks: Seq[Seq[Seq[Double]]],
+                      path: String): Unit = {
     graft.expressions.PqCodebooks.validate(codebooks)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.getParent, s".${p.getName}.tmp-${java.util.UUID.randomUUID()}")
-    val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(fs.create(tmp, true)))
-    try {
-      out.writeInt(0x47505131) // "GPQ1"
-      out.writeInt(codebooks.size)
-      out.writeInt(codebooks.head.size)
-      out.writeInt(codebooks.head.head.size)
-      codebooks.foreach(_.foreach(_.foreach(out.writeDouble)))
-    } finally out.close()
-    // as saveCentroids: the artifact is deterministic for a corpus, so
-    // when two writers race either complete copy is correct.
-    fs.delete(p, false)
-    if (!fs.rename(tmp, p)) {
-      fs.delete(tmp, false)
-      // training is deterministic, so a concurrent writer that landed
-      // between our delete and rename left an IDENTICAL artifact —
-      // benign; only a rename failure with NO artifact is an error
-      if (!fs.exists(p))
-        throw new java.io.IOException(s"rename $tmp -> $p failed; artifact write aborted")
-    }
+    writeArtifact(spark, path, 0x47505131,
+      Seq(codebooks.size, codebooks.head.size, codebooks.head.head.size),
+      codebooks.flatten.flatten)
   }
 
   /** Load codebooks written by [[savePqCodebooks]]. */
-  def loadPqCodebooks(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Seq[Seq[Seq[Double]]] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(fs.open(p)))
-    try {
-      require(in.readInt() == 0x47505131, s"$path is not a graft PQ codebook file")
-      val (m, k, subDim) = (in.readInt(), in.readInt(), in.readInt())
+  def loadPqCodebooks(spark: SparkSession, path: String): Seq[Seq[Seq[Double]]] =
+    readArtifact(spark, path, 0x47505131, "PQ codebook", rank = 3) { (shape, in) =>
+      val Seq(m, k, subDim) = shape
       require(m >= 1 && m <= 4096 && k >= 1 && k <= 256 && subDim >= 1 && subDim <= 65536,
         s"$path declares implausible PQ shape m=$m k=$k subDim=$subDim")
       Seq.fill(m)(Seq.fill(k)(Seq.fill(subDim)(in.readDouble())))
-    } finally in.close()
-  }
+    }
 
   /** PQ-compressed ANN: candidates ranked by asymmetric-distance
     * lookups over M-byte codes, then the top `refine` per probe
@@ -357,31 +360,10 @@ object KNN {
              idCol: String, vecCol: String, k: Int,
              codebooks: Seq[Seq[Seq[Double]]], refine: Int = 50): DataFrame = {
     graft.expressions.PqCodebooks.validate(codebooks)
-    require(k >= 1 && refine >= k, s"need refine >= k >= 1, got k=$k refine=$refine")
-    import graft.expressions.PqExpressions._
-    val kk = codebooks.head.size
-    val unit = (c: org.apache.spark.sql.Column) =>
-      graft.functions.VectorFunctions.normalize(c).cast("array<float>")
-    val c = corpus.select(col(idCol).as("id"),
-      pqEncodeF(unit(col(vecCol)), codebooks).as("codes"))
-    val p = probes.select(col(idCol).as("probe_id"),
-      pqLutF(unit(col(vecCol)), codebooks).as("lut"))
-    val wAdc = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc").desc, col("id").asc)
-    val cand = c.crossJoin(broadcast(p))
-      .filter(col("id") =!= col("probe_id"))
-      .select(col("probe_id"), col("id"), pqAdcF(col("codes"), col("lut"), kk).as("adc"))
-      .withColumn("rn", row_number().over(wAdc)).filter(col("rn") <= refine)
-      .select(col("probe_id"), col("id"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("id").asc)
-    cand
-      .join(corpus.select(col(idCol).as("id"), col(vecCol).as("vec")), Seq("id"))
-      .join(broadcast(probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"))),
-        Seq("probe_id"))
-      .select(col("probe_id"), col("id"), cosineF(col("vec"), col("probe_vec")).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    search(corpus, probes, idCol, vecCol, k,
+      corpus.select(col(idCol).as("id"), pqEncodeF(unit(col(vecCol)), codebooks).as("codes")),
+      probes.select(col(idCol).as("probe_id"), pqLutF(unit(col(vecCol)), codebooks).as("lut")),
+      adc = Some((codebooks.head.size, refine)))
   }
 
   /** IVF-PQ: the composed scale architecture (what FAISS calls
@@ -404,46 +386,36 @@ object KNN {
                 centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
                 nprobe: Int = 4, refine: Int = 50): DataFrame = {
     graft.expressions.PqCodebooks.validate(codebooks)
-    require(nprobe >= 1 && nprobe <= centroids.size,
-      s"nprobe must be in [1, ${centroids.size}], got $nprobe")
-    require(k >= 1 && refine >= k, s"need refine >= k >= 1, got k=$k refine=$refine")
-    import graft.expressions.PqExpressions._
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val kk = codebooks.head.size
-    val unit = (c: org.apache.spark.sql.Column) =>
-      graft.functions.VectorFunctions.normalize(c).cast("array<float>")
-    val cidOf = (v: org.apache.spark.sql.Column) =>
-      graft.expressions.VectorExpressions.nearestCentroidF(v, centroids)
-    val c = corpus.select(col(idCol).as("id"), cidOf(col(vecCol)).as("cell"),
-      pqEncodeF(unit(col(vecCol)), codebooks).as("codes"))
     // probe side: nprobe nearest cells (by centroid cosine) × its LUT
-    val centsDf = centroids.zipWithIndex
-      .map { case (cent, i) => (i, cent.map(_.toFloat)) }.toDF("cell", "cvec")
-    val pw = Window.partitionBy(col("probe_id")).orderBy(col("csim").desc, col("cell"))
-    val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"),
-        pqLutF(unit(col(vecCol)), codebooks).as("lut"))
-      .crossJoin(broadcast(centsDf))
-      .select(col("probe_id"), col("lut"), col("cell"),
-        cosineF(col("probe_vec"), col("cvec")).as("csim"))
-      .withColumn("rn", row_number().over(pw)).filter(col("rn") <= nprobe)
-      .select(col("probe_id"), col("lut"), col("cell"))
-    val wAdc = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc").desc, col("id").asc)
-    val cand = c.join(broadcast(p), Seq("cell"))
-      .filter(col("id") =!= col("probe_id"))
-      .select(col("probe_id"), col("id"), pqAdcF(col("codes"), col("lut"), kk).as("adc"))
-      .withColumn("rn", row_number().over(wAdc)).filter(col("rn") <= refine)
-      .select(col("probe_id"), col("id"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("id").asc)
-    cand
-      .join(corpus.select(col(idCol).as("id"), col(vecCol).as("vec")), Seq("id"))
-      .join(broadcast(probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"))),
-        Seq("probe_id"))
-      .select(col("probe_id"), col("id"), cosineF(col("vec"), col("probe_vec")).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val p = nearestCells(probes.select(col(idCol).as("probe_id"), col(vecCol).as("probe_vec"),
+      pqLutF(unit(col(vecCol)), codebooks).as("lut")), Seq("probe_id", "lut"), centroids, nprobe)
+    search(corpus, probes, idCol, vecCol, k,
+      corpus.select(col(idCol).as("id"), nearestCentroidF(col(vecCol), centroids).as("cell"),
+        pqEncodeF(unit(col(vecCol)), codebooks).as("codes")), p,
+      adc = Some((codebooks.head.size, refine)))
+  }
+
+  /** Distributed search over a driver-built local index (Annoy,
+    * Voyager): broadcast the index once and probe it per partition.
+    * `query` returns one probe's (item, score) hits, best first; the
+    * output is (probe_id, rank, `item`, `score`), rank 1 = best.
+    */
+  private[similarity] def searchLocalIndex[I: scala.reflect.ClassTag](
+      index: I, probes: DataFrame, idCol: String, vecCol: String, item: StructField,
+      score: StructField)(query: (I, Array[Float]) => Seq[(Any, Double)]): DataFrame = {
+    val bc = probes.sparkSession.sparkContext.broadcast(index)
+    implicit val enc: org.apache.spark.sql.Encoder[Row] = RowEncoder.encoderFor(StructType(Seq(
+      StructField("probe_id", LongType, nullable = false),
+      StructField("rank", IntegerType, nullable = false), item, score)))
+    probes.select(col(idCol).cast("long"), col(vecCol)).mapPartitions { rows =>
+      val idx = bc.value
+      rows.flatMap { r =>
+        val pid = r.getLong(0)
+        query(idx, r.getSeq[Float](1).toArray).zipWithIndex.map { case ((it, s), rank) =>
+          Row(pid, rank + 1, it, s)
+        }
+      }
+    }
   }
 
   /** Embedding-based near-dup detection: nearest neighbor per probe
@@ -474,17 +446,10 @@ object KNN {
                    dim: Int, cellBits: Int = 4, seed: Long = 42L,
                    maxBucket: Int = 100000): DataFrame = {
     require(maxBucket > 0, s"maxBucket must be positive, got $maxBucket")
-    val planes = hyperplanes(dim, cellBits, seed).map(_.toSeq).toSeq
-    val cellOf = (v: org.apache.spark.sql.Column) =>
-      graft.expressions.VectorExpressions.hyperplaneCellF(v, planes)
-    val withCell = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      cellOf(col(vecCol)).as("cell"))
-    val hotCells = withCell.groupBy(col("cell")).count()
-      .filter(col("count") > maxBucket).select(col("cell"))
-    val cool = withCell.join(broadcast(hotCells), Seq("cell"), "left_anti")
-    val ball = (own: org.apache.spark.sql.Column) =>
-      array(own +: (0 until cellBits).map(b => own.bitwiseXOR(lit(1L << b))): _*)
-    val probed = cool.select(col("id"), col("vec"), explode(ball(col("cell"))).as("cell"))
+    val (cool, hotCells) = withoutHot(corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
+      cellOf(col(vecCol), dim, cellBits, seed).as("cell")), "cell", maxBucket)
+    val probed = cool
+      .select(col("id"), col("vec"), explode(hammingBall(col("cell"), cellBits)).as("cell"))
       .join(broadcast(hotCells), Seq("cell"), "left_anti")
     probed.as("a")
       .join(cool.as("b"), col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
@@ -493,21 +458,6 @@ object KNN {
       .filter(col("cos_sim") >= threshold)
   }
 
-  /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
-    * at web-scale through semantic deduplication"): k-means clusters
-    * bound the pair search — cosine comparisons happen only WITHIN a
-    * cluster, never across, so the quadratic term is per-cluster and
-    * capped — and a point is dropped when a lower-id point in its
-    * cluster sits above the cosine threshold (the paper keeps one
-    * representative per semantic-dup group; min id makes that choice
-    * deterministic). Returns (id, cluster, keep).
-    *
-    * Pass centroids from [[trainIvfCentroids]] (train once, persist,
-    * reuse — the quantizer artifact contract). Clusters larger than
-    * `maxCluster` are excluded from pair generation and their members
-    * kept — the hot-bucket contract of [[nearDupPairs]]: a degenerate
-    * mega-cluster belongs to exact/minhash dedup, not an O(m²) scan.
-    */
   /** Per-row nearest-centroid assignment + cosine similarity to that
     * centroid — embedding-space quality scoring: rows far from every
     * cluster of the (historical) corpus are OOD/noise/garbage
@@ -523,7 +473,7 @@ object KNN {
                          centroids: Seq[Seq[Double]]): DataFrame = {
     require(centroids.nonEmpty, "need at least one centroid")
     val centLit = typedLit(centroids.map(_.map(_.toFloat)))
-    val idx = graft.expressions.VectorExpressions.nearestCentroidF(col(vecCol), centroids)
+    val idx = nearestCentroidF(col(vecCol), centroids)
     df.select(col(idCol).as("id"), idx.as("cluster"),
       round(cosineF(col(vecCol).cast("array<float>"),
         element_at(centLit, idx + 1)), 6).as("centroid_sim"))
@@ -548,17 +498,29 @@ object KNN {
     */
   val DefaultMaxCluster: Int = 100000
 
+  /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
+    * at web-scale through semantic deduplication"): k-means clusters
+    * bound the pair search — cosine comparisons happen only WITHIN a
+    * cluster, never across, so the quadratic term is per-cluster and
+    * capped — and a point is dropped when a lower-id point in its
+    * cluster sits above the cosine threshold (the paper keeps one
+    * representative per semantic-dup group; min id makes that choice
+    * deterministic). Returns (id, cluster, keep).
+    *
+    * Pass centroids from [[trainIvfCentroids]] (train once, persist,
+    * reuse — the quantizer artifact contract). Clusters larger than
+    * `maxCluster` are excluded from pair generation and their members
+    * kept — the hot-bucket contract of [[nearDupPairs]]: a degenerate
+    * mega-cluster belongs to exact/minhash dedup, not an O(m²) scan.
+    */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
                     centroids: Seq[Seq[Double]], threshold: Double,
                     maxCluster: Int = DefaultMaxCluster): DataFrame = {
     require(maxCluster > 0, s"maxCluster must be positive, got $maxCluster")
     require(threshold > 0 && threshold <= 1, s"threshold must be in (0,1], got $threshold")
     val assigned = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      graft.expressions.VectorExpressions.nearestCentroidF(col(vecCol), centroids)
-        .as("cluster"))
-    val hot = assigned.groupBy(col("cluster")).count()
-      .filter(col("count") > maxCluster).select(col("cluster"))
-    val cool = assigned.join(broadcast(hot), Seq("cluster"), "left_anti")
+      nearestCentroidF(col(vecCol), centroids).as("cluster"))
+    val (cool, _) = withoutHot(assigned, "cluster", maxCluster)
     val dominated = cool.as("a")
       .join(cool.as("b"), col("a.cluster") === col("b.cluster") && col("a.id") < col("b.id"))
       .filter(cosineF(col("a.vec"), col("b.vec")) >= threshold)

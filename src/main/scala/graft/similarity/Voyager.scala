@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -764,18 +763,17 @@ object Voyager {
 
   // ---------------------------------------------------------------- files
 
-  private def writeFile(fs: FileSystem, p: Path, bytes: Array[Byte]): Unit = {
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    fs.delete(p, false)
-    // a false rename must be loud: returning normally here would report a
-    // "successful" write that produced no artifact (and the delete above
-    // may already have removed the previous one)
-    if (!fs.rename(tmp, p)) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(s"rename $tmp -> $p failed; index write aborted")
-    }
+  /** `parseIt(index.hnsw bytes, names.json names or null)` under `dir`. */
+  private def readDir(spark: SparkSession, dir: String)
+                     (parseIt: (Array[Byte], Array[String]) => Index): Index = {
+    val d = new Path(dir)
+    val fs = FileSystem.get(d.toUri, spark.sparkContext.hadoopConfiguration)
+    val namesPath = new Path(d, NamesFile)
+    val names =
+      if (fs.exists(namesPath))
+        parseNames(new String(readFile(fs, namesPath), StandardCharsets.UTF_8))
+      else null
+    parseIt(readFile(fs, new Path(d, IndexFile)), names)
   }
 
   private def readFile(fs: FileSystem, p: Path): Array[Byte] = {
@@ -798,39 +796,22 @@ object Voyager {
     val nm =
       if (names != null) names
       else (0 until index.nItems).map(i => index.name(index.labels(i)))
-    writeFile(fs, new Path(d, IndexFile), indexBytes)
-    writeFile(fs, new Path(d, NamesFile),
-      renderNames(nm).getBytes(StandardCharsets.UTF_8))
+    graft.util.Artifacts.write(spark, new Path(d, IndexFile).toString)(_.write(indexBytes))
+    graft.util.Artifacts.write(spark, new Path(d, NamesFile).toString)(
+      _.write(renderNames(nm).getBytes(StandardCharsets.UTF_8)))
   }
 
   /** Load a VoyagerUri directory: settings from the index metadata
     * (the reference's MetadataSettings path). names.json is optional —
     * without it, names fall back to numeric labels.
     */
-  def read(spark: SparkSession, dir: String): Index = {
-    val d = new Path(dir)
-    val fs = FileSystem.get(d.toUri, spark.sparkContext.hadoopConfiguration)
-    val namesPath = new Path(d, NamesFile)
-    val names =
-      if (fs.exists(namesPath))
-        parseNames(new String(readFile(fs, namesPath), StandardCharsets.UTF_8))
-      else null
-    parse(readFile(fs, new Path(d, IndexFile)), names)
-  }
+  def read(spark: SparkSession, dir: String): Index = readDir(spark, dir)(parse(_, _))
 
   /** Load a headerless (v0 / stock hnswlib) index with provided
     * settings — the reference's ProvidedSettings path.
     */
-  def read(spark: SparkSession, dir: String, space: Int, dim: Int, storage: Int): Index = {
-    val d = new Path(dir)
-    val fs = FileSystem.get(d.toUri, spark.sparkContext.hadoopConfiguration)
-    val namesPath = new Path(d, NamesFile)
-    val names =
-      if (fs.exists(namesPath))
-        parseNames(new String(readFile(fs, namesPath), StandardCharsets.UTF_8))
-      else null
-    parse(readFile(fs, new Path(d, IndexFile)), names, space, dim, storage)
-  }
+  def read(spark: SparkSession, dir: String, space: Int, dim: Int, storage: Int): Index =
+    readDir(spark, dir)(parse(_, _, space, dim, storage))
 
   /** Distributed search: broadcast the index once, probe per
     * partition. Output (probe_id, rank, name, distance) — the
@@ -838,25 +819,10 @@ object Voyager {
     * distance conventions (squared L2 / 1 − dot).
     */
   def searchTopK(index: Index, probes: DataFrame, idCol: String, vecCol: String,
-                 k: Int, ef: Int): DataFrame = {
-    val spark = probes.sparkSession
-    val bc = spark.sparkContext.broadcast(index)
-    val schema = StructType(Seq(
-      StructField("probe_id", LongType, nullable = false),
-      StructField("rank", IntegerType, nullable = false),
-      StructField("name", StringType, nullable = false),
-      StructField("distance", DoubleType, nullable = false)))
-    implicit val enc = RowEncoder.encoderFor(schema)
-    probes.select(col(idCol).cast("long"), col(vecCol))
-      .mapPartitions { rows =>
-        val idx = bc.value
-        rows.flatMap { r =>
-          val pid = r.getLong(0)
-          val q = r.getSeq[Float](1).toArray
-          idx.query(q, k, ef).zipWithIndex.map { case ((node, d), rank) =>
-            Row(pid, rank + 1, idx.name(idx.labels(node)), d)
-          }
-        }
-      }
-  }
+                 k: Int, ef: Int): DataFrame =
+    KNN.searchLocalIndex(index, probes, idCol, vecCol,
+        StructField("name", StringType, nullable = false),
+        StructField("distance", DoubleType, nullable = false)) { (idx, q) =>
+      idx.query(q, k, ef).map { case (node, d) => (idx.name(idx.labels(node)), d) }
+    }
 }

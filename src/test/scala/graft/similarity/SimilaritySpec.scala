@@ -255,6 +255,70 @@ class SimilaritySpec extends SparkSpec {
     assert(err.getMessage.contains("not a graft PQ codebook"))
   }
 
+  test("GIVF and GPQ1 formats are pinned: hand-written files load, save writes the same bytes") {
+    def bytes(write: java.io.DataOutputStream => Unit): Array[Byte] = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val out = new java.io.DataOutputStream(buf)
+      write(out)
+      out.flush()
+      buf.toByteArray
+    }
+    // magic, shape ints, row-major big-endian doubles
+    val cents = Seq(Seq(1.5, -2.0, 0.1), Seq(3.0, 4.25, -7e-3))
+    val givf = bytes { o =>
+      o.writeInt(0x47495646); o.writeInt(2); o.writeInt(3); cents.flatten.foreach(o.writeDouble)
+    }
+    val books = Seq(Seq(Seq(0.5, 1.0), Seq(-1.0, 2.0), Seq(0.3, 0.7)),
+      Seq(Seq(3.0, 0.25), Seq(7.0, -8.5), Seq(1e-9, 1e9)))
+    val gpq = bytes { o =>
+      o.writeInt(0x47505131); o.writeInt(2); o.writeInt(3); o.writeInt(2)
+      books.flatten.flatten.foreach(o.writeDouble)
+    }
+    val d = java.nio.file.Files.createTempDirectory("graft_formats").toFile
+    d.deleteOnExit()
+    def file(name: String) = java.nio.file.Paths.get(d.getAbsolutePath, name)
+    java.nio.file.Files.write(file("hand.givf"), givf)
+    java.nio.file.Files.write(file("hand.gpq"), gpq)
+    assert(KNN.loadCentroids(spark, file("hand.givf").toString) == cents)
+    assert(KNN.loadPqCodebooks(spark, file("hand.gpq").toString) == books)
+    KNN.saveCentroids(spark, cents, file("saved.givf").toString)
+    KNN.savePqCodebooks(spark, books, file("saved.gpq").toString)
+    assert(java.nio.file.Files.readAllBytes(file("saved.givf")).sameElements(givf))
+    assert(java.nio.file.Files.readAllBytes(file("saved.gpq")).sameElements(gpq))
+  }
+
+  test("plan shape: each search's final plan has one WindowGroupLimit per bounded rank") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.{Final, WindowGroupLimitExec}
+    object Plans extends AdaptiveSparkPlanHelper
+    // a bounded rank plans as a Final limit, with a Partial one below
+    // the shuffle unless Spark finds it redundant; count the Final ones
+    def limits(df: org.apache.spark.sql.DataFrame): Int = {
+      df.collect()
+      Plans.collect(df.queryExecution.executedPlan) {
+        case w: WindowGroupLimitExec if w.mode == Final => w
+      }.size
+    }
+    val dim = 16; val k = 5
+    val corpus = clustered(dim, 10, 30)
+    val probes = corpus.filter(col("vec_id") % 30 === 0)
+    val cents = KNN.trainIvfCentroids(corpus, "vec_id", "embedding", k = 10, dim = dim, iters = 2)
+    val books = KNN.trainPqCodebooks(corpus, "vec_id", "embedding",
+      m = 4, k = 16, dim = dim, iters = 2)
+    // realistic knobs: the k, nprobe and refine bounds are all under
+    // Spark's WindowGroupLimit threshold
+    val counts = Map(
+      "brute" -> limits(KNN.bruteForceTopK(corpus, probes, "vec_id", "embedding", k)),
+      "ivf" -> limits(KNN.ivfTopK(corpus, probes, "vec_id", "embedding", k, dim)),
+      "ivfKMeans" -> limits(KNN.ivfKMeansTopK(corpus, probes, "vec_id", "embedding", k,
+        cents, nprobe = 3)),
+      "pq" -> limits(KNN.pqTopK(corpus, probes, "vec_id", "embedding", k, books, refine = 30)),
+      "ivfPq" -> limits(KNN.ivfPqTopK(corpus, probes, "vec_id", "embedding", k,
+        cents, books, nprobe = 3, refine = 30)))
+    assert(counts == Map("brute" -> 1, "ivf" -> 1, "ivfKMeans" -> 2, "pq" -> 2, "ivfPq" -> 3),
+      s"WindowGroupLimitExec nodes per search: $counts")
+  }
+
   test("pqTopK: exact emitted scores, high recall at modest refine, brute-exact at full refine") {
     val dim = 16; val k = 5
     val corpus = clustered(dim, 10, 30)

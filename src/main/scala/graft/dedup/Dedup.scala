@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.operators.Fixpoint
+import graft.util.Artifacts
 
 /** Document deduplication for training-data pipelines.
   *
@@ -796,34 +797,24 @@ object Dedup {
     val bandRows = sigs.select(col("id"), posexplode(col("bandhashes")).as(Seq("band", "bh")))
       .withColumn("n", count(lit(1)).over(Window.partitionBy(col("band"), col("bh"))))
     bandRows.write.mode("overwrite").parquet(s"$path/bands")
-    val meta = new org.apache.hadoop.fs.Path(s"$path/$MinhashIndexMeta")
-    val fs = org.apache.hadoop.fs.FileSystem.get(meta.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(meta, true)
-    out.write(
-      s"""{"shingleK":$shingleK,"numHashes":$numHashes,"bands":$bands}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    writeMinhashIndexParams(spark, path, MinhashIndexParams(shingleK, numHashes, bands))
   }
+
+  private def writeMinhashIndexParams(spark: org.apache.spark.sql.SparkSession, path: String,
+                                      p: MinhashIndexParams): Unit =
+    Artifacts.writeJson(spark, s"$path/$MinhashIndexMeta", Artifacts.json.createObjectNode()
+      .put("shingleK", p.shingleK).put("numHashes", p.numHashes).put("bands", p.bands))
 
   /** Read back a MinHash index's parameter sidecar (loud failure when
     * absent — the directory is not an index artifact).
     */
   def loadMinhashIndexParams(spark: org.apache.spark.sql.SparkSession,
                              path: String): MinhashIndexParams = {
-    val meta = new org.apache.hadoop.fs.Path(s"$path/$MinhashIndexMeta")
-    val fs = org.apache.hadoop.fs.FileSystem.get(meta.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(meta),
-      s"$path is not a graft MinHash index (no $MinhashIndexMeta sidecar)")
-    val in = fs.open(meta)
-    val raw = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    def field(name: String): Int = {
-      val m = s""""$name"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(raw)
-      require(m.isDefined, s"malformed $MinhashIndexMeta sidecar at $path: $raw")
-      m.get.group(1).toInt
-    }
+    def malformed(raw: Any) = s"malformed $MinhashIndexMeta sidecar at $path: $raw"
+    val n = Artifacts.readJson(spark, s"$path/$MinhashIndexMeta",
+      s"$path is not a graft MinHash index (no $MinhashIndexMeta sidecar)", malformed("not JSON"))
+    def field(name: String): Int =
+      Artifacts.field(n, name, malformed(n))(v => v.isInt && v.intValue >= 0).intValue
     MinhashIndexParams(field("shingleK"), field("numHashes"), field("bands"))
   }
 
@@ -899,14 +890,7 @@ object Dedup {
       freshCounts0.unpersist()
       ()
     } finally { fresh.unpersist(); () }
-    val meta = new org.apache.hadoop.fs.Path(s"$outPath/$MinhashIndexMeta")
-    val fs = org.apache.hadoop.fs.FileSystem.get(meta.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(meta, true)
-    out.write(
-      s"""{"shingleK":${p.shingleK},"numHashes":${p.numHashes},"bands":${p.bands}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    writeMinhashIndexParams(spark, outPath, p)
   }
 
   /** Near-dup candidates of NEW docs against a persisted MinHash

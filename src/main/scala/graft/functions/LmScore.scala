@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import TextFunctions.tokens
+import graft.util.Artifacts
 
 /** Corpus-LM quality scoring (the CCNet recipe, unigram form): score
   * each document by its mean negative log-probability under a
@@ -158,13 +159,8 @@ object LmScore {
     val Array(t, v) = spark.read.parquet(s"$path/vocab")
       .agg(sum(col("n")), count(lit(1)))
       .collect()(0).toSeq.map(x => Option(x).map(_.toString.toLong).getOrElse(0L)).toArray
-    val meta = new org.apache.hadoop.fs.Path(s"$path/$UnigramMeta")
-    val fs = org.apache.hadoop.fs.FileSystem.get(meta.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(meta, true)
-    out.write(s"""{"totalTokens":$t,"vocabSize":$v}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    Artifacts.writeJson(spark, s"$path/$UnigramMeta",
+      Artifacts.json.createObjectNode().put("totalTokens", t).put("vocabSize", v))
   }
 
   /** Score ANY crawl against a persisted unigram model: same
@@ -179,19 +175,12 @@ object LmScore {
                             modelPath: String, alpha: Double = 1.0): DataFrame = {
     require(alpha > 0, s"alpha must be positive, got $alpha")
     val spark = df.sparkSession
-    val meta = new org.apache.hadoop.fs.Path(s"$modelPath/$UnigramMeta")
-    val fs = org.apache.hadoop.fs.FileSystem.get(meta.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(meta),
-      s"$modelPath is not a graft unigram-LM artifact (no $UnigramMeta sidecar)")
-    val in = fs.open(meta)
-    val raw = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    def field(name: String): Long = {
-      val m = s""""$name"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(raw)
-      require(m.isDefined, s"malformed $UnigramMeta sidecar at $modelPath: $raw")
-      m.get.group(1).toLong
-    }
+    def malformed(raw: Any) = s"malformed $UnigramMeta sidecar at $modelPath: $raw"
+    val n = Artifacts.readJson(spark, s"$modelPath/$UnigramMeta",
+      s"$modelPath is not a graft unigram-LM artifact (no $UnigramMeta sidecar)",
+      malformed("not JSON"))
+    def field(name: String): Long = Artifacts.field(n, name, malformed(n))(v =>
+      v.isIntegralNumber && v.canConvertToLong && v.longValue >= 0).longValue
     val denom = field("totalTokens") + alpha * (field("vocabSize") + 1)
     val vocab = spark.read.parquet(s"$modelPath/vocab")
     val terms = df

@@ -1,8 +1,5 @@
 package graft.hash
 
-import java.io.BufferedInputStream
-
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -64,12 +61,8 @@ object GraftBloom {
     graft.util.Artifacts.write(spark, path)(bf.writeTo)
 
   /** Load a previously written filter. */
-  def read(spark: SparkSession, path: String): BloomFilter = {
-    val p = new Path(path)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val in = new BufferedInputStream(fs.open(p))
-    try BloomFilter.readFrom(in) finally in.close()
-  }
+  def read(spark: SparkSession, path: String): BloomFilter =
+    graft.util.Artifacts.read(spark, path)(BloomFilter.readFrom)
 
   /** Membership-probe column over `df(key)`: native codegen, one
     * static call per row, null keys probe as absent. The filter ships

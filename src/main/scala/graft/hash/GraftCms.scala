@@ -1,6 +1,5 @@
 package graft.hash
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -55,12 +54,8 @@ object GraftCms {
   def write(spark: SparkSession, cms: CountMinSketch, path: String): Unit =
     graft.util.Artifacts.write(spark, path)(cms.writeTo)
 
-  def read(spark: SparkSession, path: String): CountMinSketch = {
-    val p = new Path(path)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val in = new java.io.BufferedInputStream(fs.open(p))
-    try CountMinSketch.readFrom(in) finally in.close()
-  }
+  def read(spark: SparkSession, path: String): CountMinSketch =
+    graft.util.Artifacts.read(spark, path)(CountMinSketch.readFrom)
 
   /** Per-row frequency-estimate column over `df(key)`: native
     * codegen, one static call per row; null keys estimate 0.

@@ -2,7 +2,6 @@ package graft.hash
 
 import java.io.{DataInputStream, DataOutputStream}
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -134,11 +133,9 @@ object ScalableBloom {
   }
 
   /** Load a previously written filter stack. */
-  def read(spark: SparkSession, path: String): ScalableBloom = {
-    val p = new Path(path)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val in = new DataInputStream(new java.io.BufferedInputStream(fs.open(p)))
-    try {
+  def read(spark: SparkSession, path: String): ScalableBloom =
+    graft.util.Artifacts.read(spark, path) { is =>
+      val in = new DataInputStream(is)
       require(in.readInt() == Magic, s"$path is not a graft scalable Bloom filter")
       val (cap0, fpp) = (in.readLong(), in.readDouble())
       val (gr, tr) = (in.readInt(), in.readDouble())
@@ -150,6 +147,5 @@ object ScalableBloom {
         Slice(BloomFilter.readFrom(new java.io.ByteArrayInputStream(buf)), cap, err, count)
       }.toList
       new ScalableBloom(cap0, fpp, gr, tr, slices)
-    } finally in.close()
-  }
+    }
 }

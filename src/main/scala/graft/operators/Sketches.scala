@@ -1,12 +1,13 @@
 package graft.operators
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileSystem, Path}
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 import graft.expressions.SketchColumns._
+import graft.util.Artifacts
 
 /** Mergeable distinct-count sketches as PERSISTED, incrementally
   * growable artifacts — the cross-crawl accounting layer of a 100 TB
@@ -263,40 +264,26 @@ object Sketches {
     writeMeta(df.sparkSession, path, p)
   }
 
-  private val json = new ObjectMapper()
-
-  private def metaFile(spark: SparkSession, path: String): (FileSystem, Path) = {
-    val meta = new Path(s"$path/$Meta")
-    (FileSystem.get(meta.toUri, spark.sparkContext.hadoopConfiguration), meta)
-  }
-
   private def writeMeta(spark: SparkSession, path: String,
                         p: SketchIndexParams): Unit = {
-    val node = json.createObjectNode().put("kind", p.kind).put("lgK", p.lgK)
+    val node = Artifacts.json.createObjectNode().put("kind", p.kind).put("lgK", p.lgK)
       .put("valueCol", p.valueCol).put("weightCol", p.weightCol)
     val groups = node.putArray("groupCols")
     p.groupCols.foreach(g => groups.add(g))
-    val (fs, meta) = metaFile(spark, path)
-    val out = fs.create(meta, true)
-    try out.write(json.writeValueAsBytes(node)) finally out.close()
+    Artifacts.writeJson(spark, s"$path/$Meta", node)
   }
 
   /** Read back an index's parameter sidecar (loud failure when absent —
     * the directory is not a sketch artifact).
     */
   def loadIndexParams(spark: SparkSession, path: String): SketchIndexParams = {
-    val (fs, meta) = metaFile(spark, path)
-    require(fs.exists(meta), s"$path is not a graft sketch index (no $Meta sidecar)")
-    val in = fs.open(meta)
-    val n = try json.readTree(in) finally in.close()
-    def field(name: String, ok: com.fasterxml.jackson.databind.JsonNode => Boolean) = {
-      val v = n.path(name)
-      require(ok(v), s"malformed $Meta sidecar at $path: $n")
-      v
-    }
-    val groups = field("groupCols", g => g.isArray && g.elements().asScala.forall(_.isTextual))
-    SketchIndexParams(field("kind", _.isTextual).asText, field("lgK", _.isInt).asInt,
-      field("valueCol", _.isTextual).asText, groups.elements().asScala.map(_.asText).toSeq,
+    def malformed(n: Any) = s"malformed $Meta sidecar at $path: $n"
+    val n = Artifacts.readJson(spark, s"$path/$Meta",
+      s"$path is not a graft sketch index (no $Meta sidecar)", malformed("not JSON"))
+    def field(name: String)(ok: JsonNode => Boolean) = Artifacts.field(n, name, malformed(n))(ok)
+    val groups = field("groupCols")(g => g.isArray && g.elements().asScala.forall(_.isTextual))
+    SketchIndexParams(field("kind")(_.isTextual).asText, field("lgK")(_.isInt).asInt,
+      field("valueCol")(_.isTextual).asText, groups.elements().asScala.map(_.asText).toSeq,
       // weightCol is absent in pre-varopt sidecars → ""
       n.path("weightCol").asText(""))
   }

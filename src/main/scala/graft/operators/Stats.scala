@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+import graft.util.Artifacts
 
 /** Bucketed histograms with the reference's exact interval contract
   * (scio-core values/DoubleSCollectionFunctions.scala:108 `histogram`,
@@ -158,34 +161,25 @@ object Stats {
       .collect()(0).getAs[scala.collection.Seq[Double]](0)
     require(grid != null && grid.nonEmpty,
       s"cannot build a quantile grid over an empty/all-null '$colName'")
-    val meta = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(meta.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(meta, true)
     // raw bits, not decimal rendering: the probe-side <= compares must
     // see the EXACT doubles the aggregation produced
-    out.write((s"""{"marker":"$QuantileMeta","gridSize":$gridSize,"bits":[""" +
-      grid.map(d => java.lang.Double.doubleToLongBits(d).toString).mkString(",") +
-      "]}").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    val node = Artifacts.json.createObjectNode().put("marker", QuantileMeta)
+      .put("gridSize", gridSize)
+    val bits = node.putArray("bits")
+    grid.foreach(d => bits.add(java.lang.Double.doubleToLongBits(d)))
+    Artifacts.writeJson(spark, path, node)
   }
 
   /** Load a quantile grid's boundary values. */
   def loadQuantileGrid(spark: org.apache.spark.sql.SparkSession,
                        path: String): Array[Double] = {
-    val meta = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(meta.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(meta), s"$path does not exist")
-    val in = fs.open(meta)
-    val raw = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    require(raw.contains(s""""marker":"$QuantileMeta""""),
-      s"$path is not a graft quantile-grid artifact")
-    val bits = """"bits":\[([^\]]*)\]""".r.findFirstMatchIn(raw)
-      .getOrElse(throw new IllegalArgumentException(s"malformed quantile grid at $path"))
-      .group(1)
-    bits.split(",").map(s => java.lang.Double.longBitsToDouble(s.trim.toLong))
+    val notGrid = s"$path is not a graft quantile-grid artifact"
+    val n = Artifacts.readJson(spark, path, s"$path does not exist", notGrid)
+    require(n.path("marker").asText == QuantileMeta, notGrid)
+    Artifacts.field(n, "bits", s"malformed quantile grid at $path")(b =>
+      b.isArray && !b.isEmpty &&
+        b.elements().asScala.forall(v => v.isIntegralNumber && v.canConvertToLong))
+      .elements().asScala.map(b => java.lang.Double.longBitsToDouble(b.asLong)).toArray
   }
 
   /** Percentile rank of `colName` against a PERSISTED grid

@@ -205,12 +205,10 @@ object Bpe {
   }
 
   /** Load a model written by [[save]]; malformed files fail loudly. */
-  def load(spark: SparkSession, path: String): Model = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-      fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
-    try {
+  def load(spark: SparkSession, path: String): Model =
+    graft.util.Artifacts.read(spark, path) { is =>
+      val in = new java.io.BufferedReader(
+        new java.io.InputStreamReader(is, java.nio.charset.StandardCharsets.UTF_8))
       val header = Option(in.readLine()).getOrElse(
         throw new IllegalArgumentException(s"$path: empty BPE model file"))
       val h = header.split("\t", -1)
@@ -224,6 +222,5 @@ object Bpe {
         (parts(0), parts(1))
       }
       Model(merges, h(2).toBoolean)
-    } finally in.close()
-  }
+    }
 }

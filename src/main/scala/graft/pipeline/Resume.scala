@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.Artifacts
+
 /** Marker-committed stage checkpointing — restartable multi-stage
   * pipelines over plain parquet. At 100 TB a curation DAG runs for
   * hours across many shuffle barriers; when an executor pool dies at
@@ -123,10 +125,8 @@ object Resume {
             .write.mode("overwrite").parquet(dataPath)
           spark.read.parquet(dataPath)
       }
-    val meta = s"""{"rows":${committed.count()},"schema":"${committed.schema.toDDL
-        .replace("\\", "\\\\").replace("\"", "\\\"")}"}"""
-    val m = fs.create(new Path(p, Complete), true)
-    try m.write(meta.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally m.close()
+    Artifacts.writeJson(spark, new Path(p, Complete).toString, Artifacts.json.createObjectNode()
+      .put("rows", committed.count()).put("schema", committed.schema.toDDL))
     committed
   }
 

@@ -185,10 +185,7 @@ object SyntaxQueries extends QueryPack {
       graft.sources.Sources.saveAsZstdDictionary(
         docs.select(col("text")), "text", dictPath,
         dictSizeBytes = 16 * 1024, maxTrainingBytes = 4L * 1024 * 1024)
-      val fs = new org.apache.hadoop.fs.Path(dictPath)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val in = fs.open(new org.apache.hadoop.fs.Path(dictPath))
-      val dict = try in.readAllBytes() finally in.close()
+      val dict = graft.util.Artifacts.readBytes(s, dictPath)
       val bc = s.sparkContext.broadcast(dict)
       docs.select(col("doc_id"), col("text")).as[(Long, String)]
         .mapPartitions { it =>

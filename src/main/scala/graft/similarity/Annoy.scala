@@ -2,7 +2,6 @@ package graft.similarity
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -359,16 +358,8 @@ object Annoy {
   def write(spark: SparkSession, index: Index, path: String): Unit =
     graft.util.Artifacts.write(spark, path)(_.write(index.bytes))
 
-  def read(spark: SparkSession, path: String, dim: Int, metric: String = Angular): Index = {
-    val p = new Path(path)
-    val fs = FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val len = fs.getFileStatus(p).getLen
-    require(len <= Int.MaxValue, s"$path too large to map ($len bytes)")
-    val in = fs.open(p)
-    val bytes = new Array[Byte](len.toInt)
-    try in.readFully(0, bytes) finally in.close()
-    parse(bytes, dim, metric)
-  }
+  def read(spark: SparkSession, path: String, dim: Int, metric: String = Angular): Index =
+    parse(graft.util.Artifacts.readBytes(spark, path), dim, metric)
 
   /** Distributed search: broadcast the index once, probe per
     * partition. Output (probe_id, rank, item_id, score) where score

@@ -227,15 +227,12 @@ object KNN {
     }
 
   private def readArtifact[T](spark: SparkSession, path: String, magic: Int, what: String,
-                              rank: Int)(body: (Seq[Int], java.io.DataInputStream) => T): T = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri, spark.sparkContext.hadoopConfiguration)
-    val in = new java.io.DataInputStream(new java.io.BufferedInputStream(fs.open(p)))
-    try {
+                              rank: Int)(body: (Seq[Int], java.io.DataInputStream) => T): T =
+    graft.util.Artifacts.read(spark, path) { is =>
+      val in = new java.io.DataInputStream(is)
       require(in.readInt() == magic, s"$path is not a graft $what file")
       body(Seq.fill(rank)(in.readInt()), in)
-    } finally in.close()
-  }
+    }
 
   /** Persist a trained quantizer: train once over today's corpus,
     * save, and every downstream job loads centroids instead of

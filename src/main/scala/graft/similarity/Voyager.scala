@@ -3,10 +3,14 @@ package graft.similarity
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
+
+import graft.util.Artifacts
 
 /** Voyager index files — the on-disk format of spotify/voyager, the
   * HNSW library scio ships as an ANN side input (reference:
@@ -457,50 +461,22 @@ object Voyager {
 
   // ---------------------------------------------------------------- names
 
-  /** names.json: a JSON array of strings, indexed by label (the
-    * reference writes it unescaped; we parse the standard escapes).
+  /** names.json: a JSON array of strings, indexed by label. The
+    * reference writes names unescaped, so raw control characters and
+    * a backslash before any character are accepted on read.
     */
   def parseNames(json: String): Array[String] = {
-    val s = json.trim
-    require(s.startsWith("[") && s.endsWith("]"), "names.json must be a JSON array")
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var i = 1
-    var inStr = false
-    while (i < s.length - 1 || (inStr && i < s.length)) {
-      val c = s.charAt(i)
-      if (!inStr) {
-        if (c == '"') { inStr = true; sb.clear() }
-        else require(c == ',' || c.isWhitespace, s"unexpected '$c' in names.json")
-        i += 1
-      } else if (c == '\\') {
-        require(i + 1 < s.length, "dangling escape in names.json")
-        s.charAt(i + 1) match {
-          case 'u' =>
-            require(i + 5 < s.length, "bad \\u escape in names.json")
-            val hex = s.substring(i + 2, i + 6)
-            require(hex.forall(ch => Character.digit(ch, 16) >= 0),
-              s"bad \\u escape in names.json: \\u$hex")
-            sb.append(Integer.parseInt(hex, 16).toChar)
-            i += 6
-          case 'n' => sb.append('\n'); i += 2
-          case 't' => sb.append('\t'); i += 2
-          case 'r' => sb.append('\r'); i += 2
-          case 'b' => sb.append('\b'); i += 2
-          case 'f' => sb.append('\f'); i += 2
-          case '/' => sb.append('/'); i += 2
-          case other => sb.append(other); i += 2 // covers \" and \\
-        }
-      } else if (c == '"') { inStr = false; out += sb.toString; i += 1 }
-      else { sb.append(c); i += 1 }
-    }
-    require(!inStr, "unterminated string in names.json")
-    out.toArray
+    val n = Artifacts.parseJson(json, "malformed names.json", namesReader)
+    require(n.isArray && n.elements().asScala.forall(_.isTextual),
+      "names.json must be a JSON array of strings")
+    n.elements().asScala.map(_.asText).toArray
   }
 
-  def renderNames(names: Seq[String]): String =
-    names.map(n => "\"" + n.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
+  private lazy val namesReader = Artifacts.json.reader()
+    .`with`(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
+    .`with`(JsonReadFeature.ALLOW_BACKSLASH_ESCAPING_ANY_CHARACTER)
+
+  def renderNames(names: Seq[String]): String = Artifacts.json.writeValueAsString(names.toArray)
 
   // ---------------------------------------------------------------- build
 
@@ -766,23 +742,12 @@ object Voyager {
   /** `parseIt(index.hnsw bytes, names.json names or null)` under `dir`. */
   private def readDir(spark: SparkSession, dir: String)
                      (parseIt: (Array[Byte], Array[String]) => Index): Index = {
-    val d = new Path(dir)
-    val fs = FileSystem.get(d.toUri, spark.sparkContext.hadoopConfiguration)
-    val namesPath = new Path(d, NamesFile)
+    val namesPath = new Path(dir, NamesFile).toString
     val names =
-      if (fs.exists(namesPath))
-        parseNames(new String(readFile(fs, namesPath), StandardCharsets.UTF_8))
+      if (Artifacts.exists(spark, namesPath))
+        parseNames(new String(Artifacts.readBytes(spark, namesPath), StandardCharsets.UTF_8))
       else null
-    parseIt(readFile(fs, new Path(d, IndexFile)), names)
-  }
-
-  private def readFile(fs: FileSystem, p: Path): Array[Byte] = {
-    val len = fs.getFileStatus(p).getLen
-    require(len <= Int.MaxValue, s"$p too large to load ($len bytes)")
-    val in = fs.open(p)
-    val bytes = new Array[Byte](len.toInt)
-    try in.readFully(0, bytes) finally in.close()
-    bytes
+    parseIt(Artifacts.readBytes(spark, new Path(dir, IndexFile).toString), names)
   }
 
   /** Persist `index.hnsw` + `names.json` under `dir` (the VoyagerUri
@@ -790,14 +755,11 @@ object Voyager {
     */
   def write(spark: SparkSession, index: Index, indexBytes: Array[Byte], dir: String,
             names: Seq[String] = null): Unit = {
-    val d = new Path(dir)
-    val fs = FileSystem.get(d.toUri, spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(d)
     val nm =
       if (names != null) names
       else (0 until index.nItems).map(i => index.name(index.labels(i)))
-    graft.util.Artifacts.write(spark, new Path(d, IndexFile).toString)(_.write(indexBytes))
-    graft.util.Artifacts.write(spark, new Path(d, NamesFile).toString)(
+    Artifacts.write(spark, new Path(dir, IndexFile).toString)(_.write(indexBytes))
+    Artifacts.write(spark, new Path(dir, NamesFile).toString)(
       _.write(renderNames(nm).getBytes(StandardCharsets.UTF_8)))
   }
 

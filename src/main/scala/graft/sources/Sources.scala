@@ -104,15 +104,7 @@ object Sources {
       val conf = org.apache.spark.graft.ConfBridge.confOf(confBc)
       it.map { p =>
         val hp = new org.apache.hadoop.fs.Path(p)
-        val fs = hp.getFileSystem(conf)
-        val len = fs.getFileStatus(hp).getLen
-        require(len <= Int.MaxValue, s"$p is ${len}B; whole-file read needs <2GiB")
-        val in = fs.open(hp)
-        try {
-          val buf = new Array[Byte](len.toInt)
-          in.readFully(0L, buf)
-          (p, buf)
-        } finally in.close()
+        (p, graft.util.Artifacts.readBytes(hp.getFileSystem(conf), hp))
       }
     }
   }
@@ -162,10 +154,7 @@ object Sources {
       math.min(maxTrainingBytes, Int.MaxValue.toLong).toInt, dictSizeBytes)
     samples.foreach(trainer.addSample)
     val dict = trainer.trainSamples()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(dict) finally out.close()
+    graft.util.Artifacts.write(df.sparkSession, path)(_.write(dict))
     dict
   }
 }

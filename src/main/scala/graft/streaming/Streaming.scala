@@ -413,6 +413,12 @@ object StreamSinks {
   * (a replayed batch overwrites its own dir only), the same contract
   * as [[StreamSinks]]. Only the micro-batch's documents shingle; the
   * per-batch work is exactly the batch operator's.
+  *
+  * New vs. index only: each micro-batch is paired with the fixed index
+  * at `indexPath` and nothing else. Two near-duplicates that arrive in
+  * different micro-batches of the same stream are never paired, and
+  * neither are two in the same batch. Pairing them is a streaming
+  * set-similarity join (ICDE 2020), which this operator does not do.
   */
 object StreamNearDup {
 

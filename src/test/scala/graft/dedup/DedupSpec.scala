@@ -553,4 +553,21 @@ class DedupSpec extends SparkSpec {
       s"expected merged n=2 everywhere, got ${rest.filter(_._4 != 2L).take(5).toSeq}")
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
+
+  test("_GRAFT_MINHASH sidecar format is pinned: its bytes load, a save writes them") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_mhmeta").toFile
+    val pinned = """{"shingleK":5,"numHashes":64,"bands":16}"""
+    Dedup.saveMinhashIndex(Seq((1L, "one two three four five six")).toDF("doc_id", "text"),
+      "doc_id", "text", s"$dir/idx", shingleK = 5, numHashes = 64, bands = 16)
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/idx/_GRAFT_MINHASH")) ==
+      pinned)
+    val formatted = "{\n  \"shingleK\" : 5,\n  \"numHashes\" : 64,\n  \"bands\" : 16\n}\n"
+    for ((name, text) <- Seq("pinned" -> pinned, "formatted" -> formatted)) {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/$name"))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$name/_GRAFT_MINHASH"), text)
+      assert(Dedup.loadMinhashIndexParams(spark, s"$dir/$name") ==
+        Dedup.MinhashIndexParams(5, 64, 16), name)
+    }
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
 }

@@ -103,4 +103,26 @@ class LmScoreSpec extends SparkSpec {
       LmScore.scoreWithUnigramModel(probe, "doc_id", "text", dir.getAbsolutePath))
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
+
+  test("_GRAFT_UNILM sidecar format is pinned: its bytes load, a save writes them") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_unilm_meta").toFile
+    // T=10, V=3 as in the closed-form test above
+    val train = Seq((1L, "a a a b b c"), (2L, "a a a b")).toDF("doc_id", "text")
+    LmScore.saveUnigramModel(train, "doc_id", "text", s"$dir/lm")
+    val pinned = """{"totalTokens":10,"vocabSize":3}"""
+    val sidecar = java.nio.file.Paths.get(s"$dir/lm/_GRAFT_UNILM")
+    assert(java.nio.file.Files.readString(sidecar) == pinned)
+    // the loaded T and V set the OOV mass α/(T + α(V+1)) = 1/14
+    def oov(): Double = LmScore.scoreWithUnigramModel(Seq((1L, "zz")).toDF("doc_id", "text"),
+      "doc_id", "text", s"$dir/lm").collect()(0).getDouble(2)
+    val formatted = "{ \"totalTokens\" : 10 ,\n\t\"vocabSize\" : 3 }\n"
+    for (text <- Seq(pinned, formatted)) {
+      java.nio.file.Files.deleteIfExists(sidecar.resolveSibling("._GRAFT_UNILM.crc"))
+      java.nio.file.Files.writeString(sidecar, text)
+      assert(oov() == BigDecimal(-math.log(1.0 / 14))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, text)
+    }
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
 }

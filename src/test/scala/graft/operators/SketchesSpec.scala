@@ -643,4 +643,22 @@ class SketchesSpec extends SparkSpec {
       .select(col("p50"), col("p100")).as[(Double, Double)].head()
     assert(ext == ((100.0, 200.0)))
   }
+
+  test("_GRAFT_SKETCH sidecar format is pinned: its bytes load, a save writes them") {
+    val base = tmpDir()
+    val df = Seq((1L, "g1", 2.0), (2L, "g2", 1.0)).toDF("v", "g", "w")
+    Sketches.saveIndex(df, "v", Seq("g"), s"$base/idx", kind = "varopt", lgK = 6, weightCol = "w")
+    val pinned =
+      """{"kind":"varopt","lgK":6,"valueCol":"v","weightCol":"w","groupCols":["g"]}"""
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"$base/idx/_GRAFT_SKETCH")) ==
+      pinned)
+    val formatted = "{\n  \"kind\" : \"varopt\",\n  \"lgK\" : 6,\n  \"valueCol\" : \"v\",\n" +
+      "  \"weightCol\" : \"w\",\n  \"groupCols\" : [ \"g\" ]\n}\n"
+    for ((name, text) <- Seq("pinned" -> pinned, "formatted" -> formatted)) {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/$name"))
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base/$name/_GRAFT_SKETCH"), text)
+      assert(Sketches.loadIndexParams(spark, s"$base/$name") ==
+        Sketches.SketchIndexParams("varopt", 6, "v", Seq("g"), "w"), name)
+    }
+  }
 }

@@ -108,4 +108,20 @@ class StatsSpec extends SparkSpec {
     intercept[IllegalArgumentException](Stats.loadQuantileGrid(spark, s"$path.missing"))
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
+
+  test("_GRAFT_QGRID sidecar format is pinned: its bytes load, a save writes them") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_qgrid_meta").toFile
+    val values = Seq(-1.5, 0.0, 2.0, 3.0, 5.0)
+    Stats.saveQuantileGrid(values.toDF("v"), "v", s"$dir/grid", gridSize = 4)
+    val bits = "-4613937818241073152,0,4611686018427387904,4613937818241073152,4617315517961601024"
+    val pinned = s"""{"marker":"_GRAFT_QGRID","gridSize":4,"bits":[$bits]}"""
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/grid")) == pinned)
+    val formatted = "{\n  \"marker\": \"_GRAFT_QGRID\",\n  \"gridSize\": 4,\n  \"bits\": [ " +
+      bits.replace(",", ",\n    ") + " ]\n}\n"
+    for ((name, text) <- Seq("pinned" -> pinned, "formatted" -> formatted)) {
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$name"), text)
+      assert(Stats.loadQuantileGrid(spark, s"$dir/$name").toSeq == values, name)
+    }
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
 }

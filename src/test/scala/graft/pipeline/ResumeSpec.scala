@@ -91,4 +91,29 @@ class ResumeSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       Resume.stage(spark, freshDir(), "../evil")(Seq(1).toDF("v")))
   }
+
+  test("_GRAFT_STAGE_COMPLETE format is pinned: a commit writes its bytes, which load") {
+    val dir = freshDir()
+    val evals = new AtomicInteger(0)
+    def run() = Resume.stage(spark, dir, "s1") {
+      evals.incrementAndGet()
+      Seq((1, "a")).toDF("a\"b\\c", "é x")
+    }
+    run()
+    val marker = java.nio.file.Paths.get(dir, "s1", "_GRAFT_STAGE_COMPLETE")
+    val pinned = "{\"rows\":1,\"schema\":\"`a\\\"b\\\\c` INT,`é x` STRING\"}"
+    assert(java.nio.file.Files.readAllBytes(marker).toSeq ==
+      pinned.getBytes(java.nio.charset.StandardCharsets.UTF_8).toSeq)
+    val formatted = "{\n  \"rows\" : 1,\n  \"schema\" : \"`a\\\"b\\\\c` INT,`é x` STRING\"\n}\n"
+    for (text <- Seq(pinned, formatted)) {
+      java.nio.file.Files.deleteIfExists(marker.resolveSibling("._GRAFT_STAGE_COMPLETE.crc"))
+      java.nio.file.Files.writeString(marker, text)
+      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(java.nio.file.Files.readString(marker))
+      assert(n.get("rows").asLong == 1L && n.get("schema").asText == "`a\"b\\c` INT,`é x` STRING")
+      // the marker commits the stage: it loads, with no second evaluation
+      assert(Resume.isComplete(spark, dir, "s1"))
+      assert(run().collect().map(_.toString).toSeq == Seq("[1,a]"), text)
+    }
+    assert(evals.get() == 1)
+  }
 }

@@ -299,8 +299,13 @@ class VoyagerSpec extends SparkSpec {
   }
 
   test("names.json rendering and parsing roundtrip, escapes included") {
-    val names = Seq("plain", "with \"quotes\"", "back\\slash", "unié", "a,b")
+    val names = Seq("plain", "with \"quotes\"", "back\\slash", "unié", "a,b",
+      "line\nbreak", "tab\there", "ctl\u0001x")
     assert(Voyager.parseNames(Voyager.renderNames(names)).toSeq == names)
+    // control characters are escaped (RFC 8259 §7): a strict reader takes it
+    val strict = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Voyager.renderNames(names))
+    assert((0 until strict.size).map(strict.get(_).asText) == names)
     // the reference writes unescaped simple arrays — parse those too
     assert(Voyager.parseNames("""["a","b","c"]""").toSeq == Seq("a", "b", "c"))
     assert(Voyager.parseNames("""[ "x" , "y" ]""").toSeq == Seq("x", "y"))
@@ -311,6 +316,26 @@ class VoyagerSpec extends SparkSpec {
       Voyager.parseNames("[\"\\" + "uZZZZ\"]")
     }
     assert(bad.getMessage.contains("names.json"))
+  }
+
+  test("names.json format is pinned: its bytes load, a write writes them") {
+    val names = IndexedSeq("plain", "with \"quotes\"", "back\\slash", "unié", "a,b", "sl/ash")
+    val (idx, bytes) = Voyager.build(names.indices.map(i => Array(i.toFloat, 1f)), names, 2,
+      space = Voyager.SpaceEuclidean, m = 2, efConstruction = 10)
+    val dir = tmpDir()
+    Voyager.write(spark, idx, bytes, dir)
+    val pinned = "[\"plain\",\"with \\\"quotes\\\"\",\"back\\\\slash\",\"unié\",\"a,b\",\"sl/ash\"]"
+    val file = java.nio.file.Paths.get(dir, Voyager.NamesFile)
+    assert(java.nio.file.Files.readAllBytes(file).toSeq ==
+      pinned.getBytes(java.nio.charset.StandardCharsets.UTF_8).toSeq)
+    val formatted = "[\n  \"plain\",\n  \"with \\\"quotes\\\"\" , \"back\\\\slash\",\n" +
+      "\t\"unié\", \"a,b\",\r\n  \"sl/ash\"\n]\n"
+    for (text <- Seq(pinned, formatted)) {
+      java.nio.file.Files.deleteIfExists(file.resolveSibling(s".${Voyager.NamesFile}.crc"))
+      java.nio.file.Files.writeString(file, text)
+      val back = Voyager.read(spark, dir)
+      assert((0 until back.nItems).map(i => back.name(i.toLong)) == names, text)
+    }
   }
 
   test("single-element and tiny corpora build, serialize, and query") {

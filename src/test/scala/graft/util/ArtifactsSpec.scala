@@ -28,4 +28,21 @@ class ArtifactsSpec extends SparkSpec {
     assert(bytes.sameElements(Array[Byte](4, 5)))
     assert(temps.isEmpty, s"temp files left: $temps")
   }
+
+  test("reads: readBytes gives back what write wrote; readJson fails with the caller's messages") {
+    val d = Files.createTempDirectory("graft_artifacts_read").toFile
+    d.deleteOnExit()
+    val path = s"${d.getAbsolutePath}/side.json"
+    val body = "{\"k\":[1,2]}".getBytes("UTF-8")
+    Artifacts.write(spark, path)(_.write(body))
+    assert(Artifacts.readBytes(spark, path).sameElements(body))
+    assert(Artifacts.read(spark, path)(_.readAllBytes()).sameElements(body))
+    assert(Artifacts.readJson(spark, path, "gone", "bad").path("k").get(1).asInt == 2)
+    val missing = intercept[IllegalArgumentException](
+      Artifacts.readJson(spark, s"$path.missing", "gone", "bad"))
+    assert(missing.getMessage.endsWith("gone"))
+    Artifacts.write(spark, path)(_.write("{\"k\": [1,".getBytes("UTF-8")))
+    val torn = intercept[IllegalArgumentException](Artifacts.readJson(spark, path, "gone", "bad"))
+    assert(torn.getMessage == "bad")
+  }
 }

@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.{Schema, SchemaBuilder}
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -307,59 +306,46 @@ object Avro {
   }
 
   /** Write one Avro container file per partition under `path`
-    * (repartition upstream to pick the shard count). Same commit
-    * protocol as [[TfRecord.write]]: dot-prefixed temp + rename,
-    * `_SUCCESS` stamp. Returns the shard count.
+    * (repartition upstream to pick the shard count) through
+    * [[PartFiles]]' commit: dot-prefixed temp + rename, `_SUCCESS`
+    * stamp. Returns the shard count.
     *
     * `syncIntervalBytes` (0 = Avro's default, ~64 KiB) sets the
     * approximate block size between sync markers — the granularity at
     * which [[read]] can split the file.
     */
-  def write(df: DataFrame, path: String, syncIntervalBytes: Int = 0): Int = {
-    val schema = df.schema
-    toAvroSchema(schema) // fail fast on unsupported types, driver-side
-    val avroJson = toAvroSchema(schema).toString
-    val spark = df.sparkSession
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(hadoopConf)
-    fs.delete(dir, true)
-    fs.mkdirs(dir)
-    val confEntries = spark.sparkContext.broadcast(
-      hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap)
-    val fieldTypes = schema.fields.map(_.dataType)
-    val shards = df.rdd.mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        val taskConf = new Configuration(false)
-        confEntries.value.foreach { case (k, v) => taskConf.set(k, v) }
-        val ctx = TaskContext.get()
-        val part = ctx.partitionId()
-        val finalFile = new Path(f"$path%s/part-$part%05d.avro")
-        val tempFile = new Path(f"$path%s/.part-$part%05d.attempt-${ctx.taskAttemptId()}%d")
-        val fsTask = finalFile.getFileSystem(taskConf)
-        val avroSchema = new Schema.Parser().parse(avroJson)
-        val writer = new DataFileWriter(new GenericDatumWriter[GenericRecord](avroSchema))
-        if (syncIntervalBytes > 0) writer.setSyncInterval(syncIntervalBytes)
-        val out = writer.create(avroSchema, fsTask.create(tempFile, true))
-        try {
-          val fieldSchemas = avroSchema.getFields.asScala.map(_.schema()).toArray
-          it.foreach { row =>
-            val rec = new GenericData.Record(avroSchema)
-            var i = 0
-            while (i < fieldTypes.length) {
-              rec.put(i, toAvroValue(fieldTypes(i), fieldSchemas(i), row.get(i)))
-              i += 1
-            }
-            out.append(rec)
-          }
-        } finally out.close()
-        if (!fsTask.rename(tempFile, finalFile)) fsTask.delete(tempFile, false)
-        Iterator.single(1)
+  def write(df: DataFrame, path: String, syncIntervalBytes: Int = 0): Int =
+    PartFiles.writeShards(df, path, encoder(df.schema, syncIntervalBytes))
+
+  /** One container file per part file, each row one record of
+    * `schema`'s Avro mapping — the encoder of [[write]] and of
+    * [[Dynamic.saveAsDynamicAvro]]. Maps the schema driver-side, so an
+    * unsupported type fails before anything is written.
+    */
+  private[sources] def encoder(schema: StructType, syncIntervalBytes: Int = 0): PartFiles.Encoder =
+    new ContainerEncoder(toAvroSchema(schema).toString, schema.fields.map(_.dataType),
+      syncIntervalBytes)
+
+  private final class ContainerEncoder(avroJson: String, fieldTypes: Array[DataType],
+                                       syncIntervalBytes: Int) extends PartFiles.Encoder {
+    val ext = "avro"
+    @transient private lazy val schema = new Schema.Parser().parse(avroJson)
+    @transient private lazy val fieldSchemas = schema.getFields.asScala.map(_.schema()).toArray
+    def open(out: java.io.OutputStream): PartFiles.Sink = new PartFiles.Sink {
+      private val writer = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
+      if (syncIntervalBytes > 0) writer.setSyncInterval(syncIntervalBytes)
+      writer.create(schema, out)
+      def write(row: Row): Unit = {
+        val rec = new GenericData.Record(schema)
+        var i = 0
+        while (i < fieldTypes.length) {
+          rec.put(i, toAvroValue(fieldTypes(i), fieldSchemas(i), row.get(i)))
+          i += 1
+        }
+        writer.append(rec)
       }
-    }.count().toInt
-    fs.create(new Path(s"$path/_SUCCESS"), true).close()
-    shards
+      def close(): Unit = writer.close() // closes the underlying stream
+    }
   }
 
   /** [[org.apache.avro.file.SeekableInput]] over a Hadoop stream —
@@ -392,7 +378,9 @@ object Avro {
     * still fans out.
     *
     * Guard rails: a DIRECTORY path requires the `_SUCCESS` stamp
-    * ([[write]] emits one) so a partially-written tree from a failed
+    * ([[write]] emits one; a destination dir of a completed
+    * [[Dynamic.saveAsDynamicAvro]] tree passes on the tree's own
+    * completion stamp) so a partially-written tree from a failed
     * job can't read back as silently-valid data, and a committed
     * write whose partitions were all empty (zero part files) reads as
     * an empty DataFrame of `schema` rather than throwing. A path that
@@ -402,7 +390,9 @@ object Avro {
     */
   /** The container files `path` names: an explicit glob, a single
     * foreign FILE, or a graft-written directory (which requires the
-    * `_SUCCESS` stamp).
+    * `_SUCCESS` stamp, or for a destination dir of a
+    * [[Dynamic.saveAsDynamicAvro]]/`saveAsDynamicProtobuf` tree, the
+    * tree's `_GRAFT_DYNAMIC_DONE`).
     */
   private def listContainers(fs: org.apache.hadoop.fs.FileSystem, path: String)
       : Array[org.apache.hadoop.fs.FileStatus] = {
@@ -416,7 +406,13 @@ object Avro {
       val rootStatus = fs.getFileStatus(dir)
       if (rootStatus.isFile) Array(rootStatus)
       else {
-        require(fs.exists(new Path(dir, "_SUCCESS")),
+        // a destination dir of a dynamic tree carries no _SUCCESS of its
+        // own: the tree's root (the nearest ancestor holding the
+        // ownership stamp) holds the completion stamp instead
+        def treeDone = Iterator.iterate(dir.getParent)(_.getParent).takeWhile(_ != null)
+          .find(d => fs.exists(new Path(d, Dynamic.Marker)))
+          .exists(root => fs.exists(new Path(root, Dynamic.MarkerDone)))
+        require(fs.exists(new Path(dir, "_SUCCESS")) || treeDone,
           s"$path has no _SUCCESS marker — refusing to read a possibly partial write " +
             "(point at the container file itself, or glob the files, for foreign input)")
         Option(fs.globStatus(new Path(dir, "part-*.avro"))).getOrElse(Array.empty)
@@ -505,14 +501,11 @@ object Avro {
     require(splitBytes > 0, s"splitBytes must be positive, got $splitBytes")
     val fieldNames = schema.fields.map(_.name)
     val fieldTypes = schema.fields.map(_.dataType)
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(hadoopConf)
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val statuses = listContainers(fs, path)
     if (statuses.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val confEntries = spark.sparkContext.broadcast(
-      hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap)
+    val conf = PartFiles.hadoopConf(spark)
     val splits = statuses.toSeq.flatMap { st =>
       val len = st.getLen
       val n = math.max(1L, (len + splitBytes - 1) / splitBytes)
@@ -521,11 +514,9 @@ object Avro {
     }
     val rows = spark.sparkContext.parallelize(splits, splits.size)
       .flatMap { case (file, start, end, len) =>
-        val taskConf = new Configuration(false)
-        confEntries.value.foreach { case (k, v) => taskConf.set(k, v) }
         val p = new Path(file)
         val reader = new DataFileReader(
-          new HadoopSeekableInput(p.getFileSystem(taskConf).open(p), len),
+          new HadoopSeekableInput(p.getFileSystem(conf()).open(p), len),
           new GenericDatumReader[GenericRecord]())
         Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => reader.close()))
         // the OCF header ends with the sync marker, so sync(0) lands on

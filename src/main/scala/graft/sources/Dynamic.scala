@@ -3,9 +3,8 @@ package graft.sources
 import java.io.{BufferedWriter, OutputStream, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 
-import org.apache.avro.Schema
-import org.apache.avro.file.{DataFileReader, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.file.DataFileReader
+import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
@@ -43,13 +42,14 @@ import scala.jdk.CollectionConverters._
   *    no per-destination writer map to blow the heap at high
   *    destination cardinality (the classic dynamic-write OOM);
   *  - executor-side Hadoop FileSystem writes (local/HDFS/object
-  *    store) through a per-file rename commit: each destination file
-  *    is written as a dot-prefixed temp named by the task ATTEMPT and
-  *    renamed to `part-<partition>.<ext>` only on a clean stream
-  *    close. A failed attempt leaves only hidden dot-temps (ignored
-  *    by Hadoop globbing); under speculative execution the first
-  *    attempt to finish a file wins the rename and the loser deletes
-  *    its temp — the committed tree is always whole files.
+  *    store) through [[PartFiles]]' per-file rename commit, the one
+  *    the flat writers use: each destination file is written as a
+  *    dot-prefixed temp named by the task ATTEMPT and renamed to
+  *    `part-<partition>.<ext>` only on a clean stream close. A failed
+  *    attempt leaves only hidden dot-temps (ignored by Hadoop
+  *    globbing); under speculative execution the first attempt to
+  *    finish a file wins the rename and the loser deletes its temp —
+  *    the committed tree is always whole files.
   */
 object Dynamic {
 
@@ -120,77 +120,17 @@ object Dynamic {
     */
   private[sources] val ManifestDir = "_manifest"
 
-  // ---- codec plug-in points -------------------------------------------
+  // ---- codecs -----------------------------------------------------------
+  // Text, CSV, proto and parquet encoders live here; the Avro and tar
+  // encoders are [[Avro.encoder]] and [[Tar.Encoder]].
 
-  /** One open destination file. `write` receives the payload row
-    * (every input column except the destination, in input order).
-    */
-  private trait DestSink {
-    def write(payload: Row): Unit
-    /** Flush and close the underlying stream (commit renames after). */
-    def close(): Unit
-  }
-
-  /** Serializable per-codec factory; one instance ships to every task,
-    * `open` is called once per (task, destination) run.
-    */
-  private trait DestSinkFactory extends Serializable {
-    def ext: String
-    def open(out: OutputStream): DestSink
-  }
-
-  private final class TextSinkFactory extends DestSinkFactory {
+  private object TextEncoder extends PartFiles.Encoder {
     val ext = "txt"
-    def open(out: OutputStream): DestSink = new DestSink {
+    def open(out: OutputStream): PartFiles.Sink = new PartFiles.Sink {
       private val w =
         new BufferedWriter(new OutputStreamWriter(out, StandardCharsets.UTF_8))
       def write(payload: Row): Unit = { w.write(payload.getString(0)); w.write('\n') }
       def close(): Unit = w.close()
-    }
-  }
-
-  /** One USTAR tar archive per destination — [[Tar]]'s exact framing
-    * (header/512-byte padding/2-block trailer), so every shard is a
-    * stock-`tar`-readable WebDataset-style archive. Payload: (name
-    * string, value binary).
-    */
-  private final class TarSinkFactory extends DestSinkFactory {
-    val ext = "tar"
-    def open(out0: OutputStream): DestSink = new DestSink {
-      private val out = new java.io.BufferedOutputStream(out0, 1 << 16)
-      def write(payload: Row): Unit = {
-        require(!payload.isNullAt(0) && !payload.isNullAt(1),
-          "dynamic tar: null name/value — filter or encode nulls upstream")
-        Tar.writeMember(out, payload.getString(0), payload.getAs[Array[Byte]](1))
-      }
-      def close(): Unit = { Tar.writeTrailer(out); out.close() }
-    }
-  }
-
-  /** Avro container file per destination — the same schema mapping /
-    * record conversion as [[Avro.write]], so every scattered shard is
-    * a stock-reader-valid OCF.
-    */
-  private final class AvroSinkFactory(avroJson: String, fieldTypes: Array[DataType])
-      extends DestSinkFactory {
-    val ext = "avro"
-    @transient private lazy val schema = new Schema.Parser().parse(avroJson)
-    @transient private lazy val fieldSchemas =
-      schema.getFields.asScala.map(_.schema()).toArray
-    def open(out: OutputStream): DestSink = new DestSink {
-      private val writer =
-        new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
-          .create(schema, out)
-      def write(payload: Row): Unit = {
-        val rec = new GenericData.Record(schema)
-        var i = 0
-        while (i < fieldTypes.length) {
-          rec.put(i, Avro.toAvroValue(fieldTypes(i), fieldSchemas(i), payload.get(i)))
-          i += 1
-        }
-        writer.append(rec)
-      }
-      def close(): Unit = writer.close() // closes the underlying stream
     }
   }
 
@@ -200,20 +140,13 @@ object Dynamic {
     * enum/wire-format column metadata applies exactly as in
     * [[Protobuf.write]].
     */
-  private final class ProtoSinkFactory(payloadSchema: StructType, containerJson: String)
-      extends DestSinkFactory {
+  private final class ProtoEncoder(payloadSchema: StructType) extends PartFiles.Encoder {
     val ext = "proto.avro"
-    @transient private lazy val container = new Schema.Parser().parse(containerJson)
-    def open(out: OutputStream): DestSink = new DestSink {
-      private val writer =
-        new DataFileWriter(new GenericDatumWriter[GenericRecord](container))
-          .create(container, out)
-      def write(payload: Row): Unit = {
-        val rec = new GenericData.Record(container)
-        rec.put(0, java.nio.ByteBuffer.wrap(Protobuf.encodeRow(payloadSchema, payload)))
-        writer.append(rec)
-      }
-      def close(): Unit = writer.close()
+    private val container = Avro.encoder(Protobuf.bytesSchema)
+    def open(out: OutputStream): PartFiles.Sink = new PartFiles.Sink {
+      private val records = container.open(out)
+      def write(payload: Row): Unit = records.write(Row(Protobuf.encodeRow(payloadSchema, payload)))
+      def close(): Unit = records.close()
     }
   }
 
@@ -226,8 +159,8 @@ object Dynamic {
     * an optional header line leads every file, so each shard is
     * independently readable.
     */
-  private final class CsvSinkFactory(fieldNames: Array[String], fieldTypes: Array[DataType],
-                                     header: Boolean) extends DestSinkFactory {
+  private final class CsvEncoder(fieldNames: Array[String], fieldTypes: Array[DataType],
+                                 header: Boolean) extends PartFiles.Encoder {
     val ext = "csv"
     private def cell(s: String): String =
       if (s.isEmpty) "\"\"" // distinguish empty string from null's unquoted-empty
@@ -250,7 +183,7 @@ object Dynamic {
         case _ => v.toString // numerics/boolean/date: no quotable chars
       }
     }
-    def open(out: OutputStream): DestSink = new DestSink {
+    def open(out: OutputStream): PartFiles.Sink = new PartFiles.Sink {
       private val w =
         new BufferedWriter(new OutputStreamWriter(out, StandardCharsets.UTF_8))
       if (header) { w.write(fieldNames.map(cell).mkString(",")); w.write('\n') }
@@ -454,11 +387,11 @@ object Dynamic {
       new RowWriteSupport(messageTypeStr, schema)
   }
 
-  private final class ParquetSinkFactory(payloadSchema: StructType, messageTypeStr: String,
-                                         rowGroupBytes: Long)
-      extends DestSinkFactory {
+  private final class ParquetEncoder(payloadSchema: StructType, messageTypeStr: String,
+                                     rowGroupBytes: Long)
+      extends PartFiles.Encoder {
     val ext = "parquet"
-    def open(out: OutputStream): DestSink = new DestSink {
+    def open(out: OutputStream): PartFiles.Sink = new PartFiles.Sink {
       private val writer =
         new RowParquetWriterBuilder(new StreamOutputFile(out), messageTypeStr, payloadSchema)
           .withCompressionCodec(
@@ -669,13 +602,14 @@ object Dynamic {
   }
 
   /** The codec-independent scatter: co-locate + sort destinations,
-    * stream each destination run through `factory`'s sink with the
-    * temp-rename commit. `payload` columns keep their input order and
-    * metadata (the proto codec reads enum/wire declarations off them).
+    * stream each destination run through `enc` into one part file
+    * ([[PartFiles.write]]'s temp-rename commit). `payload` columns keep
+    * their input order and metadata (the proto codec reads enum/wire
+    * declarations off them).
     */
   private def scatter(df: DataFrame, basePath: String, destCol: String,
                       payloadCols: Seq[String], fanout: Fanout, overwriteForeign: Boolean,
-                      factory: DestSinkFactory): Unit = {
+                      enc: PartFiles.Encoder): Unit = {
     require(payloadCols.nonEmpty, "dynamic write needs at least one payload column")
     // the scatter frame claims __dest and (transiently) __salt /
     // __fanout; a payload column with any of those names would be
@@ -739,21 +673,10 @@ object Dynamic {
       .sortWithinPartitions(col("__dest"))
       .drop("__salt")
     val fs = prepareTree(df, basePath, overwriteForeign)
-    val ext = factory.ext
+    val conf = PartFiles.hadoopConf(spark)
     prepared.foreachPartition { (rows: Iterator[Row]) =>
-      // executor-side FS handle: picks up the cluster's core-site.xml
-      // from the executor classpath, same as every Hadoop output format
-      val conf = new Configuration()
       val base = new Path(basePath)
-      val fs = FileSystem.get(base.toUri, conf)
-      val ctx = TaskContext.get()
-      val pid = ctx.partitionId()
-      val attempt = ctx.taskAttemptId()
-      var currentDest: String = null
-      var sink: DestSink = null
-      var tempFile: Path = null
-      var finalFile: Path = null
-      var fileRows = 0L
+      val fs = base.getFileSystem(conf())
       // per-task manifest entries: (dest, final file name, rows, bytes).
       // Rows are counted in the write loop; bytes are stat'd off the
       // FINAL file after the rename race settles, so a losing
@@ -761,77 +684,37 @@ object Dynamic {
       // counts agree across attempts by construction — same input
       // partition — but compressed codec bytes need not).
       val manifest = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long)]
-      // rename commit: the rename only happens after a clean close, so
-      // finals are always whole files. A losing speculative attempt's
-      // rename fails against the winner's file; drop the temp.
-      def commit(): Unit = if (sink != null) {
-        sink.close(); sink = null
-        if (!fs.rename(tempFile, finalFile)) {
-          fs.delete(tempFile, false)
-          // a failed rename is only benign when a winning speculative
-          // attempt's final file exists; any other cause (transient FS
-          // error, src vanished) must surface as the rename failure
-          // itself, not a confusing FNFE from the stat below
-          if (!fs.exists(finalFile)) throw new java.io.IOException(
-            s"dynamic scatter commit: rename $tempFile -> $finalFile failed " +
-              "and no winning attempt's file exists")
-        }
-        manifest += ((currentDest, finalFile.getName, fileRows,
-          fs.getFileStatus(finalFile).getLen))
-      }
-      def abort(): Unit = if (sink != null) {
-        try sink.close() catch { case _: Throwable => () }
-        sink = null
-        fs.delete(tempFile, false)
-      }
       // zero-copy payload indexing: sinks read the source row at an
       // offset of one (past __dest) through a single reused view — no
       // per-record Vector + Row copy on the 100 TB hot path (safe
       // because every sink consumes the row before the next arrives)
       val view = new PayloadView
-      try {
-        rows.foreach { r =>
-          val dest = validateDest(r.getString(0))
-          if (dest != currentDest) {
-            commit()
-            finalFile = new Path(base, f"$dest%s/part-$pid%05d.$ext%s")
-            tempFile = new Path(base, f"$dest%s/.part-$pid%05d.attempt-$attempt%d")
-            sink = factory.open(fs.create(tempFile, true))
-            currentDest = dest
-            fileRows = 0L
+      val it = rows.buffered
+      while (it.hasNext) {
+        // destinations arrive contiguously: one part file per run
+        val dest = validateDest(it.head.getString(0))
+        var n = 0L
+        val file = PartFiles.write(fs, new Path(base, dest), enc.ext) { out =>
+          val sink = enc.open(out)
+          while (it.hasNext && it.head.getString(0) == dest) {
+            view.underlying = it.next()
+            sink.write(view)
+            n += 1
           }
-          view.underlying = r
-          sink.write(view)
-          fileRows += 1
+          sink.close()
         }
-        commit()
-        // manifest sidecar, same rename protocol as the data files: one
-        // TSV per task under _manifest/ (Hadoop-hidden — stock readers
-        // of the tree never see it), one line per committed file. A
-        // losing speculative attempt's rename fails and drops the temp,
-        // exactly like its data files.
-        if (manifest.nonEmpty) {
-          val mFinal = new Path(base, f"${ManifestDir}%s/part-$pid%05d.tsv")
-          val mTemp = new Path(base, f"${ManifestDir}%s/.part-$pid%05d.attempt-$attempt%d")
-          val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-            fs.create(mTemp, true), java.nio.charset.StandardCharsets.UTF_8))
-          // same failure contract as the data files: close the stream
-          // and drop the temp on ANY exception (abort() only knows the
-          // data sink), commit via rename only after a clean close
-          try {
-            manifest.foreach { case (d, f, rws, bytes) =>
-              w.write(s"$d\t$f\t$rws\t$bytes\n")
-            }
-            w.close()
-          } catch { case t: Throwable =>
-            try w.close() catch { case _: Throwable => () }
-            fs.delete(mTemp, false)
-            throw t
-          }
-          if (!fs.rename(mTemp, mFinal)) { fs.delete(mTemp, false); () }
+        manifest += ((dest, file.getName, n, fs.getFileStatus(file).getLen))
+      }
+      // manifest sidecar, same commit as the data files: one TSV per
+      // task under _manifest/ (Hadoop-hidden — stock readers of the
+      // tree never see it), one line per committed file
+      if (manifest.nonEmpty)
+        PartFiles.write(fs, new Path(base, ManifestDir), "tsv") { out =>
+          val w = new BufferedWriter(new OutputStreamWriter(out, StandardCharsets.UTF_8))
+          manifest.foreach { case (d, f, rws, bytes) => w.write(s"$d\t$f\t$rws\t$bytes\n") }
+          w.close()
         }
-        ()
-      } catch { case t: Throwable => abort(); throw t }
+      ()
     }
     // completion stamp: only now is the tree valid for the gather verbs
     fs.create(new Path(basePath, MarkerDone), true).close()
@@ -863,7 +746,7 @@ object Dynamic {
     val prepared = df.select(col(destCol).cast("string").as("__dyn_dest"),
       coalesce(col(textCol).cast("string"), lit("")).as("__dyn_text"))
     scatter(prepared, basePath, "__dyn_dest", Seq("__dyn_text"), fanout, overwriteForeign,
-      new TextSinkFactory)
+      TextEncoder)
   }
 
   /** Write every non-destination column of each row into a per-
@@ -880,9 +763,8 @@ object Dynamic {
                         fanout: Fanout = Fanout.Static(1), overwriteForeign: Boolean = false): Unit = {
     val payloadCols = df.schema.fieldNames.filterNot(_ == destCol).toSeq
     val payloadSchema = StructType(df.schema.fields.filterNot(_.name == destCol))
-    val avroJson = Avro.toAvroSchema(payloadSchema).toString // fail fast driver-side
-    scatter(df, basePath, destCol, payloadCols, fanout, overwriteForeign,
-      new AvroSinkFactory(avroJson, payloadSchema.fields.map(_.dataType)))
+    val enc = Avro.encoder(payloadSchema) // fail fast driver-side
+    scatter(df, basePath, destCol, payloadCols, fanout, overwriteForeign, enc)
   }
 
   /** Write every non-destination column of each row as ONE serialized
@@ -899,9 +781,8 @@ object Dynamic {
     val payloadCols = df.schema.fieldNames.filterNot(_ == destCol).toSeq
     val payloadSchema = StructType(df.schema.fields.filterNot(_.name == destCol))
     payloadSchema.fields.foreach(f => Protobuf.checkType(f.dataType)) // fail fast
-    val containerJson = Avro.toAvroSchema(Protobuf.bytesSchema).toString
     scatter(df, basePath, destCol, payloadCols, fanout, overwriteForeign,
-      new ProtoSinkFactory(payloadSchema, containerJson))
+      new ProtoEncoder(payloadSchema))
   }
 
   /** Write every non-destination column of each row as RFC 4180 CSV
@@ -931,7 +812,7 @@ object Dynamic {
       }
     }
     scatter(df, basePath, destCol, payload.map(_.name).toSeq, fanout, overwriteForeign,
-      new CsvSinkFactory(payload.map(_.name), payload.map(_.dataType), header))
+      new CsvEncoder(payload.map(_.name), payload.map(_.dataType), header))
   }
 
   /** Write every non-destination column of each row as PARQUET into
@@ -964,7 +845,7 @@ object Dynamic {
     val payloadSchema = StructType(payload)
     val messageTypeStr = ParquetCodec.toMessageType(payloadSchema).toString
     scatter(df, basePath, destCol, payload.map(_.name).toSeq, fanout, overwriteForeign,
-      new ParquetSinkFactory(payloadSchema, messageTypeStr, rowGroupBytes))
+      new ParquetEncoder(payloadSchema, messageTypeStr, rowGroupBytes))
   }
 
   /** Write `(nameCol string, valueCol binary)` rows as one USTAR tar
@@ -984,7 +865,7 @@ object Dynamic {
       col(nameCol).cast("string").as("__dyn_name"),
       col(valueCol).cast("binary").as("__dyn_value"))
     scatter(prepared, basePath, "__dyn_dest", Seq("__dyn_name", "__dyn_value"),
-      fanout, overwriteForeign, new TarSinkFactory)
+      fanout, overwriteForeign, Tar.Encoder)
   }
 
   // ---- gather verbs ----------------------------------------------------
@@ -1214,28 +1095,13 @@ object Dynamic {
       s"destColName and textColName are both '$destColName' — the gather frame " +
         "would carry duplicate column names")
     if (audit) auditOrThrow(spark, basePath)
-    val files = planTree(spark, basePath, "txt")
-    val outSchema = StructType(Seq(
+    gatherFiles(spark, planTree(spark, basePath, "txt"), StructType(Seq(
       StructField(destColName, StringType, nullable = false),
-      StructField(textColName, StringType, nullable = false)))
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
-    val groups = batchFiles(files, gatherTargetBytes(spark))
-    val confBc = org.apache.spark.graft.ConfBridge.broadcastHadoopConf(spark.sparkContext)
-    val rows = spark.sparkContext.parallelize(groups, groups.size)
-      .flatMap(_.iterator.flatMap { case (dest, file, _) =>
-        val p = new Path(file)
-        val in = p.getFileSystem(org.apache.spark.graft.ConfBridge.confOf(confBc)).open(p)
-        val reader = new java.io.BufferedReader(
-          new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ =>
-          try reader.close() catch { case _: java.io.IOException => () }))
-        closeOnExhaust(
-          Iterator.continually(reader.readLine()).takeWhile(_ != null)
-            .map(line => Row(dest, line)),
-          () => reader.close())
-      })
-    spark.createDataFrame(rows, outSchema)
+      StructField(textColName, StringType, nullable = false)))) { (dest, in, _, _) =>
+      val reader = new java.io.BufferedReader(
+        new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
+      Iterator.continually(reader.readLine()).takeWhile(_ != null).map(line => Row(dest, line))
+    }
   }
 
   /** Read a [[saveAsDynamicTar]] tree back: one row per tar member,
@@ -1250,27 +1116,13 @@ object Dynamic {
     require(destColName != "name" && destColName != "value",
       s"destColName '$destColName' collides with the gather's name/value columns")
     if (audit) auditOrThrow(spark, basePath)
-    val files = planTree(spark, basePath, "tar")
-    val outSchema = StructType(Seq(
+    gatherFiles(spark, planTree(spark, basePath, "tar"), StructType(Seq(
       StructField(destColName, StringType, nullable = false),
       StructField("name", StringType, nullable = false),
-      StructField("value", BinaryType, nullable = false)))
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
-    val groups = batchFiles(files, gatherTargetBytes(spark))
-    val confBc = org.apache.spark.graft.ConfBridge.broadcastHadoopConf(spark.sparkContext)
-    val rows = spark.sparkContext.parallelize(groups, groups.size)
-      .flatMap(_.iterator.flatMap { case (dest, file, _) =>
-        val p = new Path(file)
-        val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-          p.getFileSystem(org.apache.spark.graft.ConfBridge.confOf(confBc)).open(p), 1 << 16))
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ =>
-          try in.close() catch { case _: java.io.IOException => () }))
-        closeOnExhaust(
-          Tar.members(in, file).map { case (n, b) => Row(dest, n, b) },
-          () => in.close())
-      })
-    spark.createDataFrame(rows, outSchema)
+      StructField("value", BinaryType, nullable = false)))) { (dest, in, file, _) =>
+      Tar.members(new java.io.DataInputStream(new java.io.BufferedInputStream(in, 1 << 16)), file)
+        .map { case (n, b) => Row(dest, n, b) }
+    }
   }
 
   /** Read a [[saveAsDynamicCsv]] tree back through stock
@@ -1415,11 +1267,10 @@ object Dynamic {
       .sorted
     if (shards.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], mSchema)
-    val confBc = org.apache.spark.graft.ConfBridge.broadcastHadoopConf(spark.sparkContext)
+    val conf = PartFiles.hadoopConf(spark)
     val rows = spark.sparkContext.parallelize(shards, shards.size).flatMap { file =>
       val p = new Path(file)
-      val src = scala.io.Source.fromInputStream(
-        p.getFileSystem(org.apache.spark.graft.ConfBridge.confOf(confBc)).open(p), "UTF-8")
+      val src = scala.io.Source.fromInputStream(p.getFileSystem(conf()).open(p), "UTF-8")
       try src.getLines().map { line =>
         // the writer never emits '\t' inside a field (control chars
         // are rejected in destinations at write time), so a plain
@@ -1487,12 +1338,12 @@ object Dynamic {
       StructField("file", StringType, nullable = false),
       StructField("actual_bytes", LongType, nullable = false)))
     val baseUriStr = fs.makeQualified(base).toUri.toString
-    val confBc = org.apache.spark.graft.ConfBridge.broadcastHadoopConf(spark.sparkContext)
+    val conf = PartFiles.hadoopConf(spark)
     val walked =
       if (topDirs.isEmpty) spark.sparkContext.emptyRDD[Row]
       else spark.sparkContext.parallelize(topDirs, topDirs.size).flatMap { dirStr =>
         val dir = new Path(dirStr)
-        val dfs = dir.getFileSystem(org.apache.spark.graft.ConfBridge.confOf(confBc))
+        val dfs = dir.getFileSystem(conf())
         val baseUri = new java.net.URI(baseUriStr)
         val out = scala.collection.mutable.ArrayBuffer.empty[Row]
         val it = dfs.listFiles(dir, true)
@@ -1536,36 +1387,45 @@ object Dynamic {
       .orderBy(col("dest"), col("file"), col("issue"))
   }
 
-  /** Shared gather executor: one task per size-batched GROUP of
-    * container files (streamed sequentially), `decode` turns each Avro
-    * record into a payload Row, destination prepended.
+  /** Shared Avro gather: every record of the planned containers
+    * `decode`d into a payload Row, destination prepended.
     */
   private def gatherAvro(spark: SparkSession, files: Seq[(String, String, Long)],
                          schema: StructType, destColName: String)
                         (decode: (GenericRecord, Array[String], Array[DataType]) => Row)
       : DataFrame = {
-    val outSchema = StructType(
-      StructField(destColName, StringType, nullable = false) +: schema.fields)
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
     val fieldNames = schema.fields.map(_.name)
     val fieldTypes = schema.fields.map(_.dataType)
+    gatherFiles(spark, files,
+      StructType(StructField(destColName, StringType, nullable = false) +: schema.fields)) {
+      (dest, in, _, len) =>
+        new DataFileReader(new Avro.HadoopSeekableInput(in, len),
+          new GenericDatumReader[GenericRecord]()).iterator().asScala
+          .map(rec => Row.fromSeq(dest +: decode(rec, fieldNames, fieldTypes).toSeq))
+    }
+  }
+
+  /** The RDD gathers' one task body: one task per size-batched GROUP of
+    * planned files, streamed sequentially; `read` turns one open file
+    * (dest, stream, path, length) into output rows. Each stream closes
+    * as soon as its rows exhaust (the task-completion listener is the
+    * abnormal-termination backstop).
+    */
+  private def gatherFiles(spark: SparkSession, files: Seq[(String, String, Long)],
+                          outSchema: StructType)
+                         (read: (String, org.apache.hadoop.fs.FSDataInputStream, String, Long)
+                           => Iterator[Row]): DataFrame = {
+    if (files.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
     val groups = batchFiles(files, gatherTargetBytes(spark))
-    val confBc = org.apache.spark.graft.ConfBridge.broadcastHadoopConf(spark.sparkContext)
+    val conf = PartFiles.hadoopConf(spark)
     val rows = spark.sparkContext.parallelize(groups, groups.size)
       .flatMap(_.iterator.flatMap { case (dest, file, len) =>
         val p = new Path(file)
-        val reader = new DataFileReader(
-          new Avro.HadoopSeekableInput(
-            p.getFileSystem(org.apache.spark.graft.ConfBridge.confOf(confBc)).open(p), len),
-          new GenericDatumReader[GenericRecord]())
+        val in = p.getFileSystem(conf()).open(p)
         Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ =>
-          try reader.close() catch { case _: java.io.IOException => () }))
-        closeOnExhaust(
-          reader.iterator().asScala.map { rec =>
-            Row.fromSeq(dest +: decode(rec, fieldNames, fieldTypes).toSeq)
-          },
-          () => reader.close())
+          try in.close() catch { case _: java.io.IOException => () }))
+        closeOnExhaust(read(dest, in, file, len), () => in.close())
       })
     spark.createDataFrame(rows, outSchema)
   }

@@ -99,9 +99,9 @@ object Sources {
       org.apache.spark.sql.Dataset[(String, Array[Byte])] = {
     val spark = paths.sparkSession
     import spark.implicits._
-    val confBc = org.apache.spark.graft.ConfBridge.broadcastHadoopConf(spark.sparkContext)
+    val hadoopConf = PartFiles.hadoopConf(spark)
     paths.mapPartitions { it =>
-      val conf = org.apache.spark.graft.ConfBridge.confOf(confBc)
+      val conf = hadoopConf()
       it.map { p =>
         val hp = new org.apache.hadoop.fs.Path(p)
         (p, graft.util.Artifacts.readBytes(hp.getFileSystem(conf), hp))

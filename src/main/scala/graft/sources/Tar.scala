@@ -3,8 +3,6 @@ package graft.sources
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException}
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -35,22 +33,6 @@ object Tar {
     require(s.length <= width - 1, s"value $value overflows a $width-byte tar field")
     (("0" * (width - 1 - s.length)) + s + "\u0000").getBytes(StandardCharsets.US_ASCII)
   }
-
-  /** Append one USTAR member (header + payload + 512-byte padding) —
-    * the single framing implementation behind [[write]] and
-    * [[Dynamic.saveAsDynamicTar]]'s per-destination sink.
-    */
-  private[sources] def writeMember(out: java.io.OutputStream, name: String,
-                                   bytes: Array[Byte]): Unit = {
-    out.write(header(name, bytes.length.toLong))
-    out.write(bytes)
-    val pad = (Block - (bytes.length % Block)) % Block
-    if (pad > 0) out.write(new Array[Byte](pad))
-  }
-
-  /** The USTAR end-of-archive trailer: two zero blocks. */
-  private[sources] def writeTrailer(out: java.io.OutputStream): Unit =
-    out.write(new Array[Byte](2 * Block))
 
   private[sources] def header(name: String, size: Long): Array[Byte] = {
     val nameBytes = name.getBytes(StandardCharsets.UTF_8)
@@ -200,53 +182,37 @@ object Tar {
     * per partition under `path` (repartition upstream for shard
     * sizing; co-partition a sample's members if the loader expects
     * them adjacent). Same hidden-temp + rename commit and `_SUCCESS`
-    * protocol as [[TfRecord.write]]; null names/values and names over
-    * the 100-byte USTAR field fail loudly. Returns the shard count.
+    * protocol as [[TfRecord.write]] ([[PartFiles]]); null names/values
+    * and names over the 100-byte USTAR field fail loudly. Returns the
+    * shard count.
     */
   def write(df: DataFrame, path: String, nameCol: String = "name",
-            valueCol: String = "value"): Int = {
-    import scala.jdk.CollectionConverters._
-    val spark = df.sparkSession
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(hadoopConf)
-    fs.delete(dir, true)
-    fs.mkdirs(dir)
-    val confEntries = spark.sparkContext.broadcast(
-      hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap)
-    val data = df.select(col(nameCol).cast("string"), col(valueCol).cast("binary"))
-    val shards = data.rdd.mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        val taskConf = new Configuration(false)
-        confEntries.value.foreach { case (k, v) => taskConf.set(k, v) }
-        val ctx = TaskContext.get()
-        val part = ctx.partitionId()
-        val finalFile = new Path(s"$path/part-${"%05d".format(part)}.tar")
-        val tempFile = new Path(s"$path/.part-${"%05d".format(part)}.attempt-${ctx.taskAttemptId()}")
-        val fsTask = finalFile.getFileSystem(taskConf)
-        val out = new BufferedOutputStream(fsTask.create(tempFile, true), 1 << 16)
-        var n = 0L
-        try {
-          it.foreach { row =>
-            if (row.isNullAt(0) || row.isNullAt(1)) throw new IllegalArgumentException(
-              s"Tar.write: null name/value in partition $part member $n — " +
-                "filter or encode nulls upstream")
-            writeMember(out, row.getString(0), row.getAs[Array[Byte]](1))
-            n += 1
-          }
-          writeTrailer(out)
-          out.close()
-          if (!fsTask.rename(tempFile, finalFile) && !fsTask.exists(finalFile))
-            throw new java.io.IOException(s"Tar.write: could not commit $finalFile")
-        } finally {
-          out.close()
-          fsTask.delete(tempFile, false)
-        }
-        Iterator.single(1)
+            valueCol: String = "value"): Int =
+    PartFiles.writeShards(df.select(col(nameCol).cast("string"), col(valueCol).cast("binary")),
+      path, Encoder)
+
+  /** One USTAR archive per part file, each `(name, value)` row one
+    * member — the encoder of [[write]] and of
+    * [[Dynamic.saveAsDynamicTar]].
+    */
+  private[sources] object Encoder extends PartFiles.Encoder {
+    val ext = "tar"
+    def open(out0: java.io.OutputStream): PartFiles.Sink = new PartFiles.Sink {
+      private val out = new BufferedOutputStream(out0, 1 << 16)
+      private var n = 0L
+      def write(row: Row): Unit = {
+        if (row.isNullAt(0) || row.isNullAt(1)) throw new IllegalArgumentException(
+          s"tar: null name/value in partition ${TaskContext.getPartitionId()} member $n — " +
+            "filter or encode nulls upstream")
+        val bytes = row.getAs[Array[Byte]](1)
+        out.write(header(row.getString(0), bytes.length.toLong))
+        out.write(bytes)
+        val pad = (Block - (bytes.length % Block)) % Block // data padded to 512
+        if (pad > 0) out.write(new Array[Byte](pad))
+        n += 1
       }
-    }.sum().toInt
-    fs.create(new Path(dir, "_SUCCESS"), true).close()
-    shards
+      // end-of-archive trailer: two zero blocks
+      def close(): Unit = { out.write(new Array[Byte](2 * Block)); out.close() }
+    }
   }
 }

@@ -4,8 +4,6 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFE
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.CRC32C
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -131,61 +129,32 @@ object TfRecord {
     * partition under `path` (repartition upstream to set the shard
     * count). Returns the number of shards written.
     *
-    * Commit protocol: each task writes a DOT-PREFIXED temp file (both
-    * the TFRecord reader here and Hadoop input formats skip hidden
-    * `.`/`_` files, so in-progress or orphaned attempts are never
-    * read) and renames it into place when its iterator completes;
-    * with speculative/retried attempts the first rename wins. The
-    * driver stamps `_SUCCESS` after the job, mirroring Hadoop
-    * committers. Null payloads fail loudly — silently skipping rows
-    * of a training set is worse than failing the job.
+    * Commit protocol ([[PartFiles]]): each task writes a DOT-PREFIXED
+    * temp file (both the TFRecord reader here and Hadoop input formats
+    * skip hidden `.`/`_` files, so in-progress or orphaned attempts are
+    * never read) and renames it into place when its iterator
+    * completes; with speculative/retried attempts the first rename
+    * wins. The driver stamps `_SUCCESS` after the job, mirroring Hadoop
+    * committers. Null payloads fail loudly — silently skipping rows of
+    * a training set is worse than failing the job.
     */
-  def write(df: DataFrame, path: String, valueCol: String = "value"): Int = {
-    import org.apache.spark.sql.Encoders
-    import scala.jdk.CollectionConverters._
-    val data = df.select(col(valueCol).cast("binary")).as(Encoders.BINARY)
-    val spark = df.sparkSession
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(hadoopConf)
-    fs.delete(dir, true) // overwrite semantics: no stale shards
-    fs.mkdirs(dir)
-    // SerializableConfiguration is private[spark]; ship the entries.
-    val confEntries = spark.sparkContext.broadcast(
-      hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap)
-    val shards = data.rdd.mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        val taskConf = new Configuration(false)
-        confEntries.value.foreach { case (k, v) => taskConf.set(k, v) }
-        val ctx = TaskContext.get()
-        val part = ctx.partitionId()
-        val finalFile = new Path(s"$path/part-${"%05d".format(part)}.tfrecord")
-        val tempFile = new Path(s"$path/.part-${"%05d".format(part)}.attempt-${ctx.taskAttemptId()}")
-        val fsTask = finalFile.getFileSystem(taskConf)
-        val out = new java.io.DataOutputStream(
-          new BufferedOutputStream(fsTask.create(tempFile, true), 1 << 16))
-        var n = 0L
-        try {
-          it.foreach { payload =>
-            if (payload == null) throw new IllegalArgumentException(
-              s"TfRecord.write: null payload in partition $part record $n — " +
-                "filter or encode nulls upstream")
-            writeRecord(out, payload)
-            n += 1
-          }
-          out.close()
-          // first successful attempt wins; losers remain hidden temps
-          if (!fsTask.rename(tempFile, finalFile) && !fsTask.exists(finalFile))
-            throw new java.io.IOException(s"TfRecord.write: could not commit $finalFile")
-        } finally {
-          out.close()
-          fsTask.delete(tempFile, false) // no-op when renamed
-        }
-        Iterator.single(1)
+  def write(df: DataFrame, path: String, valueCol: String = "value"): Int =
+    PartFiles.writeShards(df.select(col(valueCol).cast("binary")), path, Encoder)
+
+  /** TFRecord framing of a one-binary-column row per record. */
+  private object Encoder extends PartFiles.Encoder {
+    val ext = "tfrecord"
+    def open(out0: java.io.OutputStream): PartFiles.Sink = new PartFiles.Sink {
+      private val out = new java.io.DataOutputStream(new BufferedOutputStream(out0, 1 << 16))
+      private var n = 0L
+      def write(row: Row): Unit = {
+        if (row.isNullAt(0)) throw new IllegalArgumentException(
+          s"TfRecord.write: null payload in partition ${TaskContext.getPartitionId()} " +
+            s"record $n — filter or encode nulls upstream")
+        writeRecord(out, row.getAs[Array[Byte]](0))
+        n += 1
       }
-    }.sum().toInt
-    fs.create(new Path(dir, "_SUCCESS"), true).close()
-    shards
+      def close(): Unit = out.close()
+    }
   }
 }

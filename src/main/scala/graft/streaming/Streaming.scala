@@ -348,7 +348,11 @@ object StreamSinks {
     * micro-batch samples its own destination histogram — and
     * `carryManifest = true` turns Sampled into carry-forward mode:
     * batch N reuses batch N−1's manifest instead of re-sampling (see
-    * [[perBatchDynamic]]).
+    * [[perBatchDynamic]]). The carried manifest lives in the writer
+    * instance, not in the checkpoint: the first batch after a restart
+    * samples again. Its rows and its committed tree are those of an
+    * uninterrupted run; only its spread over part files may differ.
+    * The same holds for every `toDynamic*` sink below.
     */
   def toDynamicText(ds: Dataset[Row], path: String, destCol: String, textCol: String,
                     fanout: graft.sources.Dynamic.Fanout = graft.sources.Dynamic.Fanout.Static(1),

@@ -1,6 +1,6 @@
 package graft.tools
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 
 /** Calibrated cross-round bench comparison (SCALING.md "Calibration"):
   * turns the round-over-round drift adjudication from forensic prose
@@ -63,9 +63,8 @@ object BenchCompare {
     * can pin the normalization arithmetic on synthetic artifacts).
     */
   def compare(refPath: String, curPath: String, threshold: Double = 0.10): String = {
-    val om = new ObjectMapper()
-    val ref = om.readTree(new java.io.File(refPath))
-    val cur = om.readTree(new java.io.File(curPath))
+    val ref = graft.util.Artifacts.json.readTree(new java.io.File(refPath))
+    val cur = graft.util.Artifacts.json.readTree(new java.io.File(curPath))
     val calibRef = calibMulti(ref.get("env"), refPath)
     val calibCur = calibMulti(cur.get("env"), curPath)
     // machine speed change, measured: >1 means the current machine is

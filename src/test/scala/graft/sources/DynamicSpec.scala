@@ -1018,4 +1018,29 @@ class DynamicSpec extends SparkSpec {
     val raw = linesUnder(out).values.flatten.filterNot(_ == "ts")
     assert(raw.forall(_.endsWith("Z")), s"expected UTC-offset rendering, got $raw")
   }
+
+  test("Avro.read and Protobuf.read accept a destination dir of a completed dynamic tree") {
+    import org.apache.spark.sql.types._
+    val df = Seq(("t/a", 1L, "alpha"), ("t/b", 2L, "beta"), ("t/a", 3L, "gamma"))
+      .toDF("dest", "id", "name")
+    val avroTree = tmpDir()
+    Dynamic.saveAsDynamicAvro(df, avroTree.getAbsolutePath, "dest")
+    val protoTree = tmpDir()
+    Dynamic.saveAsDynamicProtobuf(df, protoTree.getAbsolutePath, "dest")
+    val schema = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
+    def pairs(back: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      back.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    val expect = Seq((1L, "alpha"), (3L, "gamma"))
+    assert(pairs(Avro.read(spark, s"${avroTree.getAbsolutePath}/t/a")) == expect)
+    assert(pairs(Protobuf.read(spark, s"${protoTree.getAbsolutePath}/t/a", schema)) == expect)
+  }
+
+  test("Avro.read refuses a destination dir of a crashed dynamic tree") {
+    val out = tmpDir()
+    Dynamic.saveAsDynamicAvro(Seq(("d", 1L)).toDF("dest", "id"), out.getAbsolutePath, "dest")
+    // a crashed write leaves only the ownership stamp
+    assert(new java.io.File(out, Dynamic.MarkerDone).delete())
+    val e = intercept[IllegalArgumentException](Avro.read(spark, s"${out.getAbsolutePath}/d"))
+    assert(e.getMessage.contains("_SUCCESS"))
+  }
 }

@@ -62,7 +62,7 @@ class SourcesSpec extends SparkSpec {
     val ev = spark.read.parquet(s"$sf/orders.parquet")
       .withColumn("status", col("o_orderstatus"))
     Sources.writeParquet(ev, s"$base/part_parquet", partitionBy = Seq("status"))
-    val one = spark.read.parquet(s"$base/part_parquet").filter(col("status") === "F")
+    val one = Sources.readParquet(spark, s"$base/part_parquet").filter(col("status") === "F")
     val explain = one.queryExecution.executedPlan.toString()
     assert(one.count() == ev.filter(col("o_orderstatus") === "F").count())
     // partition filter must reach the scan, not a post-scan Filter

@@ -777,6 +777,68 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("carryManifest across a restart: the first batch after it samples again, and the " +
+    "rows and trees equal an uninterrupted run's") {
+    implicit val sqlCtx = spark.sqlContext
+    // same knobs as the carryManifest test: batch 2's 900 hot rows are
+    // under target, so only a carried batch-1 manifest (900·1.2 = 1080
+    // rows expected) spreads them — and a restarted writer has none
+    spark.conf.set("spark.graft.dynamic.autoTargetRows", "1000")
+    spark.conf.set("spark.graft.dynamic.autoSampleFraction", "1.0")
+    spark.conf.set("spark.graft.dynamic.autoMaxSalts", "8")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val batches = Seq(
+      (1 to 2600).map(i => ("hot", s"h$i")) :+ (("cold", "c1")),
+      (1 to 900).map(i => ("hot", s"g$i")),
+      (1 to 900).map(i => ("hot", s"k$i")))
+    // runs the three batches, stopping the query after batch `stopAfter`
+    // and restarting it from the same checkpoint
+    def run(stopAfter: Option[Int]): java.io.File = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_stream_carry_restart").toFile
+      val input = MemoryStream[(String, String)]
+      def start() = StreamSinks.toDynamicText(input.toDF().toDF("dest", "text"),
+          new java.io.File(dir, "out").getPath, "dest", "text",
+          fanout = graft.sources.Dynamic.Fanout.Sampled, carryManifest = true)
+        .option("checkpointLocation", new java.io.File(dir, "ckp").getPath).start()
+      var q = start()
+      try batches.zipWithIndex.foreach { case (rows, i) =>
+        input.addData(rows)
+        q.processAllAvailable()
+        if (stopAfter.contains(i)) { q.stop(); q = start() }
+      } finally q.stop()
+      dir
+    }
+    val whole = run(None)
+    val restarted = run(Some(1))
+    try {
+      def batchDirs(dir: java.io.File): Seq[java.io.File] =
+        new java.io.File(dir, "out").listFiles().filter(_.getName.startsWith("batch-"))
+          .sortBy(_.getName).toSeq
+      def hotFiles(dir: java.io.File, batch: String): Int =
+        new java.io.File(new java.io.File(dir, s"out/$batch"), "hot")
+          .listFiles().count(_.getName.startsWith("part-"))
+      def rows(dir: java.io.File): Seq[String] = batchDirs(dir).flatMap(d =>
+        graft.sources.Dynamic.readDynamicText(spark, d.getAbsolutePath).collect()
+          .map(r => s"${d.getName}/${r.getString(0)}/${r.getString(1)}")).sorted
+      assert(batchDirs(restarted).map(_.getName) == Seq("batch-00000", "batch-00001", "batch-00002"))
+      assert(rows(restarted) == rows(whole))
+      (batchDirs(whole) ++ batchDirs(restarted)).foreach { d =>
+        val issues = graft.sources.Dynamic.verifyDynamicTree(spark, d.getAbsolutePath).collect()
+        assert(issues.isEmpty, s"$d: ${issues.mkString(", ")}")
+      }
+      assert(hotFiles(whole, "batch-00002") > 1, "an uninterrupted run carries batch 1's manifest")
+      assert(hotFiles(restarted, "batch-00002") == 1,
+        "the carried manifest lives in the writer: a restarted stream's first batch samples again")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(whole)
+      org.apache.commons.io.FileUtils.deleteQuietly(restarted)
+      spark.conf.unset("spark.graft.dynamic.autoTargetRows")
+      spark.conf.unset("spark.graft.dynamic.autoSampleFraction")
+      spark.conf.unset("spark.graft.dynamic.autoMaxSalts")
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
+  }
+
   test("StreamMonitor: per-micro-batch expectation counts ride the query") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]

@@ -219,69 +219,6 @@ object Bench {
       SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Capped-bucket observability: the dedup/ANN operators tag their
-    // plans with observe() metrics (Dedup.observeCap) counting rows
-    // the maxBucket cap excluded — the recall-loss dial a 100 TB run
-    // watches. Collect them off every successful query execution and
-    // emit them in the bench JSON, so each round's BENCH records not
-    // just how fast the capped operators ran but how much the caps
-    // actually dropped at this sf.
-    val capMetrics = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        qe.observedMetrics.foreach { case (name, row) =>
-          if (name.startsWith("graft_cap_")) {
-            // strip the uniquifying counter suffix → one entry per operator
-            val op = name.stripPrefix("graft_cap_").replaceAll("_\\d+$", "")
-            def longAt(field: String): Long = {
-              val i = row.fieldIndex(field)
-              if (row.isNullAt(i)) 0L else row.getLong(i)
-            }
-            capMetrics.put(op, (longAt("rows_in_capped_buckets"), longAt("bucket_rows")))
-          }
-        }
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    })
-
-    // Shuffle/spill observability: accumulate executor task metrics so
-    // each query's TOTAL shuffle read/write bytes and spill land in the
-    // bench JSON. Wall-clock says how fast a query ran on THIS box;
-    // shuffle bytes say what it would COST on a 1000-executor cluster —
-    // the number that decides whether a shape survives 100 TB (e.g. the
-    // substring-dedup census must shuffle 8-byte hashes, never text;
-    // this makes that claim a measured artifact instead of a comment).
-    val mShufRead = new java.util.concurrent.atomic.AtomicLong()
-    val mShufWrite = new java.util.concurrent.atomic.AtomicLong()
-    val mSpill = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          mShufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          mShufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          mSpill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        }
-      }
-    })
-    // Task-end events post asynchronously on the listener bus; poll the
-    // counters until stable (bounded) so a per-query delta doesn't
-    // absorb the tail of the previous query's tasks.
-    def settledCounters(): (Long, Long, Long) = {
-      var prev = (-1L, -1L, -1L)
-      var cur = (mShufRead.get, mShufWrite.get, mSpill.get)
-      val deadline = System.nanoTime() + 2000000000L
-      while (cur != prev && System.nanoTime() < deadline) {
-        prev = cur
-        Thread.sleep(100)
-        cur = (mShufRead.get, mShufWrite.get, mSpill.get)
-      }
-      cur
-    }
-
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the suite — the sf10+
     // spot-gate knob (a full headline sweep at 100× the bench sf blows
     // the wall-clock budget without adding signal beyond the targeted
@@ -328,26 +265,35 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
     val names = headline.filter(all.contains)
     val samples = scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
-    // per-query (shuffle_read, shuffle_write, spill) bytes, measured on
-    // the first timed pass (post-warmup steady state; the volumes are
-    // deterministic across passes, so one measurement suffices). The
-    // counter snapshots sit OUTSIDE the t0..t1 window, so the timing is
-    // unaffected.
+    // Each query's first timed pass (post-warmup steady state; the
+    // volumes are deterministic across passes) runs in its own JobScope,
+    // which reports, once the pass is over and outside its timing:
+    //  - the pass's total shuffle read/write and spill bytes. Wall-clock
+    //    says how fast a query ran on THIS box; shuffle bytes say what it
+    //    would COST on a 1000-executor cluster — the number that decides
+    //    whether a shape survives 100 TB (e.g. the substring-dedup census
+    //    must shuffle 8-byte hashes, never text);
+    //  - the rows the dedup/ANN operators' maxBucket caps excluded
+    //    (Dedup.observeCap) — the recall-loss dial a 100 TB run watches,
+    //    so each BENCH records how much the caps dropped at this sf.
     val shuffleStats = scala.collection.mutable.Map[String, (Long, Long, Long)]()
-    (1 to reps).foreach { pass =>
-      names.foreach { name =>
-        val before = if (pass == 1) settledCounters() else null
-        val t0 = System.nanoTime()
-        try all(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-        samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
-        if (pass == 1) {
-          val after = settledCounters()
-          shuffleStats(name) =
-            (after._1 - before._1, after._2 - before._2, after._3 - before._3)
-        }
-      }
+    val capMetrics = scala.collection.mutable.Map[String, graft.dedup.Dedup.CapCounts]()
+    def timed(name: String): Double = {
+      val t0 = System.nanoTime()
+      try all(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
+      (System.nanoTime() - t0) / 1e9
     }
+    def measured(name: String): Double = {
+      val (secs, m) = graft.util.JobScope.run(spark, name)(timed(name))
+      shuffleStats(name) = (m.sum(_.shuffleReadMetrics.totalBytesRead),
+        m.sum(_.shuffleWriteMetrics.bytesWritten),
+        m.sum(t => t.memoryBytesSpilled + t.diskBytesSpilled))
+      m.actions.foreach { case (_, qe) => capMetrics ++= graft.dedup.Dedup.capCounts(qe.observedMetrics) }
+      secs
+    }
+    for (pass <- 1 to reps; name <- names)
+      samples(name) = samples(name) :+ (if (pass == 1) measured(name) else timed(name))
     def median(xs: List[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
@@ -441,8 +387,7 @@ object Bench {
     def jmap(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => "\"" + k + f"""":$v%.3f""" }.mkString("{", ",", "}")
     val total = results.filterNot(r => auxiliary(r._1)).map(_._2).sum
-    import scala.jdk.CollectionConverters._
-    val caps = capMetrics.asScala.toSeq.sortBy(_._1).map { case (op, (capped, rows)) =>
+    val caps = capMetrics.toSeq.sortBy(_._1).map { case (op, graft.dedup.Dedup.CapCounts(capped, rows)) =>
       s""""$op":{"rows_in_capped_buckets":$capped,"bucket_rows":$rows}"""
     }.mkString("{", ",", "}")
     val shuffles = names.flatMap(n => shuffleStats.get(n).map(n -> _))

@@ -15,6 +15,11 @@ object Diag {
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    def run(): Double = {
+      val t0 = System.nanoTime()
+      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
     if (args.length > 2 && args(2) == "explain") {
       // built here, not above: IO-query lambdas perform eager writes
       // that must not run (untimed) before the timed branch
@@ -24,57 +29,38 @@ object Diag {
       // Stage-level attribution (optimization guide §1.1): one warm
       // pass, then a profiled pass recording every stage's wall /
       // task count / shuffle volumes, printed slowest-first — says
-      // WHERE a query's seconds go without the (disabled) UI.
-      val stages = new java.util.concurrent.ConcurrentLinkedQueue[
-        (Int, String, Long, Int, Long, Long, Long, Long, Long)]()
-      val submits = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val wall = (for { s <- si.submissionTime; c <- si.completionTime } yield c - s)
-            .getOrElse(-1L)
-          stages.add((si.stageId, si.name.takeWhile(_ != '\n').take(90), wall,
-            si.numTasks, si.taskMetrics.shuffleReadMetrics.totalBytesRead,
-            si.taskMetrics.shuffleWriteMetrics.bytesWritten,
-            si.taskMetrics.executorRunTime,
-            si.taskMetrics.executorCpuTime / 1000000L,
-            si.taskMetrics.jvmGCTime))
-          si.submissionTime.foreach(t => submits.put(si.stageId, t))
-        }
-      })
-      def run(): Double = {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      // WHERE a query's seconds go without the (disabled) UI. Each row
+      // names the query and the Fixpoint round ("-" outside loops)
+      // whose job ran the stage.
       val warm = run() // codegen/footer caches + any train-once artifacts
-      stages.clear()
-      val timed = run()
-      Thread.sleep(500) // let the listener bus drain
+      val (timed, m) = graft.util.JobScope.run(spark, name)(run())
       println(f"[diag] $name warm=$warm%.3f s profiled=$timed%.3f s — stages by wall:")
-      import scala.jdk.CollectionConverters._
-      val rows = stages.asScala.toSeq.sortBy(-_._3)
-      rows.foreach { case (id, nm, wall, tasks, sr, sw, run, cpu, gc) =>
-        println(f"[stage] $wall%6d ms  run=$run%6d ms  cpu=$cpu%6d ms  gc=$gc%5d ms  " +
-          f"tasks=$tasks%4d  sread=${sr / 1024}%8d KB  swrite=${sw / 1024}%8d KB  s$id%-5d $nm")
+      def tag(s: graft.util.JobScope.Stage): String =
+        s"s${s.info.stageId} q=${s.label} round=${s.round.getOrElse("-")}"
+      def wallMs(s: graft.util.JobScope.Stage): Long =
+        (for { a <- s.info.submissionTime; b <- s.info.completionTime } yield b - a).getOrElse(-1L)
+      val rows = m.stages.sortBy(-wallMs(_))
+      rows.foreach { s =>
+        val t = s.info.taskMetrics
+        println(f"[stage] ${wallMs(s)}%6d ms  run=${t.executorRunTime}%6d ms  " +
+          f"cpu=${t.executorCpuTime / 1000000L}%6d ms  gc=${t.jvmGCTime}%5d ms  " +
+          f"tasks=${s.info.numTasks}%4d  sread=${t.shuffleReadMetrics.totalBytesRead / 1024}%8d KB  " +
+          f"swrite=${t.shuffleWriteMetrics.bytesWritten / 1024}%8d KB  ${tag(s)}%-28s " +
+          s.info.name.takeWhile(_ != '\n').take(90))
       }
-      println(f"[diag] stage wall sum=${rows.map(_._3).sum}%d ms over ${rows.size}%d stages " +
+      println(f"[diag] stage wall sum=${rows.map(wallMs).sum}%d ms over ${rows.size}%d stages " +
         "(stages overlap; sum > query wall is normal)")
       // timeline: stage submission/completion offsets expose DRIVER
       // gaps (planning, AQE rounds, broadcast builds) between stages
-      val t0all = stages.asScala.flatMap(s => submits.asScala.get(s._1)).minOption.getOrElse(0L)
-      stages.asScala.toSeq.sortBy(s => submits.asScala.getOrElse(s._1, 0L)).foreach { s =>
-        val sub = submits.asScala.getOrElse(s._1, 0L) - t0all
-        println(f"[timeline] s${s._1}%-5d submit=+$sub%6d ms  wall=${s._3}%5d ms  tasks=${s._4}%4d")
+      val t0all = m.stages.flatMap(_.info.submissionTime).minOption.getOrElse(0L)
+      m.stages.sortBy(_.info.submissionTime.getOrElse(0L)).foreach { s =>
+        val at = s.info.submissionTime.getOrElse(0L) - t0all
+        println(f"[timeline] ${tag(s)}%-28s submit=+$at%6d ms  wall=${wallMs(s)}%5d ms  " +
+          f"tasks=${s.info.numTasks}%4d")
       }
     } else {
       val reps = if (args.length > 2) args(2).toInt else 1
-      (1 to reps).foreach { r =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        println(f"[diag] $name run $r: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
+      (1 to reps).foreach(r => println(f"[diag] $name run $r: ${run()}%.3f s"))
     }
     spark.stop()
   }

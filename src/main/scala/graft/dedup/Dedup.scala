@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
@@ -42,10 +42,11 @@ object Dedup {
   /** No silent caps: every `maxBucket`-capped operator tags its plan
     * with an `observe()` metric so the recall loss is measurable per
     * run — `rows_in_capped_buckets` (bucket rows the cap excluded
-    * from linking/pair generation) out of `bucket_rows` total. Read
-    * via a `QueryExecutionListener` (`qe.observedMetrics`, metric
-    * name prefix `graft_cap_<op>`) or the SQL UI; a driver-side log
-    * would force an eager extra action on a lazy frame. The counter
+    * from linking/pair generation) out of `bucket_rows` total, as the
+    * metric `graft_cap_<op>_<n>`. Read it with [[capCounts]] from the
+    * `observedMetrics` of the action's QueryExecution, such as the
+    * actions a `util.JobScope` records, or in the SQL UI; a driver-side
+    * log would force an eager extra action on a lazy frame. The counter
     * suffix keeps names unique when one session plans the operator
     * many times. Caveat: observedMetrics are read off the FINAL
     * adaptive plan, so if AQE empty-relation propagation collapses the
@@ -60,6 +61,19 @@ object Dedup {
     df.observe(s"graft_cap_${op}_${capObsId.getAndIncrement()}",
       sum(when(bn > maxBucket, lit(1L)).otherwise(lit(0L))).as("rows_in_capped_buckets"),
       count(lit(1)).as("bucket_rows"))
+
+  private[graft] final case class CapCounts(rowsInCappedBuckets: Long, bucketRows: Long)
+
+  /** The [[observeCap]] metrics among one action's observed metrics,
+    * keyed by operator (`graft_cap_<op>_<n>` → `<op>`); a sum over no
+    * rows reads 0.
+    */
+  private[graft] def capCounts(observed: Map[String, Row]): Map[String, CapCounts] =
+    observed.collect { case (name, row) if name.startsWith("graft_cap_") =>
+      def at(field: String) = Option(row.getAs[java.lang.Long](field)).fold(0L)(_.longValue)
+      name.stripPrefix("graft_cap_").replaceAll("_\\d+$", "") ->
+        CapCounts(at("rows_in_capped_buckets"), at("bucket_rows"))
+    }
 
   /** Exact dedup by content hash: one row per distinct content with
     * the deterministic keeper (min id) and multiplicity.
@@ -786,13 +800,18 @@ object Dedup {
     * query-time hot-bucket cap is a pushable filter instead of a
     * window over the index), plus a `_GRAFT_MINHASH` JSON sidecar
     * pinning the parameters (validated on every use; a mismatched
-    * read fails loudly instead of silently finding nothing).
+    * read fails loudly instead of silently finding nothing). A
+    * rewrite removes the old sidecar before its first data write and
+    * writes the new one last, so a rewrite that dies midway leaves a
+    * directory that reads as "not a graft MinHash index", never a
+    * stale sidecar beside emptied data ([[extendMinhashIndex]] too).
     */
   def saveMinhashIndex(df: DataFrame, idCol: String, textCol: String, path: String,
                        shingleK: Int = 3, numHashes: Int = 128, bands: Int = 64): Unit = {
     val spark = df.sparkSession
     val sigs = signatures(df, idCol, textCol, shingleK, numHashes, bands,
       withShingleSets = false)
+    Artifacts.delete(spark, s"$path/$MinhashIndexMeta")
     sigs.select(col("id"), col("sig")).write.mode("overwrite").parquet(s"$path/sigs")
     val bandRows = sigs.select(col("id"), posexplode(col("bandhashes")).as(Seq("band", "bh")))
       .withColumn("n", count(lit(1)).over(Window.partitionBy(col("band"), col("bh"))))
@@ -848,6 +867,7 @@ object Dedup {
         .collect().map(_.get(0))
       require(clashes.isEmpty,
         s"new crawl reuses ids already in the index at $indexPath: ${clashes.mkString(", ")}")
+      Artifacts.delete(spark, s"$outPath/$MinhashIndexMeta")
       old.select(col("id"), col("sig")).union(fresh)
         .write.mode("overwrite").parquet(s"$outPath/sigs")
       // Band ONLY the new crawl: the old sigs' band rows are already in

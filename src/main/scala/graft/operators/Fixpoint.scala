@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.col
+import graft.util.JobScope
 
 /** The loop kernel behind every iterative operator in graft: the seven
   * [[Graph]] loops and `Dedup.minhashClustersTransitive`. The shape is
@@ -108,12 +110,16 @@ private[graft] object Fixpoint {
 
   def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
-  /** Checkpoints `df` and reads its observed scalars straight from the
-    * checkpoint's own QueryExecution as soon as it returns. That is the
-    * same map Spark's observation handles receive later through the
-    * asynchronous listener bus, so no round waits on that bus.
+  /** Builds round `i`'s `state` with `i` as its jobs'
+    * `JobScope.RoundKey`, checkpoints it, and reads its observed scalars
+    * straight from the checkpoint's own QueryExecution as soon as it
+    * returns. That is the same map Spark's observation handles receive
+    * later through the asynchronous listener bus, so no round waits on
+    * that bus.
     */
-  private def round(df: DataFrame): (DataFrame, Row) = {
+  private def round(sc: SparkContext, i: Int)(state: => DataFrame): (DataFrame, Row) = {
+    sc.setLocalProperty(JobScope.RoundKey, i.toString)
+    val df = state
     val ckpt = checkpoint(df)
     (ckpt, df.queryExecution.observedMetrics.getOrElse(Metric, Row.empty))
   }
@@ -122,17 +128,26 @@ private[graft] object Fixpoint {
     * checkpointing `step(state, scalars of the previous round)`. Stops
     * early once `done(previous scalars, this round's scalars)` holds.
     * Returns the last state and whether `done` stopped the loop.
+    *
+    * Each round's jobs carry the round number (0 for `init`) in the
+    * local property `JobScope.RoundKey`, which `util.JobScope` records
+    * per stage; the caller's value is restored afterwards. It is not
+    * the job group, which a loop nested in a measured scope must keep.
     */
   def iterate(init: DataFrame, maxIters: Int, done: (Row, Row) => Boolean = (_, _) => false)
              (step: (DataFrame, Row) => DataFrame): (DataFrame, Boolean) = {
-    var (state, seen) = round(init)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val (next, now) = round(step(state, seen))
-      converged = done(seen, now)
-      state = next; seen = now; i += 1
-    }
-    (state, converged)
+    val sc = init.sparkSession.sparkContext
+    val outer = sc.getLocalProperty(JobScope.RoundKey)
+    try {
+      var (state, seen) = round(sc, 0)(init)
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIters) {
+        val (next, now) = round(sc, i + 1)(step(state, seen))
+        converged = done(seen, now)
+        state = next; seen = now; i += 1
+      }
+      (state, converged)
+    } finally sc.setLocalProperty(JobScope.RoundKey, outer)
   }
 }

@@ -254,12 +254,16 @@ object Sketches {
   /** Build and persist a sketch index: parquet sketch table + param
     * sidecar. `kind` ∈ {hll, theta, freq, kll, varopt, tuple}; `lgK`
     * is the kind's size parameter (see the object doc) and varopt and
-    * tuple need `weightCol`.
+    * tuple need `weightCol`. A rewrite removes the old sidecar before
+    * the table write and writes the new one last, so a rewrite that
+    * dies midway reads as "not a graft sketch index" ([[extendIndex]]
+    * too).
     */
   def saveIndex(df: DataFrame, valueCol: String, groupCols: Seq[String],
                 path: String, kind: String = "hll", lgK: Int = 12,
                 weightCol: String = ""): Unit = {
     val p = SketchIndexParams(kind, lgK, valueCol, groupCols, weightCol)
+    Artifacts.delete(df.sparkSession, s"$path/$Meta")
     buildTable(df, p).write.mode("overwrite").parquet(s"$path/sketches")
     writeMeta(df.sparkSession, path, p)
   }
@@ -325,6 +329,7 @@ object Sketches {
     val p = loadIndexParams(spark, indexPath)
     val fresh = buildTable(newDf, p)
     val old = spark.read.parquet(s"$indexPath/sketches")
+    Artifacts.delete(spark, s"$outPath/$Meta")
     unionTables(kindOf(p.kind), p.lgK, p.groupCols, old, fresh)
       .write.mode("overwrite").parquet(s"$outPath/sketches")
     writeMeta(spark, outPath, p)

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.JobScope
 
 /** Measures the chunked variants' straggler win on a skewed corpus —
   * the recording behind SCALING.md's "hot-key chunking" section. The
@@ -29,68 +30,20 @@ import org.apache.spark.sql.functions._
   */
 object SkewBench {
 
-  private final class TaskStats {
-    val maxDurMs = new java.util.concurrent.atomic.AtomicLong()
-    val maxShuffleRecords = new java.util.concurrent.atomic.AtomicLong()
-    val tasksWithRows = new java.util.concurrent.atomic.AtomicLong()
-    // monotone task-end event counter — the settle-loop fingerprint. A
-    // sum of maxima/conditional counters could read "stable" while late
-    // events still arrive (two compensating updates, or an event that
-    // moves neither max); every event bumps this exactly once.
-    val events = new java.util.concurrent.atomic.AtomicLong()
-    def update(durMs: Long, recs: Long): Unit = {
-      maxDurMs.getAndAccumulate(durMs, math.max)
-      maxShuffleRecords.getAndAccumulate(recs, math.max)
-      if (recs > 0) { tasksWithRows.incrementAndGet(); () }
-      events.incrementAndGet(); ()
-    }
-  }
-
-  /** Run `body` under a private job group; returns (wallSec, stats)
-    * from task-end events of that group's jobs only.
+  /** Runs `body` in a JobScope of its own and prints its JSON line,
+    * from that body's jobs only.
     */
-  private def measure(spark: SparkSession)(body: => Unit): (Double, TaskStats) = {
-    val jobGroup = s"graft-skewbench-${System.nanoTime()}"
-    val stats = new TaskStats
-    val ownStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            jobGroup == js.properties.getProperty("spark.jobGroup.id")) {
-          js.stageIds.foreach(id => ownStages.add(id)); ()
-        }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null && ownStages.contains(te.stageId))
-          stats.update(te.taskInfo.duration,
-            m.shuffleReadMetrics.recordsRead)
-      }
+  private def measure(spark: SparkSession, op: String, variant: String)(body: => Unit): Unit = {
+    val (wall, m) = JobScope.run(spark, s"$op/$variant") {
+      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(jobGroup, "skew bench measurement")
-    val t0 = System.nanoTime()
-    try body finally {
-      spark.sparkContext.clearJobGroup()
-    }
-    val wall = (System.nanoTime() - t0) / 1e9
-    // task-end events post asynchronously: settle on the MONOTONE event
-    // counter (not a sum of maxima, which can read stable one cycle
-    // early while late events still arrive)
-    var prev = -1L; var cur = stats.events.get
-    val deadline = System.nanoTime() + 10000000000L
-    while (cur != prev && System.nanoTime() < deadline) {
-      prev = cur; Thread.sleep(200); cur = stats.events.get
-    }
-    spark.sparkContext.removeSparkListener(listener)
-    (wall, stats)
-  }
-
-  private def emit(op: String, variant: String, wall: Double, st: TaskStats): Unit =
+    val reads = m.tasks.map(_.taskMetrics.shuffleReadMetrics.recordsRead)
     println(f"""{"op":"$op%s","variant":"$variant%s","wall_sec":$wall%.3f,""" +
-      f""""max_task_sec":${st.maxDurMs.get / 1000.0}%.3f,""" +
-      f""""max_task_shuffle_records":${st.maxShuffleRecords.get}%d,""" +
-      f""""tasks_with_rows":${st.tasksWithRows.get}%d,""" +
-      f""""tasks":${st.events.get}%d}""")
+      f""""max_task_sec":${m.tasks.map(_.taskInfo.duration).maxOption.getOrElse(0L) / 1000.0}%.3f,""" +
+      f""""max_task_shuffle_records":${reads.maxOption.getOrElse(0L)}%d,""" +
+      f""""tasks_with_rows":${reads.count(_ > 0)}%d,""" +
+      f""""tasks":${m.tasks.size}%d}""")
+  }
 
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 5000000L
@@ -136,12 +89,8 @@ object SkewBench {
 
     val winSec = 3600L
 
-    def run(op: String, variant: String)(df: => DataFrame): Unit = {
-      val (wall, st) = measure(spark) {
-        df.write.format("noop").mode("overwrite").save()
-      }
-      emit(op, variant, wall, st)
-    }
+    def run(op: String, variant: String)(df: => DataFrame): Unit =
+      measure(spark, op, variant)(df.write.format("noop").mode("overwrite").save())
 
     // warm EVERY measured path once on a small slice (codegen compile,
     // shuffle machinery, plan-node classloading), untimed — otherwise
@@ -188,11 +137,10 @@ object SkewBench {
     val dynBase = s"/tmp/graft_skewbench_dyn_${System.nanoTime()}"
     def runDynamic(variant: String, fanout: graft.sources.Dynamic.Fanout): Unit = {
       val dir = s"$dynBase/$variant"
-      val (wall, st) = measure(spark) {
+      measure(spark, "dynamic_text", variant) {
         graft.sources.Dynamic.saveAsDynamicText(destCorpus, dir, "dest", "text",
           fanout = fanout)
       }
-      emit("dynamic_text", variant, wall, st)
     }
     if (arms("dynamic")) {
       spark.conf.set("spark.sql.adaptive.enabled", "false")

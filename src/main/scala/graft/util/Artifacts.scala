@@ -34,6 +34,12 @@ object Artifacts {
     fileSystem(spark, p).exists(p)
   }
 
+  /** Removes the file at `path`, if there is one. */
+  def delete(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    fileSystem(spark, p).delete(p, false)
+  }
+
   /** Write `path` on any Hadoop-visible file system through `body`,
     * as a temp file in the same directory and an atomic rename: a
     * reader sees either the old complete file or the new complete

@@ -10,9 +10,8 @@ import org.apache.spark.sql.classic.ColumnConversions
   * Spark 4 made the Column companion private[sql] (Columns are
   * ColumnNode-based for Connect); classic-mode libraries adding custom
   * expressions bridge from inside the sql package — the same pattern
-  * spark connectors use. This is the only file in graft that lives in
-  * Spark's namespace, and it only delegates to the two public classic
-  * converters.
+  * spark connectors use. Like every graft file in Spark's namespace, it
+  * only delegates, here to the two public classic converters.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ClassicConversions.ColumnConstructorExt(Column)(e)

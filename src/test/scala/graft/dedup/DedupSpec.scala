@@ -109,49 +109,33 @@ class DedupSpec extends SparkSpec {
   }
 
   test("cap exclusions surface as graft_cap observe metrics (no silent caps)") {
-    import scala.jdk.CollectionConverters._
-    val captured = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.foreach { case (k, v) =>
-          if (k.startsWith("graft_cap_")) captured.put(k, v) }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      // 200 identical docs (every one of their buckets over the cap)
-      // plus a small twin pair and unique fillers: the twins survive
-      // the cap AND emit a pair, keeping the final result non-empty —
-      // otherwise AQE empty-propagation prunes the CollectMetrics node
-      // from the final plan (the documented metric caveat).
-      val degenerate = spark.range(200).select(col("id").as("doc_id"),
-          lit("one boilerplate page duplicated across the entire crawl corpus").as("text"))
-        .union(spark.range(2).select((col("id") + 1000).as("doc_id"),
-          lit("a small twin document that appears exactly twice in this corpus").as("text")))
-        .union(spark.range(8).select((col("id") + 2000).as("doc_id"),
-          concat(lit("unique filler number "), col("id"),
-            lit(" carrying entirely unrelated vocabulary items")).as("text")))
+    // 200 identical docs (every one of their buckets over the cap)
+    // plus a small twin pair and unique fillers: the twins survive
+    // the cap AND emit a pair, keeping the final result non-empty —
+    // otherwise AQE empty-propagation prunes the CollectMetrics node
+    // from the final plan (the documented metric caveat).
+    val degenerate = spark.range(200).select(col("id").as("doc_id"),
+        lit("one boilerplate page duplicated across the entire crawl corpus").as("text"))
+      .union(spark.range(2).select((col("id") + 1000).as("doc_id"),
+        lit("a small twin document that appears exactly twice in this corpus").as("text")))
+      .union(spark.range(8).select((col("id") + 2000).as("doc_id"),
+        concat(lit("unique filler number "), col("id"),
+          lit(" carrying entirely unrelated vocabulary items")).as("text")))
+    val (_, scope) = graft.util.JobScope.run(spark, "cap metrics") {
       Dedup.minhashClusters(degenerate, "doc_id", "text", maxBucket = 50).count()
       Dedup.minhashPairs(degenerate, "doc_id", "text", maxBucket = 50).count()
       Dedup.simhashPairs(degenerate, "doc_id", "text", maxBucket = 50).count()
-      // QueryExecutionListener delivery is async
-      val deadline = System.currentTimeMillis() + 30000
-      while (!Seq("minhash_clusters", "minhash_pairs", "simhash_pairs").forall(op =>
-        captured.keySet().asScala.exists(_.contains(op))) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
-      def metric(op: String): org.apache.spark.sql.Row =
-        captured.asScala.collectFirst { case (k, v) if k.contains(op) => v }
-          .getOrElse(fail(s"no graft_cap metric for $op; saw ${captured.keySet().asScala}"))
-      // the 200 identical docs' bucket rows (200×16 bands) are all over
-      // the cap; the 10 distinct docs' 160 rows are not
-      val cl = metric("minhash_clusters")
-      assert(cl.getAs[Long]("rows_in_capped_buckets") == 3200L)
-      assert(cl.getAs[Long]("bucket_rows") == 3360L)
-      assert(metric("minhash_pairs").getAs[Long]("rows_in_capped_buckets") > 0L)
-      assert(metric("simhash_pairs").getAs[Long]("rows_in_capped_buckets") > 0L)
-    } finally spark.listenerManager.unregister(listener)
+    }
+    val captured = scope.actions.flatMap(a => Dedup.capCounts(a._2.observedMetrics)).toMap
+    def metric(op: String): Dedup.CapCounts =
+      captured.getOrElse(op, fail(s"no graft_cap metric for $op; saw ${captured.keySet}"))
+    // the 200 identical docs' bucket rows (200×16 bands) are all over
+    // the cap; the 10 distinct docs' 160 rows are not
+    val cl = metric("minhash_clusters")
+    assert(cl.rowsInCappedBuckets == 3200L)
+    assert(cl.bucketRows == 3360L)
+    assert(metric("minhash_pairs").rowsInCappedBuckets > 0L)
+    assert(metric("simhash_pairs").rowsInCappedBuckets > 0L)
   }
 
   test("hot-bucket cap leaves small buckets linking normally") {

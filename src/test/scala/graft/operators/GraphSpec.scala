@@ -30,27 +30,11 @@ class GraphSpec extends SparkSpec {
     byRoot.values.flatMap(g => { val m = g.min; g.map(_ -> m) }).toMap
   }
 
-  /** Executed plans of the checkpoint actions `body` runs. Listener
-    * delivery is async, so this polls until `atLeast` have arrived (or
-    * a 10 s deadline passes) instead of stopping once the count holds
-    * still, which a lagging listener bus would cut short.
-    */
-  private def checkpointPlans(atLeast: Int)(body: => Unit): Seq[SparkPlan] = {
-    val plans = scala.collection.mutable.Buffer[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-        if (f.toLowerCase.contains("checkpoint")) plans.synchronized { plans += qe.executedPlan; () }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+  /** Executed plans of the checkpoint actions `body` runs. */
+  private def checkpointPlans(body: => Unit): Seq[SparkPlan] =
+    graft.util.JobScope.run(spark, "checkpoint plans")(body)._2.actions.collect {
+      case (f, qe) if f.toLowerCase.contains("checkpoint") => qe.executedPlan
     }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      val deadline = System.nanoTime() + 10000000000L
-      while (plans.synchronized(plans.size) < atLeast && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      plans.synchronized(plans.toSeq)
-    } finally spark.listenerManager.unregister(listener)
-  }
 
   /** Every node of an executed plan, through AQE stages and reuse. */
   private def expand(p: SparkPlan): Seq[SparkPlan] = {
@@ -339,9 +323,9 @@ class GraphSpec extends SparkSpec {
         .selectExpr("id as src", s"((id * 7 + 1) % $nEdges) as dst")
       // the ranks init + per-round updates are the checkpoint actions;
       // setup counts/cache builds legitimately repartition cache scans.
-      // Polls for all four (init + 3 rounds) so the last round's plan is
-      // scanned too; three is the floor the assertion below needs.
-      val loop = checkpointPlans(atLeast = 4) {
+      // All four (init + 3 rounds) are recorded, so the last round's plan
+      // is scanned too; three is the floor the assertion below needs.
+      val loop = checkpointPlans {
         Graph.pageRank(edges, "src", "dst", iters = 3)
           .write.format("noop").mode("overwrite").save()
       }
@@ -375,7 +359,7 @@ class GraphSpec extends SparkSpec {
     // was a full extra pass over the vertex table per iteration.
     // vertex 2 is a dangling sink, so the dangling mass is nonzero
     val edges = Seq((1L, 2L), (3L, 2L), (3L, 1L)).toDF("src", "dst")
-    val loop = checkpointPlans(atLeast = 4) { // init + 3 rounds
+    val loop = checkpointPlans { // init + 3 rounds
       val got = Graph.pageRank(edges, "src", "dst", iters = 3)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val want = refPageRank(Seq((1L, 2L), (3L, 2L), (3L, 1L)), 3)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.util.JobScope
 import org.apache.spark.sql.functions._
 
 class TimeSeriesSpec extends SparkSpec {
@@ -146,42 +147,12 @@ class TimeSeriesSpec extends SparkSpec {
 
   /** Rows entering rollingChunked's window stage == records written to
     * the plan's ONE shuffle (the (key, chunk) exchange feeding the
-    * window). Counted via task metrics scoped to a job group so a
-    * concurrent suite sharing the SparkContext can't inflate it.
+    * window). Counted from the task metrics of `body`'s jobs only, so
+    * a concurrent suite sharing the SparkContext can't inflate it.
     */
-  private def shuffleRecordsOf(body: => Unit): Long = {
-    val jobGroup = s"graft-ts-cost-${System.nanoTime()}"
-    val records = new java.util.concurrent.atomic.AtomicLong()
-    val ownStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            jobGroup == js.properties.getProperty("spark.jobGroup.id")) {
-          js.stageIds.foreach(id => ownStages.add(id)); ()
-        }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null && ownStages.contains(te.stageId)) {
-          records.addAndGet(m.shuffleWriteMetrics.recordsWritten); ()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(jobGroup, "rollingChunked cost contract")
-    try {
-      body
-      // task-end events post asynchronously: poll until stable
-      var prev = -1L; var cur = records.get
-      val deadline = System.nanoTime() + 10000000000L
-      while (cur != prev && System.nanoTime() < deadline) {
-        prev = cur; Thread.sleep(100); cur = records.get
-      }
-      cur
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
+  private def shuffleRecordsOf(body: => Unit): Long =
+    JobScope.run(spark, "rollingChunked cost contract")(body)._2
+      .sum(_.shuffleWriteMetrics.recordsWritten)
 
   test("rollingChunked cost contract: ≤1 carry copy per row at chunkSec == windowSec, " +
       "and the carry filter prunes rows whose tail stays inside the chunk") {
@@ -223,38 +194,9 @@ class TimeSeriesSpec extends SparkSpec {
     * the straggler signal: a hot key serialized on one window task
     * shows up as one task reading the whole key.
     */
-  private def maxTaskShuffleReadOf(body: => Unit): Long = {
-    val jobGroup = s"graft-ts-skew-${System.nanoTime()}"
-    val maxRecords = new java.util.concurrent.atomic.AtomicLong()
-    val ownStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            jobGroup == js.properties.getProperty("spark.jobGroup.id")) {
-          js.stageIds.foreach(id => ownStages.add(id)); ()
-        }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null && ownStages.contains(te.stageId)) {
-          maxRecords.getAndAccumulate(m.shuffleReadMetrics.recordsRead, math.max); ()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(jobGroup, "rollingChunked skew spread")
-    try {
-      body
-      var prev = -1L; var cur = maxRecords.get
-      val deadline = System.nanoTime() + 10000000000L
-      while (cur != prev && System.nanoTime() < deadline) {
-        prev = cur; Thread.sleep(100); cur = maxRecords.get
-      }
-      cur
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
+  private def maxTaskShuffleReadOf(body: => Unit): Long =
+    JobScope.run(spark, "rollingChunked skew spread")(body)._2.tasks
+      .map(_.taskMetrics.shuffleReadMetrics.recordsRead).maxOption.getOrElse(0L)
 
   test("rollingChunked spreads a hot key across tasks where rolling serializes it " +
       "(execution-level, task shuffle-read metrics)") {

@@ -482,49 +482,21 @@ class PlanAuditSpec extends SparkSpec {
     // out-degree into the edge list ONCE, pre-partitioned by source and
     // persisted, so each round exchanges only rank-table bytes. That
     // property was protected only by a comment; this pins it with the
-    // same task-metrics listener Bench uses: per-iteration shuffle
-    // delta must stay far below one adjacency exchange.
+    // same task-metrics scope Bench uses: per-iteration shuffle delta
+    // must stay far below one adjacency exchange.
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // dense graph: 100 vertices, 9900 edges — adjacency dwarfs ranks
     val edges = (for { s <- 1L to 100L; d <- 1L to 100L if s != d } yield (s, d))
       .toDF("src", "dst").persist()
     edges.count()
-    val written = new java.util.concurrent.atomic.AtomicLong()
-    // scope the counter to THIS test's jobs via a job group tag: a
-    // process-global byte counter would inflate under any concurrent
-    // suite sharing the SparkContext and flake the /3 threshold
-    val jobGroup = "graft-plan-audit-graph-loops"
-    val ownStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (js.properties != null &&
-            jobGroup == js.properties.getProperty("spark.jobGroup.id")) {
-          js.stageIds.foreach(id => ownStages.add(id)); ()
-        }
-      }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null && ownStages.contains(te.stageId)) {
-          written.addAndGet(m.shuffleWriteMetrics.bytesWritten); ()
-        }
-      }
-    }
-    // task-end events post asynchronously: poll until stable (Bench's
-    // settledCounters), bounded
-    def settle(): Long = {
-      var prev = -1L
-      var cur = written.get
-      val deadline = System.nanoTime() + 10000000000L
-      while (cur != prev && System.nanoTime() < deadline) {
-        prev = cur; Thread.sleep(100); cur = written.get
-      }
-      cur
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(jobGroup, "plan-audit graph-loop shuffle measurement")
+    // bytes written by `body`'s jobs only: a process-global counter
+    // would inflate under any concurrent suite sharing the SparkContext
+    // and flake the /3 threshold
+    def measured(body: => Unit): Long =
+      graft.util.JobScope.run(spark, "plan-audit graph-loop shuffle measurement")(body)._2
+        .sum(_.shuffleWriteMetrics.bytesWritten)
     try {
-      def measured(body: => Unit): Long = { settle(); written.set(0); body; settle() }
       val adjacency = measured(edges.repartition(col("src")).foreach(_ => ()))
       def perIter(run: Int => Long): Double = {
         val short = measured(run(2))
@@ -547,11 +519,7 @@ class PlanAuditSpec extends SparkSpec {
       assert(bfs < adjacency / 3.0,
         s"a BFS hop shuffles adjacency-scale bytes (perIter=$bfs, one edge " +
           s"exchange=$adjacency)")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-      edges.unpersist(); ()
-    }
+    } finally { edges.unpersist(); () }
   }
 
   test("q_quality_score: artifact scoring broadcasts the weights; pure codegen, no ML vector ops") {

@@ -108,6 +108,43 @@ class PartFilesSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(out)
   }
 
+  test("a rewrite of a MinHash or sketch index that dies in a data write reads as no index") {
+    // every save and extend writes its sidecar last, so it must drop an
+    // older one before its first data write: a crash then leaves no
+    // stale sidecar beside an emptied bands/ or sketches/ directory
+    import graft.dedup.Dedup
+    import graft.operators.Sketches
+    var armed = false
+    withRenameFail(p => armed && Seq("/out/bands/", "/out/sketches/").exists(p.toUri.getPath.contains)) {
+      root =>
+        val docs = Seq((1L, "the quick brown fox jumps over"), (2L, "the quick brown fox leaps over"),
+          (3L, "an unrelated line of plain text")).toDF("doc_id", "text")
+        val more = Seq((4L, "yet another document of the crawl")).toDF("doc_id", "text")
+        def crashes(what: String, before: String => Unit, rewrite: String => Unit,
+                    read: String => Any, notIndex: String): Unit = {
+          val out = s"$root/$what/out"
+          before(s"$root/$what/idx")
+          before(out)
+          armed = true
+          try intercept[SparkException](rewrite(out)) finally armed = false
+          val e = intercept[IllegalArgumentException](read(out))
+          assert(e.getMessage.contains(notIndex), s"$what: ${e.getMessage}")
+        }
+        def minhash(path: String): Unit = Dedup.saveMinhashIndex(docs, "doc_id", "text", path)
+        def readMinhash(path: String) = Dedup.loadMinhashIndexParams(spark, path)
+        def sketch(path: String): Unit = Sketches.saveIndex(docs, "text", Seq.empty, path)
+        def readSketch(path: String) = Sketches.loadIndex(spark, path)
+        crashes("mh_save", minhash, minhash, readMinhash, "not a graft MinHash index")
+        crashes("mh_extend", minhash,
+          out => Dedup.extendMinhashIndex(more, "doc_id", "text", s"$root/mh_extend/idx", out),
+          readMinhash, "not a graft MinHash index")
+        crashes("sk_save", sketch, sketch, readSketch, "not a graft sketch index")
+        crashes("sk_extend", sketch,
+          out => Sketches.extendIndex(more, s"$root/sk_extend/idx", out),
+          readSketch, "not a graft sketch index")
+    }
+  }
+
   test("the scatter's tasks take the session's Hadoop conf") {
     // `renamefail://` is known to the session's conf alone: a task
     // building its own Configuration cannot resolve the scheme

@@ -180,30 +180,19 @@ class SmbSpec extends SparkSpec {
 
   test("smbTransform: join→transform→bucketed write end-to-end with no Exchange, " +
     "output joins exchange-free") {
-    // capture the write command's executed plan via a listener — the
-    // frame-side executedPlan alone would not cover the write job
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString())
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try noAqeNoBroadcast {
-      Smb.smbTransform(spark, Seq(
-        "smb_m_li" -> Seq("l_orderkey"), "smb_m_ord" -> Seq("o_orderkey")))(
-        _.select(col("l_orderkey").as("t_orderkey"),
-          (col("l_quantity") * col("o_totalprice")).as("weighted")))(
-        "smb_m_out", "/tmp/graft_test/smb/m_out", 4, Seq("t_orderkey"))
-      // listener events are delivered asynchronously — poll briefly
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(!plans.isEmpty, "write command plan never arrived")
-      plans.forEach(p => assert(!p.contains("Exchange"),
+    // capture the write command's executed plans through a JobScope —
+    // the frame-side executedPlan alone would not cover the write job
+    noAqeNoBroadcast {
+      val (_, scope) = graft.util.JobScope.run(spark, "smbTransform write") {
+        Smb.smbTransform(spark, Seq(
+          "smb_m_li" -> Seq("l_orderkey"), "smb_m_ord" -> Seq("o_orderkey")))(
+          _.select(col("l_orderkey").as("t_orderkey"),
+            (col("l_quantity") * col("o_totalprice")).as("weighted")))(
+          "smb_m_out", "/tmp/graft_test/smb/m_out", 4, Seq("t_orderkey"))
+      }
+      val plans = scope.actions.map(_._2.executedPlan.toString())
+      assert(plans.nonEmpty, "write command plan never arrived")
+      plans.foreach(p => assert(!p.contains("Exchange"),
         s"smbTransform write must not shuffle:\n$p"))
       // aligned write ⇒ exactly one data file per bucket
       val files = new java.io.File("/tmp/graft_test/smb/m_out")
@@ -222,7 +211,7 @@ class SmbSpec extends SparkSpec {
       val expected = li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .select(col("l_orderkey"), (col("l_quantity") * col("o_totalprice")).as("weighted"))
       assert(sortedRows(spark.table("smb_m_out")) == sortedRows(expected))
-    } finally spark.listenerManager.unregister(listener)
+    }
   }
 
   test("bucketed aggregation on the bucket key avoids the shuffle too") {

@@ -2,10 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev-only: run one named query (args(0)) on args(1) sf dir, print
-  * timing; args(2) = `explain` prints the formatted plan instead, an
-  * integer N times the query N times in one session (run 1 = cold,
-  * rest warm — codegen/footer caches populated).
+/** Dev-only: run registry queries on args(1) sf dir (default sf0.01).
+  *
+  * Usage: runMain graft.Diag <name[,name2,…]> [sfDir] [N | explain | profile]
+  *  - `N` (default 1): one untimed warm pass of each query, then N
+  *    timed passes through the noop sink, interleaved BY PASS (A, B,
+  *    A, B, …) so an A/B of two queries shares the machine's drift;
+  *    prints each pass and a median/min line per query;
+  *  - `explain`: the formatted plan of one query;
+  *  - `profile`: one warm pass, then one profiled pass of one query
+  *    with its stages by wall time and their timeline.
+  * Env: SPARK_GRAFT_CPUS (default 16).
   */
 object Diag {
   def main(args: Array[String]): Unit = {
@@ -15,9 +22,9 @@ object Diag {
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def run(): Double = {
+    def run(q: String = name): Double = {
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
     if (args.length > 2 && args(2) == "explain") {
@@ -59,8 +66,23 @@ object Diag {
           f"tasks=${s.info.numTasks}%4d")
       }
     } else {
+      val names = name.split(",").toSeq
+      names.foreach(n => require(SparkEntry.queries.contains(n), s"unknown query: $n"))
       val reps = if (args.length > 2) args(2).toInt else 1
-      (1 to reps).foreach(r => println(f"[diag] $name run $r: ${run()}%.3f s"))
+      // warm pass: codegen, footer caches, train-once artifacts
+      names.foreach(n => println(f"[diag] $n warm: ${run(n)}%.3f s"))
+      val samples = (1 to reps).flatMap { r =>
+        names.map { n =>
+          val dt = run(n)
+          println(f"[diag] $n run $r: $dt%.3f s")
+          n -> dt
+        }
+      }
+      names.foreach { n =>
+        val s = samples.collect { case (`n`, dt) => dt }.sorted
+        val med = if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+        println(f"[diag] $n median: $med%.3f s min: ${s.head}%.3f s")
+      }
     }
     spark.stop()
   }

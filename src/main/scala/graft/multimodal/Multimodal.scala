@@ -6,11 +6,14 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.ByteBuffer
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import scala.collection.IndexedSeqView
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns: image/audio/video as opaque `binary` columns
-  * with typed metadata, decoded per-partition in batches.
+  * with typed metadata, decoded row by row inside one narrow map.
   *
   * The image path is REAL: payloads are decoded with the JDK codec
   * (`javax.imageio.ImageIO` — PNG/JPEG/GIF/BMP, no external jars),
@@ -18,22 +21,23 @@ import org.apache.spark.sql.functions._
   * intensities. Video is modeled as a framed container (length-
   * prefixed encoded images, [[packFrames]]/[[unpackFrames]]) whose
   * frames decode through the same real codec; a production deployment
-  * swaps the per-batch decode body for an FFmpeg/JNI call — the Spark
-  * plumbing (schema, mapPartitions batch shape, partition sizing) is
-  * exactly what that swap inherits. Audio would follow the same
-  * framed-binary + per-batch-decode shape.
+  * swaps the frame source for an FFmpeg/JNI call — the Spark plumbing
+  * (schema, the per-row mapPartitions, partition sizing) is exactly
+  * what that swap inherits. Audio follows the same binary-payload +
+  * per-row-decode shape.
   *
   * Scale shape: decode is a narrow mapPartitions — no shuffle, scales
-  * with input splits; `batchSize` bounds the decoded working set per
-  * task (decoded frames are width×height×4 B — far larger than the
-  * compressed payload, so the batch, not the row count, is the memory
-  * unit). Corrupt payloads MUST NOT kill a 100 TB job: undecodable
-  * rows surface as `width = height = nFrames = 0` audit rows from
-  * [[decodeImageMeta]] and are skipped by frame/feature extraction.
+  * with input splits. Each row's outputs stream out before the next
+  * row decodes, so a task holds one row's decoded frames at a time
+  * (width×height×4 B each — far larger than the compressed payload;
+  * bound it with the input split size, not a row count). Corrupt
+  * payloads MUST NOT kill a 100 TB job: undecodable rows surface as
+  * `width = height = nFrames = 0` audit rows from [[decodeImageMeta]]
+  * and are skipped by frame/feature extraction.
   *
   * Reference shape: scio models unstructured blobs as `SCollection[
   *   Array[Byte]]` via binaryFile IO (scio-core/src/main/scala/com/
-  * spotify/scio/io/BinaryIO.scala:43); the typed-metadata + batched
+  * spotify/scio/io/BinaryIO.scala:43); the typed-metadata + per-row
   * decode layering here is the Spark-native equivalent.
   */
 object Multimodal {
@@ -158,209 +162,182 @@ object Multimodal {
   def synthHeight(id: Long): Int = 8 + math.floorMod(id * 3, 48L).toInt
   def synthGray(id: Long, frameIdx: Int): Int = math.floorMod(id * 37 + frameIdx, 256L).toInt
 
+  /** The one generator behind every `synthetic*` table: one
+    * `modality` row per input row, its payload computed from the id
+    * (`idCol` cast to long) and the row of `id +: more`.
+    */
+  private def synthetic(df: DataFrame, idCol: String, modality: String, more: Column*)(
+      payload: (Long, Row) => Array[Byte]): Dataset[MediaRow] =
+    df.select(col(idCol).cast("long").as("id") +: more: _*)
+      .mapPartitions((rows: Iterator[Row]) =>
+        rows.map(r => MediaRow(r.getLong(0), modality, payload(r.getLong(0), r))))(
+        Encoders.product[MediaRow])
+
   /** Synthetic single-image table: one REAL PNG payload per input id,
     * dims/color derived deterministically from the id.
     */
-  def syntheticImages(df: DataFrame, idCol: String): Dataset[MediaRow] = {
-    implicit val enc = Encoders.product[MediaRow]
-    df.select(col(idCol).cast("long").as("id")).mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        MediaRow(id, "image",
-          encodePng(solidImage(synthWidth(id), synthHeight(id), synthGray(id, 0))))
-      }
+  def syntheticImages(df: DataFrame, idCol: String): Dataset[MediaRow] =
+    synthetic(df, idCol, "image") { (id, _) =>
+      encodePng(solidImage(synthWidth(id), synthHeight(id), synthGray(id, 0)))
     }
-  }
 
   /** Synthetic framed-video table: `1 + id % maxFrames` real PNG
     * frames of `w`×`h`, frame i colored `synthGray(id, i)`, packed
     * with [[packFrames]].
     */
   def syntheticVideos(df: DataFrame, idCol: String, maxFrames: Int = 5,
-                      w: Int = 16, h: Int = 12): Dataset[MediaRow] = {
-    implicit val enc = Encoders.product[MediaRow]
-    df.select(col(idCol).cast("long").as("id")).mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val n = 1 + math.floorMod(id, maxFrames.toLong).toInt
-        MediaRow(id, "video",
-          packFrames((0 until n).map(i => encodePng(solidImage(w, h, synthGray(id, i))))))
-      }
+                      w: Int = 16, h: Int = 12): Dataset[MediaRow] =
+    synthetic(df, idCol, "video") { (id, _) =>
+      val n = 1 + math.floorMod(id, maxFrames.toLong).toInt
+      packFrames((0 until n).map(i => encodePng(solidImage(w, h, synthGray(id, i)))))
     }
-  }
 
   // ------------------------------------------------------------------
   // Distributed operators over (id, modality, payload) tables.
   // ------------------------------------------------------------------
 
-  /** REAL batched decode: per-partition, per-batch ImageIO decode of
-    * the payload header+pixels into true dimensions. `video` rows are
-    * unpacked and their first frame decoded for dims, with nFrames =
-    * container frame count; undecodable rows come back as zero-dim
-    * audit rows. Batching is the seam where a JNI/FFmpeg codec would
-    * amortize its per-batch init.
+  /** The columns of the canonical media table, which the image
+    * decoders and [[decodeStub]] take whole; the audio decoders and
+    * [[frameDiffStats]] read only `id` and `payload`.
     */
-  def decodeImageMeta(media: Dataset[_], batchSize: Int = 64): Dataset[MediaMeta] = {
-    implicit val enc = Encoders.product[MediaMeta]
-    media.toDF().select(col("id"), col("modality"), col("payload"))
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.map { r =>
-            val id = r.getLong(0)
-            val modality = r.getString(1)
-            val bytes = r.getAs[Array[Byte]](2)
-            val (first, nFrames) = modality match {
-              case "video" =>
-                val fs = unpackFrames(bytes)
-                (fs.headOption.flatMap(decodeImage), fs.length)
-              case "gif" =>
-                val fs = decodeFrames(bytes)
-                (fs.headOption, fs.length)
-              case _ => (decodeImage(bytes), 1)
-            }
-            first match {
-              case Some(img) => MediaMeta(id, modality, bytes.length.toLong,
-                img.getWidth, img.getHeight, nFrames)
-              case None => MediaMeta(id, modality, bytes.length.toLong, 0, 0, 0)
-            }
-          }
-        }
-      }
-  }
+  private val MediaCols = Seq("id", "modality", "payload")
+
+  /** The one decode loop: `decode` runs on each row of `cols`, in a
+    * narrow mapPartitions over the media scan (no exchange), and the
+    * row's outputs stream out before the next row is decoded.
+    */
+  private def perRow[T <: Product : TypeTag](media: Dataset[_], cols: String*)(
+      decode: Row => IterableOnce[T]): Dataset[T] =
+    media.toDF().select(cols.map(col): _*)
+      .mapPartitions((rows: Iterator[Row]) => rows.flatMap(decode))(Encoders.product[T])
+
+  /** The one frame source of the image decoders: a payload's frames in
+    * container order, each decoded when read (None = that frame does
+    * not decode); "first frame" is container frame 0. A payload whose
+    * first byte is below 0x40 (a first length prefix under 1 GiB) is a
+    * framed container ([[packFrames]]), truncated or not; any other
+    * payload goes to ImageIO, which yields every frame of an animated
+    * GIF, the one frame of a PNG/JPEG/BMP/TIFF (their magic bytes all
+    * start at 0x42 or above), and none for an unknown or corrupt
+    * payload. WBMP has no magic and starts with 0x00, so it reads as a
+    * container with no whole frame; given to ImageIO, a truncated
+    * container would instead decode as a WBMP of garbage.
+    */
+  private def frames(bytes: Array[Byte]): IndexedSeqView[Option[BufferedImage]] =
+    if (bytes.nonEmpty && (bytes(0) & 0xFF) < 0x40)
+      unpackFrames(bytes).toIndexedSeq.view.map(decodeImage)
+    else decodeFrames(bytes).toIndexedSeq.view.map(Some(_))
+
+  /** REAL decode: ImageIO reads each payload's frame 0 for its true
+    * dimensions, with nFrames = the container's frame count;
+    * undecodable rows come back as zero-dim audit rows.
+    */
+  def decodeImageMeta(media: Dataset[_]): Dataset[MediaMeta] =
+    perRow(media, MediaCols: _*) { r =>
+      val (id, modality, bytes) = (r.getLong(0), r.getString(1), r.getAs[Array[Byte]](2))
+      val fs = frames(bytes)
+      Some(fs.headOption.flatten match {
+        case Some(img) => MediaMeta(id, modality, bytes.length.toLong,
+          img.getWidth, img.getHeight, fs.length)
+        case None => MediaMeta(id, modality, bytes.length.toLong, 0, 0, 0)
+      })
+    }
 
   /** Per-transition motion row from [[frameDiffStats]]. */
   final case class FrameDiff(id: Long, frameIdx: Int, meanAbsDiff: Double,
                              maxAbsDiff: Int, changedFrac: Double)
 
-  /** REAL motion analysis over the framed video container: decode
-    * consecutive frame pairs and report, per transition i→i+1, the
-    * mean/max absolute gray-level change and the fraction of pixels
-    * that changed by more than `changeThreshold` — the scene-change /
-    * static-video signals a video curation pass filters on (a
-    * near-zero meanAbsDiff across all transitions = a still image
-    * padded into a clip; spikes = cuts). Same batched no-shuffle
-    * mapPartitions shape as the other decoders; single-frame or
-    * undecodable rows emit no transitions (audit via
-    * [[decodeImageMeta]]). Mismatched frame dimensions score the
-    * overlapping region (top-left crop) — the honest bound without
+  /** REAL motion analysis over multi-frame media (framed video or
+    * animated GIF): decode consecutive frame pairs and report, per
+    * transition i→i+1, the mean/max absolute gray-level change and the
+    * fraction of pixels that changed by more than `changeThreshold` —
+    * the scene-change / static-video signals a video curation pass
+    * filters on (a near-zero meanAbsDiff across all transitions = a
+    * still image padded into a clip; spikes = cuts). Undecodable frames
+    * are skipped; single-frame or undecodable rows emit no transitions
+    * (audit via [[decodeImageMeta]]). Mismatched frame dimensions score
+    * the overlapping region (top-left crop) — the honest bound without
     * resampling.
     */
-  def frameDiffStats(media: Dataset[_], changeThreshold: Int = 8,
-                     batchSize: Int = 16): Dataset[FrameDiff] = {
+  def frameDiffStats(media: Dataset[_], changeThreshold: Int = 8): Dataset[FrameDiff] = {
     require(changeThreshold >= 0, s"changeThreshold must be >= 0, got $changeThreshold")
-    implicit val enc = Encoders.product[FrameDiff]
-    media.toDF().select(col("id"), col("payload"))
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.flatMap { r =>
-            val id = r.getLong(0)
-            val frames = unpackFrames(r.getAs[Array[Byte]](1)).flatMap(decodeImage)
-            frames.sliding(2).zipWithIndex.collect {
-              case (Seq(a, b), i) =>
-                val w = math.min(a.getWidth, b.getWidth)
-                val h = math.min(a.getHeight, b.getHeight)
-                var sum = 0L
-                var mx = 0
-                var changed = 0L
-                var y = 0
-                while (y < h) {
-                  var x = 0
-                  while (x < w) {
-                    val d = math.abs(grayAt(a, x, y) - grayAt(b, x, y))
-                    sum += d
-                    if (d > mx) mx = d
-                    if (d > changeThreshold) changed += 1
-                    x += 1
-                  }
-                  y += 1
-                }
-                val n = math.max(w.toLong * h, 1L)
-                FrameDiff(id, i, sum.toDouble / n, mx, changed.toDouble / n)
-            }.toSeq
+    perRow(media, "id", "payload") { r =>
+      val id = r.getLong(0)
+      frames(r.getAs[Array[Byte]](1)).flatten.toSeq.sliding(2).zipWithIndex.collect {
+        case (Seq(a, b), i) =>
+          val w = math.min(a.getWidth, b.getWidth)
+          val h = math.min(a.getHeight, b.getHeight)
+          var sum = 0L
+          var mx = 0
+          var changed = 0L
+          var y = 0
+          while (y < h) {
+            var x = 0
+            while (x < w) {
+              val d = math.abs(grayAt(a, x, y) - grayAt(b, x, y))
+              sum += d
+              if (d > mx) mx = d
+              if (d > changeThreshold) changed += 1
+              x += 1
+            }
+            y += 1
           }
-        }
+          val n = math.max(w.toLong * h, 1L)
+          FrameDiff(id, i, sum.toDouble / n, mx, changed.toDouble / n)
       }
+    }
   }
 
-  /** REAL frame sampling: unpack the framed container, decode every
-    * `stride`-th frame with ImageIO, report true dims + exact mean
-    * intensity, and re-encode a Graphics2D thumbnail bounded by
-    * `thumbMax` on the long side (aspect preserved). Single-image
-    * rows are treated as one-frame videos. Undecodable frames are
-    * skipped (decode metadata via [[decodeImageMeta]] to audit).
+  /** REAL frame sampling: decode every `stride`-th frame with ImageIO,
+    * report true dims + exact mean intensity, and re-encode a
+    * Graphics2D thumbnail bounded by `thumbMax` on the long side
+    * (aspect preserved). Single images are one-frame media.
+    * Undecodable frames are skipped (decode metadata via
+    * [[decodeImageMeta]] to audit).
     */
-  def sampleFrames(media: Dataset[_], stride: Int, thumbMax: Int = 64,
-                   batchSize: Int = 16): Dataset[DecodedFrame] = {
+  def sampleFrames(media: Dataset[_], stride: Int, thumbMax: Int = 64): Dataset[DecodedFrame] = {
     require(stride >= 1, s"stride must be >= 1, got $stride")
-    implicit val enc = Encoders.product[DecodedFrame]
-    media.toDF().select(col("id"), col("modality"), col("payload"))
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.flatMap { r =>
-            val id = r.getLong(0)
-            val bytes = r.getAs[Array[Byte]](2)
-            val decoded: Seq[(Int, BufferedImage)] = r.getString(1) match {
-              case "video" =>
-                val fs = unpackFrames(bytes)
-                fs.indices.by(stride).flatMap(i => decodeImage(fs(i)).map(img => (i, img)))
-              case "gif" =>
-                val fs = decodeFrames(bytes)
-                fs.indices.by(stride).map(i => (i, fs(i)))
-              case _ => decodeImage(bytes).map(img => (0, img)).toSeq
-            }
-            decoded.map { case (i, img) =>
-              val scale = thumbMax.toDouble / math.max(img.getWidth, img.getHeight)
-              val thumb =
-                if (scale >= 1.0) img
-                else resizeImage(img,
-                  math.max(1, math.round(img.getWidth * scale).toInt),
-                  math.max(1, math.round(img.getHeight * scale).toInt))
-              DecodedFrame(id, i, img.getWidth, img.getHeight,
-                meanGray(img), encodePng(thumb))
-            }
-          }
-        }
-      }
+    perRow(media, MediaCols: _*) { r =>
+      val fs = frames(r.getAs[Array[Byte]](2))
+      fs.indices.by(stride).flatMap(i => fs(i).map { img =>
+        val scale = thumbMax.toDouble / math.max(img.getWidth, img.getHeight)
+        val thumb =
+          if (scale >= 1.0) img
+          else resizeImage(img,
+            math.max(1, math.round(img.getWidth * scale).toInt),
+            math.max(1, math.round(img.getHeight * scale).toInt))
+        DecodedFrame(r.getLong(0), i, img.getWidth, img.getHeight,
+          meanGray(img), encodePng(thumb))
+      })
+    }
   }
 
-  /** REAL feature extraction: decode, Graphics2D-resize to a
+  /** REAL feature extraction: decode frame 0, Graphics2D-resize to a
     * `grid`×`grid` patch, emit row-major gray intensities in [0,1] as
     * `features: array<float>` — the classic pixel-grid embedding,
     * directly consumable by graft's KNN/cosine operators. Undecodable
     * rows are dropped here (audit via [[decodeImageMeta]]).
     */
-  def imageFeatures(media: Dataset[_], grid: Int = 4, batchSize: Int = 64): Dataset[FeatureRow] = {
+  def imageFeatures(media: Dataset[_], grid: Int = 4): Dataset[FeatureRow] = {
     require(grid >= 1, s"grid must be >= 1, got $grid")
-    implicit val enc = Encoders.product[FeatureRow]
-    media.toDF().select(col("id"), col("modality"), col("payload"))
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.flatMap { r =>
-            val bytes = r.getAs[Array[Byte]](2)
-            val first = r.getString(1) match {
-              case "video" => unpackFrames(bytes).headOption.flatMap(decodeImage)
-              case "gif" => decodeFrames(bytes).headOption
-              case _ => decodeImage(bytes)
-            }
-            first.map { img =>
-              val p = resizeImage(img, grid, grid)
-              val fs = new Array[Float](grid * grid)
-              var y = 0
-              while (y < grid) {
-                var x = 0
-                while (x < grid) {
-                  val rgb = p.getRGB(x, y)
-                  fs(y * grid + x) =
-                    ((((rgb >> 16) & 0xFF) + ((rgb >> 8) & 0xFF) + (rgb & 0xFF)) / 3.0f) / 255.0f
-                  x += 1
-                }
-                y += 1
-              }
-              FeatureRow(r.getLong(0), fs)
-            }
+    perRow(media, MediaCols: _*) { r =>
+      frames(r.getAs[Array[Byte]](2)).headOption.flatten.map { img =>
+        val p = resizeImage(img, grid, grid)
+        val fs = new Array[Float](grid * grid)
+        var y = 0
+        while (y < grid) {
+          var x = 0
+          while (x < grid) {
+            val rgb = p.getRGB(x, y)
+            fs(y * grid + x) =
+              ((((rgb >> 16) & 0xFF) + ((rgb >> 8) & 0xFF) + (rgb & 0xFF)) / 3.0f) / 255.0f
+            x += 1
           }
+          y += 1
         }
+        FeatureRow(r.getLong(0), fs)
       }
+    }
   }
 
   // ------------------------------------------------------------------
@@ -413,22 +390,16 @@ object Multimodal {
     * whose per-frame pixel values an oracle recomputes from the id.
     */
   def syntheticGifs(df: DataFrame, idCol: String, maxFrames: Int = 4,
-                    w: Int = 10, h: Int = 8): Dataset[MediaRow] = {
-    implicit val enc = Encoders.product[MediaRow]
-    df.select(col(idCol).cast("long").as("id")).mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val n = 1 + math.floorMod(id, maxFrames.toLong).toInt
-        MediaRow(id, "gif",
-          encodeAnimatedGif((0 until n).map(i => solidImage(w, h, synthGray(id, i)))))
-      }
+                    w: Int = 10, h: Int = 8): Dataset[MediaRow] =
+    synthetic(df, idCol, "gif") { (id, _) =>
+      val n = 1 + math.floorMod(id, maxFrames.toLong).toInt
+      encodeAnimatedGif((0 until n).map(i => solidImage(w, h, synthGray(id, i))))
     }
-  }
 
   // ------------------------------------------------------------------
   // Audio: REAL JDK WAV codec (javax.sound.sampled — PCM WAVE
   // encode/decode ships with the JDK, headless-safe). Real pipelines
-  // swap the per-batch decode body for FFmpeg exactly like video.
+  // swap the per-row decode body for FFmpeg exactly like video.
   // ------------------------------------------------------------------
 
   /** Decoded-audio metadata + signal stats. `sampleRate = 0` marks an
@@ -483,45 +454,32 @@ object Multimodal {
     * amplitude PCM (every sample = synthAmplitude), so peak and RMS
     * decode back to exactly that value.
     */
-  def syntheticAudio(df: DataFrame, idCol: String, sampleRate: Int = 8000): Dataset[MediaRow] = {
-    implicit val enc = Encoders.product[MediaRow]
-    df.select(col(idCol).cast("long").as("id")).mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        MediaRow(id, "audio",
-          encodeWavPcm16(Array.fill(synthSampleCount(id))(synthAmplitude(id).toShort), sampleRate))
-      }
+  def syntheticAudio(df: DataFrame, idCol: String, sampleRate: Int = 8000): Dataset[MediaRow] =
+    synthetic(df, idCol, "audio") { (id, _) =>
+      encodeWavPcm16(Array.fill(synthSampleCount(id))(synthAmplitude(id).toShort), sampleRate)
     }
-  }
 
-  /** REAL batched audio decode: WAV container + PCM stats (peak,
-    * RMS) per row; undecodable rows become zero-rate audit rows.
+  /** REAL audio decode: WAV container + PCM stats (peak, RMS) per
+    * row; undecodable rows become zero-rate audit rows.
     */
-  def decodeAudioMeta(media: Dataset[_], batchSize: Int = 64): Dataset[AudioMeta] = {
-    implicit val enc = Encoders.product[AudioMeta]
-    media.toDF().select(col("id"), col("payload"))
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.map { r =>
-            val id = r.getLong(0)
-            val bytes = r.getAs[Array[Byte]](1)
-            decodeWav(bytes) match {
-              case Some((rate, ch, samples)) =>
-                var peak = 0
-                var sumSq = 0.0
-                samples.foreach { s =>
-                  val a = math.abs(s.toInt)
-                  if (a > peak) peak = a
-                  sumSq += s.toDouble * s.toDouble
-                }
-                AudioMeta(id, bytes.length.toLong, rate, ch, samples.length.toLong,
-                  peak, math.sqrt(sumSq / math.max(samples.length, 1)))
-              case None => AudioMeta(id, bytes.length.toLong, 0, 0, 0L, 0, 0.0)
-            }
+  def decodeAudioMeta(media: Dataset[_]): Dataset[AudioMeta] =
+    perRow(media, "id", "payload") { r =>
+      val id = r.getLong(0)
+      val bytes = r.getAs[Array[Byte]](1)
+      Some(decodeWav(bytes) match {
+        case Some((rate, ch, samples)) =>
+          var peak = 0
+          var sumSq = 0.0
+          samples.foreach { s =>
+            val a = math.abs(s.toInt)
+            if (a > peak) peak = a
+            sumSq += s.toDouble * s.toDouble
           }
-        }
-      }
-  }
+          AudioMeta(id, bytes.length.toLong, rate, ch, samples.length.toLong,
+            peak, math.sqrt(sumSq / math.max(samples.length, 1)))
+        case None => AudioMeta(id, bytes.length.toLong, 0, 0, 0L, 0, 0.0)
+      })
+    }
 
   /** Per-row audio quality metrics from [[audioQuality]]. */
   final case class AudioQuality(id: Long, sampleRate: Int, nSamples: Long,
@@ -534,62 +492,51 @@ object Multimodal {
     * least/greatest saturation, never Scala's wrapping toShort).
     */
   def syntheticClipped(df: DataFrame, idCol: String, n: Int = 256,
-                       sampleRate: Int = 8000): Dataset[MediaRow] = {
-    implicit val enc = Encoders.product[MediaRow]
-    df.select(col(idCol).cast("long").as("id")).mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        // every third id overdrives (clips); amplitude formula shared
-        // with the oracle
-        val amp = 20000 + math.floorMod(id, 3L).toInt * 8000
-        val k = 1 + math.floorMod(id, 7L).toInt
-        val samples = Array.tabulate(n) { i =>
-          val raw = (amp * math.sin(2.0 * math.Pi * k * i / n)).toLong
-          math.max(-32768L, math.min(32767L, raw)).toShort
-        }
-        MediaRow(id, "audio", encodeWavPcm16(samples, sampleRate))
+                       sampleRate: Int = 8000): Dataset[MediaRow] =
+    synthetic(df, idCol, "audio") { (id, _) =>
+      // every third id overdrives (clips); amplitude formula shared
+      // with the oracle
+      val amp = 20000 + math.floorMod(id, 3L).toInt * 8000
+      val k = 1 + math.floorMod(id, 7L).toInt
+      val samples = Array.tabulate(n) { i =>
+        val raw = (amp * math.sin(2.0 * math.Pi * k * i / n)).toLong
+        math.max(-32768L, math.min(32767L, raw)).toShort
       }
+      encodeWavPcm16(samples, sampleRate)
     }
-  }
 
   /** REAL audio-quality screen: decode WAV and report the clipping
     * fraction (|s| ≥ clipLevel), near-silence fraction
     * (|s| ≤ silenceLevel), DC offset (mean sample), and peak — the
     * reject-before-transcribe gates of an audio curation pass
     * (clipped or silent clips waste label/compute budget). Same
-    * batched no-shuffle shape as [[decodeAudioMeta]]; undecodable
+    * per-row no-shuffle shape as [[decodeAudioMeta]]; undecodable
     * rows become zero-rate audit rows.
     */
   def audioQuality(media: Dataset[_], clipLevel: Int = 32767,
-                   silenceLevel: Int = 3, batchSize: Int = 64): Dataset[AudioQuality] = {
+                   silenceLevel: Int = 3): Dataset[AudioQuality] = {
     require(clipLevel > 0 && silenceLevel >= 0, s"bad levels ($clipLevel, $silenceLevel)")
-    implicit val enc = Encoders.product[AudioQuality]
-    media.toDF().select(col("id"), col("payload"))
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.map { r =>
-            val id = r.getLong(0)
-            decodeWav(r.getAs[Array[Byte]](1)) match {
-              case Some((rate, _, samples)) if samples.nonEmpty =>
-                var clip = 0L
-                var silent = 0L
-                var sum = 0L
-                var peak = 0
-                samples.foreach { s =>
-                  val a = math.abs(s.toInt)
-                  if (a >= clipLevel) clip += 1
-                  if (a <= silenceLevel) silent += 1
-                  if (a > peak) peak = a
-                  sum += s.toInt
-                }
-                val n = samples.length
-                AudioQuality(id, rate, n.toLong, clip.toDouble / n,
-                  silent.toDouble / n, sum.toDouble / n, peak)
-              case _ => AudioQuality(id, 0, 0L, 0.0, 0.0, 0.0, 0)
-            }
+    perRow(media, "id", "payload") { r =>
+      val id = r.getLong(0)
+      Some(decodeWav(r.getAs[Array[Byte]](1)) match {
+        case Some((rate, _, samples)) if samples.nonEmpty =>
+          var clip = 0L
+          var silent = 0L
+          var sum = 0L
+          var peak = 0
+          samples.foreach { s =>
+            val a = math.abs(s.toInt)
+            if (a >= clipLevel) clip += 1
+            if (a <= silenceLevel) silent += 1
+            if (a > peak) peak = a
+            sum += s.toInt
           }
-        }
-      }
+          val n = samples.length
+          AudioQuality(id, rate, n.toLong, clip.toDouble / n,
+            silent.toDouble / n, sum.toDouble / n, peak)
+        case _ => AudioQuality(id, 0, 0L, 0.0, 0.0, 0.0, 0)
+      })
+    }
   }
 
   /** Per-row frequency features: DFT power at the first `nBins` bins
@@ -613,64 +560,52 @@ object Multimodal {
     * move the spectral argmax of an on-bin tone).
     */
   def syntheticTones(df: DataFrame, idCol: String, n: Int = 256,
-                     sampleRate: Int = 8000, nBins: Int = 16): Dataset[MediaRow] = {
-    implicit val enc = Encoders.product[MediaRow]
-    df.select(col(idCol).cast("long").as("id")).mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val k = synthToneBin(id, nBins)
-        val a = synthToneAmp(id)
-        val samples = Array.tabulate(n)(i =>
-          (a * math.sin(2.0 * math.Pi * k * i / n)).toShort)
-        MediaRow(id, "audio", encodeWavPcm16(samples, sampleRate))
-      }
+                     sampleRate: Int = 8000, nBins: Int = 16): Dataset[MediaRow] =
+    synthetic(df, idCol, "audio") { (id, _) =>
+      val k = synthToneBin(id, nBins)
+      val a = synthToneAmp(id)
+      val samples = Array.tabulate(n)(i =>
+        (a * math.sin(2.0 * math.Pi * k * i / n)).toShort)
+      encodeWavPcm16(samples, sampleRate)
     }
-  }
 
-  /** REAL batched spectral analysis: decode WAV, direct DFT at the
-    * first `nBins` bins (power |Σ sₙ·e^(−2πi·b·n/N)|²), dominant
-    * non-DC bin (ties → lowest). O(nBins·N) per row — for a feature
-    * extractor reading a handful of bins that beats an FFT's setup;
-    * swap the kernel for a JNI FFT when nBins approaches N/2. Same
-    * narrow no-shuffle mapPartitions shape as [[decodeAudioMeta]];
+  /** REAL spectral analysis: decode WAV, direct DFT at the first
+    * `nBins` bins (power |Σ sₙ·e^(−2πi·b·n/N)|²), dominant non-DC bin
+    * (ties → lowest). O(nBins·N) per row — for a feature extractor
+    * reading a handful of bins that beats an FFT's setup; swap the
+    * kernel for a JNI FFT when nBins approaches N/2. Same narrow
+    * no-shuffle mapPartitions shape as [[decodeAudioMeta]];
     * undecodable rows become zero-rate audit rows, never task kills.
     */
-  def audioSpectrum(media: Dataset[_], nBins: Int = 16,
-                    batchSize: Int = 64): Dataset[AudioSpectrum] = {
+  def audioSpectrum(media: Dataset[_], nBins: Int = 16): Dataset[AudioSpectrum] = {
     require(nBins >= 2, s"nBins must be >= 2, got $nBins")
-    implicit val enc = Encoders.product[AudioSpectrum]
-    media.toDF().select(col("id"), col("payload"))
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.map { r =>
-            val id = r.getLong(0)
-            decodeWav(r.getAs[Array[Byte]](1)) match {
-              case Some((rate, _, samples)) if samples.nonEmpty =>
-                val n = samples.length
-                val power = Array.tabulate(nBins) { b =>
-                  var re = 0.0
-                  var im = 0.0
-                  var i = 0
-                  while (i < n) {
-                    val theta = 2.0 * math.Pi * b * i / n
-                    re += samples(i) * math.cos(theta)
-                    im += samples(i) * math.sin(theta)
-                    i += 1
-                  }
-                  re * re + im * im
-                }
-                var dom = 1
-                var i = 2
-                while (i < nBins) {
-                  if (power(i) > power(dom)) dom = i
-                  i += 1
-                }
-                AudioSpectrum(id, rate, n.toLong, dom, power)
-              case _ => AudioSpectrum(id, 0, 0L, 0, Array.empty)
+    perRow(media, "id", "payload") { r =>
+      val id = r.getLong(0)
+      Some(decodeWav(r.getAs[Array[Byte]](1)) match {
+        case Some((rate, _, samples)) if samples.nonEmpty =>
+          val n = samples.length
+          val power = Array.tabulate(nBins) { b =>
+            var re = 0.0
+            var im = 0.0
+            var i = 0
+            while (i < n) {
+              val theta = 2.0 * math.Pi * b * i / n
+              re += samples(i) * math.cos(theta)
+              im += samples(i) * math.sin(theta)
+              i += 1
             }
+            re * re + im * im
           }
-        }
-      }
+          var dom = 1
+          var i = 2
+          while (i < nBins) {
+            if (power(i) > power(dom)) dom = i
+            i += 1
+          }
+          AudioSpectrum(id, rate, n.toLong, dom, power)
+        case _ => AudioSpectrum(id, 0, 0L, 0, Array.empty)
+      })
+    }
   }
 
   // ------------------------------------------------------------------
@@ -688,31 +623,21 @@ object Multimodal {
     df.select(col(idCol).cast("long").as("id"), lit(modality).as("modality"),
       encode(col(textCol), "UTF-8").cast("binary").as("payload"))
 
-  /** Batched per-partition decode with LENGTH-DERIVED metadata: same
-    * batch shape as [[decodeImageMeta]], but width/height/nFrames are
+  /** Per-row decode with LENGTH-DERIVED metadata: the same decode
+    * loop as [[decodeImageMeta]], but width/height/nFrames are
     * deterministic functions of the payload byte length so an
     * external, codec-less oracle (DuckDB octet_length) can recompute
     * them — this pins the plumbing. For true decoded metadata use
     * [[decodeImageMeta]].
     */
-  def decodeStub(media: DataFrame, batchSize: Int = 64): Dataset[MediaMeta] = {
-    implicit val enc = Encoders.product[MediaMeta]
-    media.select(col("id"), col("modality"), col("payload"))
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.map { r =>
-            val id = r.getLong(0)
-            val modality = r.getString(1)
-            val bytes = r.getAs[Array[Byte]](2)
-            val n = bytes.length.toLong
-            MediaMeta(id, modality, n,
-              width = 16 + (n % 1920L).toInt,
-              height = 16 + (n * 7L % 1080L).toInt,
-              nFrames = 1 + (n % 32L).toInt)
-          }
-        }
-      }
-  }
+  def decodeStub(media: DataFrame): Dataset[MediaMeta] =
+    perRow(media, MediaCols: _*) { r =>
+      val n = r.getAs[Array[Byte]](2).length.toLong
+      Some(MediaMeta(r.getLong(0), r.getString(1), n,
+        width = 16 + (n % 1920L).toInt,
+        height = 16 + (n * 7L % 1080L).toInt,
+        nFrames = 1 + (n % 32L).toInt))
+    }
 
   // ------------------------------------------------------------------
   // Perceptual image hashing (dHash) — the image counterpart of
@@ -754,32 +679,15 @@ object Multimodal {
   /** Per-row dHash row: null-marker is `decoded = false`. */
   final case class DHashRow(id: Long, decoded: Boolean, dhash: Long)
 
-  /** REAL batched dHash over an (id, modality, payload) media table:
-    * per-partition, per-batch ImageIO decode (first frame for framed
-    * video / gif payloads) then [[dHash]]. Undecodable rows come back
+  /** REAL dHash over an (id, modality, payload) media table: ImageIO
+    * decode of frame 0, then [[dHash]]. Undecodable rows come back
     * `decoded = false` (audit channel), mirroring [[decodeImageMeta]].
     */
-  def dHashes(media: Dataset[_], batchSize: Int = 64): Dataset[DHashRow] = {
-    implicit val enc = Encoders.product[DHashRow]
-    media.toDF().select(col("id"), col("modality"), col("payload"))
-      .mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          batch.map { r =>
-            val id = r.getLong(0)
-            val first = r.getString(1) match {
-              case "video" => unpackFrames(r.getAs[Array[Byte]](2))
-                .headOption.flatMap(decodeImage)
-              case "gif" => decodeFrames(r.getAs[Array[Byte]](2)).headOption
-              case _ => decodeImage(r.getAs[Array[Byte]](2))
-            }
-            first match {
-              case Some(img) => DHashRow(id, decoded = true, dHash(img))
-              case None => DHashRow(id, decoded = false, 0L)
-            }
-          }
-        }
-      }
-  }
+  def dHashes(media: Dataset[_]): Dataset[DHashRow] =
+    perRow(media, MediaCols: _*) { r =>
+      val first = frames(r.getAs[Array[Byte]](2)).headOption.flatten
+      Some(DHashRow(r.getLong(0), decoded = first.isDefined, first.fold(0L)(dHash)))
+    }
 
   /** Deterministic patterned-pixel formula shared by the generator,
     * the specs, and the DuckDB oracles (the [[synthGray]] counterpart
@@ -799,26 +707,21 @@ object Multimodal {
     */
   def syntheticPatternImages(df: DataFrame, idCol: String, patternCol: String,
                              bumpCol: String, w: Int = DHashW + 1,
-                             h: Int = DHashH): Dataset[MediaRow] = {
-    implicit val enc = Encoders.product[MediaRow]
-    df.select(col(idCol).cast("long").as("id"), col(patternCol).cast("long").as("pat"),
-        col(bumpCol).cast("int").as("bump"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val (id, pat, bump) = (r.getLong(0), r.getLong(1), r.getInt(2))
-          val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val g = synthPatternGray(pat, x, y, bump)
-              img.setRGB(x, y, (g << 16) | (g << 8) | g)
-              x += 1
-            }
-            y += 1
-          }
-          MediaRow(id, "image", encodePng(img))
+                             h: Int = DHashH): Dataset[MediaRow] =
+    synthetic(df, idCol, "image", col(patternCol).cast("long").as("pat"),
+        col(bumpCol).cast("int").as("bump")) { (_, r) =>
+      val (pat, bump) = (r.getLong(1), r.getInt(2))
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val g = synthPatternGray(pat, x, y, bump)
+          img.setRGB(x, y, (g << 16) | (g << 8) | g)
+          x += 1
         }
+        y += 1
       }
-  }
+      encodePng(img)
+    }
 }

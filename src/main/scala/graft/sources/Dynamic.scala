@@ -873,11 +873,12 @@ object Dynamic {
   /** (relative destination, file) pairs under a completed dynamic
     * tree, by RECURSIVE LISTING — the fallback plan for trees written
     * before manifests existed; [[planTree]] (which prefers the
-    * manifest) is what the gather verbs call. Requires the post-write
-    * [[MarkerDone]] stamp — a tree from a failed or in-flight job
-    * (which has only the pre-write ownership [[Marker]]) must not
-    * read back as silently-valid partial data (same contract as
-    * [[Avro.read]]'s `_SUCCESS` requirement).
+    * manifest) is what the gather verbs call, after
+    * [[completedTree]] has found the post-write [[MarkerDone]] stamp —
+    * a tree from a failed or in-flight job (which has only the
+    * pre-write ownership [[Marker]]) must not read back as
+    * silently-valid partial data (same contract as [[Avro.read]]'s
+    * `_SUCCESS` requirement).
     *
     * SCALE ENVELOPE: the listing walks every file over the
     * FileSystem RPC and buffers one (dest, path, len) triple per file
@@ -885,31 +886,40 @@ object Dynamic {
     * pre-manifest-tree fallback, but the manifest plan reads the same
     * triples from kilobyte-scale sidecars instead.
     */
-  private def listTree(spark: SparkSession, basePath: String, ext: String)
-      : Seq[(String, String, Long)] = {
-    val base = new Path(basePath)
-    val fs = FileSystem.get(base.toUri, spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(base, MarkerDone)),
-      s"$basePath has no $MarkerDone stamp — not a COMPLETED graft dynamic tree " +
-        "(a crashed or in-flight write leaves only the ownership stamp)")
+  private def listTree(fs: FileSystem, base: Path, ext: String): Seq[(String, String, Long)] = {
     val it = fs.listFiles(base, true)
     val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     val baseUri = fs.makeQualified(base).toUri
     while (it.hasNext) {
       val st = it.next()
       val name = st.getPath.getName
-      // ".avro" must not also sweep up ".proto.avro" shards (a proto
-      // tree gathered with the wrong verb would decode to all-null
-      // payload columns instead of failing)
-      val extMatch = name.endsWith("." + ext) &&
-        (ext == "proto.avro" || !name.endsWith(".proto.avro"))
-      if (st.isFile && name.startsWith("part-") && extMatch) {
+      if (st.isFile && name.startsWith("part-") && isShard(name, ext)) {
         val rel = baseUri.relativize(st.getPath.getParent.toUri).getPath
           .stripSuffix("/")
         buf += ((rel, st.getPath.toString, st.getLen))
       }
     }
     buf.toSeq.sortBy(t => (t._1, t._2))
+  }
+
+  /** Whether file `name` is a shard of codec extension `ext`. ".avro"
+    * must not also sweep up ".proto.avro" shards: a proto tree
+    * gathered with the wrong verb would decode to all-null payload
+    * columns instead of failing.
+    */
+  private def isShard(name: String, ext: String): Boolean =
+    name.endsWith("." + ext) && (ext == "proto.avro" || !name.endsWith(".proto.avro"))
+
+  /** The qualified file system and base of a COMPLETED dynamic tree:
+    * fails unless the post-write completion stamp is there.
+    */
+  private def completedTree(spark: SparkSession, basePath: String): (FileSystem, Path) = {
+    val base = new Path(basePath)
+    val fs = FileSystem.get(base.toUri, spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(new Path(base, MarkerDone)),
+      s"$basePath has no $MarkerDone stamp — not a COMPLETED graft dynamic tree " +
+        "(a crashed or in-flight write leaves only the ownership stamp)")
+    (fs, base)
   }
 
   /** Session knob: target bytes per gather TASK (default 128 MiB, the
@@ -948,22 +958,17 @@ object Dynamic {
     */
   private def planTree(spark: SparkSession, basePath: String, ext: String)
       : Seq[(String, String, Long)] = {
-    val base = new Path(basePath)
-    val fs = FileSystem.get(base.toUri, spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(base, MarkerDone)),
-      s"$basePath has no $MarkerDone stamp — not a COMPLETED graft dynamic tree " +
-        "(a crashed or in-flight write leaves only the ownership stamp)")
+    val (fs, base) = completedTree(spark, basePath)
     val qualifiedBase = fs.makeQualified(base)
-    val fromManifest = readDynamicManifest(spark, basePath).collect().toSeq
+    val fromManifest = manifestOf(spark, fs, base).collect().toSeq
       .collect {
-        case r if r.getString(1).endsWith("." + ext) &&
-            (ext == "proto.avro" || !r.getString(1).endsWith(".proto.avro")) =>
+        case r if isShard(r.getString(1), ext) =>
           (r.getString(0),
             new Path(qualifiedBase, s"${r.getString(0)}/${r.getString(1)}").toString,
             r.getLong(3))
       }
     if (fromManifest.nonEmpty) fromManifest.sortBy(t => (t._1, t._2))
-    else listTree(spark, basePath, ext)
+    else listTree(fs, base, ext)
   }
 
   /** Greedy size-batching: consecutive files (in the plan's (dest,
@@ -1245,10 +1250,14 @@ object Dynamic {
     * the post-write completion stamp, like every gather verb.
     */
   def readDynamicManifest(spark: SparkSession, basePath: String): DataFrame = {
-    val base = new Path(basePath)
-    val fs = FileSystem.get(base.toUri, spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(base, MarkerDone)),
-      s"$basePath has no $MarkerDone stamp — not a COMPLETED graft dynamic tree")
+    val (fs, base) = completedTree(spark, basePath)
+    manifestOf(spark, fs, base)
+  }
+
+  /** [[readDynamicManifest]] of a tree whose completion stamp the
+    * caller has checked.
+    */
+  private def manifestOf(spark: SparkSession, fs: FileSystem, base: Path): DataFrame = {
     val mSchema = StructType(Seq(
       StructField("dest", StringType, nullable = false),
       StructField("file", StringType, nullable = false),
@@ -1310,11 +1319,8 @@ object Dynamic {
     * count).
     */
   def verifyDynamicTree(spark: SparkSession, basePath: String): DataFrame = {
-    val base = new Path(basePath)
-    val fs = FileSystem.get(base.toUri, spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new Path(base, MarkerDone)),
-      s"$basePath has no $MarkerDone stamp — not a COMPLETED graft dynamic tree")
-    val committed = readDynamicManifest(spark, basePath)
+    val (fs, base) = completedTree(spark, basePath)
+    val committed = manifestOf(spark, fs, base)
       .withColumnsRenamed(Map("rows" -> "manifest_rows", "bytes" -> "manifest_bytes"))
     // actual data files: every VISIBLE part-* file (any codec
     // extension); entries under hidden ('.'/'_') segments — manifest

@@ -17,6 +17,28 @@ import scala.reflect.ClassTag
   */
 package object syntax {
 
+  /** The one weight-bounded batcher behind [[GraftDatasetOps.batchedBytes]],
+    * `batchedWeighted` and `batchedWeightedByKey`: consecutive elements
+    * join a batch until the next would push its weight past
+    * `maxWeight`; an element heavier than `maxWeight` travels alone.
+    */
+  private def weightBatches[T](it: Iterator[T], maxWeight: Long, weighOf: T => Long)
+      : Iterator[Seq[T]] = new Iterator[Seq[T]] {
+    private val buf = it.buffered
+    def hasNext: Boolean = buf.hasNext
+    def next(): Seq[T] = {
+      val batch = Seq.newBuilder[T]
+      var w = 0L
+      var done = false
+      while (!done && buf.hasNext) {
+        val sz = weighOf(buf.head)
+        if (w > 0L && w + sz > maxWeight) done = true
+        else { batch += buf.next(); w += sz }
+      }
+      batch.result()
+    }
+  }
+
   /** SCollection[T] analogue. */
   implicit class GraftDatasetOps[T](private val ds: Dataset[T]) extends AnyVal {
 
@@ -81,40 +103,30 @@ package object syntax {
       * partition (no shuffle) — for batched downstream calls
       * (reference: scio BatchDoFn usage in SCollection.batch).
       */
-    def batched(n: Int)(implicit ct: ClassTag[T], e: Encoder[Seq[T]]): Dataset[Seq[T]] =
+    def batched(n: Int)(implicit ct: ClassTag[T], e: Encoder[Seq[T]]): Dataset[Seq[T]] = {
+      require(n > 0, s"batch size must be positive, got $n")
       ds.mapPartitions((it: Iterator[T]) => it.grouped(n).map(_.toSeq))(e)
+    }
 
     /** scio batchByKey: per-key batches of at most n elements (each
       * key's values chunked; one output row per chunk).
       */
     def batchedByKey[K: Encoder](n: Int)(key: T => K)(
-        implicit te: Encoder[T], out: Encoder[(K, Seq[T])]): Dataset[(K, Seq[T])] =
+        implicit te: Encoder[T], out: Encoder[(K, Seq[T])]): Dataset[(K, Seq[T])] = {
+      require(n > 0, s"batch size must be positive, got $n")
       ds.groupByKey(key).flatMapGroups((k: K, it: Iterator[T]) =>
         it.grouped(n).map(b => (k, b.toSeq)))
+    }
 
     /** scio batchByteSized: batches bounded by estimated byte weight
       * (caller supplies the estimator; a batch closes once it reaches
       * maxBytes, and a single oversized element travels alone).
       */
     def batchedBytes(maxBytes: Long)(sizeOf: T => Long)(
-        implicit ct: ClassTag[T], e: Encoder[Seq[T]]): Dataset[Seq[T]] =
-      ds.mapPartitions { (it: Iterator[T]) =>
-        new Iterator[Seq[T]] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Seq[T] = {
-            val batch = Seq.newBuilder[T]
-            var bytes = 0L
-            var done = false
-            while (!done && buf.hasNext) {
-              val sz = sizeOf(buf.head)
-              if (bytes > 0L && bytes + sz > maxBytes) done = true
-              else { batch += buf.next(); bytes += sz }
-            }
-            batch.result()
-          }
-        }
-      }(e)
+        implicit ct: ClassTag[T], e: Encoder[Seq[T]]): Dataset[Seq[T]] = {
+      require(maxBytes > 0, s"maxBytes must be positive, got $maxBytes")
+      ds.mapPartitions((it: Iterator[T]) => weightBatches(it, maxBytes, sizeOf))(e)
+    }
 
     /** scio batchByteSizedByKey/batchWeightedByKey: per-key batches
       * bounded by accumulated weight — the keyed form of
@@ -125,23 +137,8 @@ package object syntax {
     def batchedWeightedByKey[K: Encoder](maxWeight: Long)(key: T => K)(weighOf: T => Long)(
         implicit te: Encoder[T], out: Encoder[(K, Seq[T])]): Dataset[(K, Seq[T])] = {
       require(maxWeight > 0, s"maxWeight must be positive, got $maxWeight")
-      ds.groupByKey(key).flatMapGroups { (k: K, it: Iterator[T]) =>
-        new Iterator[(K, Seq[T])] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): (K, Seq[T]) = {
-            val batch = Seq.newBuilder[T]
-            var w = 0L
-            var done = false
-            while (!done && buf.hasNext) {
-              val sz = weighOf(buf.head)
-              if (w > 0L && w + sz > maxWeight) done = true
-              else { batch += buf.next(); w += sz }
-            }
-            (k, batch.result())
-          }
-        }
-      }
+      ds.groupByKey(key).flatMapGroups((k: K, it: Iterator[T]) =>
+        weightBatches(it, maxWeight, weighOf).map(b => (k, b)))
     }
 
     /** scio flatten: SCollection[Iterable[U]] → SCollection[U]. */
@@ -149,12 +146,14 @@ package object syntax {
       ds.flatMap((t: T) => ev(t))
 
     /** scio batchWeighted: batches bounded by an arbitrary per-element
-      * weight — same machinery as [[batchedBytes]] (byte size IS a
+      * weight — the same batcher as [[batchedBytes]] (byte size IS a
       * weight), exposed under the scio name.
       */
     def batchedWeighted(maxWeight: Long)(weighOf: T => Long)(
-        implicit ct: ClassTag[T], e: Encoder[Seq[T]]): Dataset[Seq[T]] =
-      batchedBytes(maxWeight)(weighOf)
+        implicit ct: ClassTag[T], e: Encoder[Seq[T]]): Dataset[Seq[T]] = {
+      require(maxWeight > 0, s"maxWeight must be positive, got $maxWeight")
+      ds.mapPartitions((it: Iterator[T]) => weightBatches(it, maxWeight, weighOf))(e)
+    }
 
     /** scio partition(p): split into disjoint frames by predicate.
       * Both sides share the one cached scan when `cache` is set.

@@ -49,6 +49,7 @@ class CoreSyntaxSpec extends SparkSpec {
     val batches = ds.batched(8).collect()
     assert(batches.map(_.size).forall(_ <= 8))
     assert(batches.flatten.sorted.toSeq == (0L until 100L))
+    intercept[IllegalArgumentException](ds.batched(0))
   }
 
   test("hashPartitions split disjointly and completely by key hash") {
@@ -74,6 +75,7 @@ class CoreSyntaxSpec extends SparkSpec {
     assert(out.filter(_._1 == "a").map(_._2.size).sorted.toSeq == Seq(4, 8, 8))
     assert(out.filter(_._1 == "b").map(_._2.size).toSeq == Seq(5))
     assert(out.flatMap(_._2).map(_._2).sorted.toSeq == (1 to 25))
+    intercept[IllegalArgumentException](ds.batchedByKey(0)(_._1))
   }
 
   test("batchedWeightedByKey bounds each key's batches by weight, loses nothing") {
@@ -92,6 +94,7 @@ class CoreSyntaxSpec extends SparkSpec {
     val batches = ds.batchedBytes(6)(_.length.toLong).collect()
     assert(batches.flatten.toSeq.sorted == Seq("aa", "bbbb", "cc", "dddddddddddd", "e").sorted)
     assert(batches.forall(b => b.map(_.length).sum <= 6 || b.size == 1))
+    intercept[IllegalArgumentException](ds.batchedBytes(0)(_.length.toLong))
   }
 
   test("partitionBy2 splits disjointly and completely") {
@@ -199,6 +202,7 @@ class CoreSyntaxSpec extends SparkSpec {
     val batches = ds.batchedWeighted(5L)(_.length.toLong).collect()
     assert(batches.flatten.sorted.toSeq == Seq("aa", "bbb", "c", "dddd", "e").sorted)
     assert(batches.forall(b => b.map(_.length).sum <= 5 || b.size == 1))
+    intercept[IllegalArgumentException](ds.batchedWeighted(0L)(_.length.toLong))
   }
 
   test("partitionByValues yields one frame per listed key over a shared plan") {

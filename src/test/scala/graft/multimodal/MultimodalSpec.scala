@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.SparkSpec
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -298,6 +299,56 @@ class MultimodalSpec extends SparkSpec {
     val single = Seq((3L, "video",
       Multimodal.packFrames(Seq(Multimodal.encodePng(a))))).toDF("id", "modality", "payload")
     assert(Multimodal.frameDiffStats(single).count() == 0L)
+  }
+
+  test("frameDiffStats: an animated GIF gives the transitions of the same frames framed") {
+    val frames = Seq(10, 20, 20, 200).map(g => Multimodal.solidImage(8, 6, g))
+    val media = Seq(
+      (1L, "video", Multimodal.packFrames(frames.map(Multimodal.encodePng))),
+      (2L, "gif", Multimodal.encodeAnimatedGif(frames))
+    ).toDF("id", "modality", "payload")
+    val out = Multimodal.frameDiffStats(media).collect()
+      .groupBy(_.id).map { case (id, ds) => id -> ds.sortBy(_.frameIdx).map(_.copy(id = 0L)).toSeq }
+    assert(out(1L).map(_.meanAbsDiff) == Seq(10.0, 0.0, 180.0))
+    assert(out(2L) == out(1L))
+  }
+
+  test("a framed container with a truncated first frame is an audit row") {
+    // a noisy frame's PNG is 256 bytes or more, so its length prefix
+    // reads 00 00 w h with w > 0: ImageIO's WBMP reader would take the
+    // truncated payload for a w×h WBMP
+    val rnd = new scala.util.Random(1)
+    val img = new java.awt.image.BufferedImage(64, 48, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 48; x <- 0 until 64) img.setRGB(x, y, rnd.nextInt())
+    val vid = Multimodal.packFrames(Seq(Multimodal.encodePng(img)))
+    val media = Seq((1L, "video", vid.dropRight(10))).toDF("id", "modality", "payload")
+    val m = Multimodal.decodeImageMeta(media).collect().head
+    assert(m.width == 0 && m.height == 0 && m.nFrames == 0)
+    assert(!Multimodal.dHashes(media).collect().head.decoded)
+  }
+
+  test("audio decoders and frameDiffStats read only id and payload") {
+    val wav = Multimodal.encodeWavPcm16(Array.fill[Short](64)(1000), 8000)
+    val audio = Seq((1L, wav)).toDF("id", "payload")
+    assert(Multimodal.decodeAudioMeta(audio).collect().head.peak == 1000)
+    assert(Multimodal.audioQuality(audio).collect().head.nSamples == 64L)
+    assert(Multimodal.audioSpectrum(audio).collect().head.domBin >= 1)
+    val vid = Multimodal.packFrames(Seq(10, 30).map(g =>
+      Multimodal.encodePng(Multimodal.solidImage(4, 4, g))))
+    val motion = Multimodal.frameDiffStats(Seq((2L, vid)).toDF("id", "payload")).collect()
+    assert(motion.map(_.meanAbsDiff).toSeq == Seq(20.0))
+  }
+
+  test("no decoder's executed plan has an exchange") {
+    val imgs = Multimodal.syntheticImages(Seq(1L, 2L).toDF("doc_id"), "doc_id")
+    val plans = Seq[Dataset[_]](
+      Multimodal.decodeImageMeta(imgs), Multimodal.sampleFrames(imgs, stride = 1),
+      Multimodal.imageFeatures(imgs), Multimodal.frameDiffStats(imgs),
+      Multimodal.dHashes(imgs), Multimodal.decodeAudioMeta(imgs),
+      Multimodal.audioQuality(imgs), Multimodal.audioSpectrum(imgs),
+      Multimodal.decodeStub(imgs.toDF()))
+      .map(_.queryExecution.executedPlan.toString)
+    plans.foreach(p => assert(!p.contains("Exchange"), p))
   }
 
   test("audioQuality: clipping/silence fractions, DC offset, peak on hand-built PCM") {
